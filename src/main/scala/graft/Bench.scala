@@ -1,5 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
+
+import graft.operators.Scope
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -122,7 +124,10 @@ object Bench {
     val results = scala.collection.immutable.ListMap(selected.toSeq.sortBy(_._1): _*)
       .map { case (name, fn) =>
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() }
+      // the noop sink runs every operator of the plan (a count() lets
+      // Catalyst prune the projections and sorts that ARE the query); the
+      // Scope releases the query's caches and checkpoints inside the timing
+      try Scope { fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
       catch {
         case e: Throwable =>
           // a query that throws must be VISIBLE in the artifact (and in the
@@ -132,17 +137,9 @@ object Bench {
             Option(e.getMessage).getOrElse("")).replaceAll("[\"\\\\\n\r\t]", " ").take(300)
       }
       val dt = (System.nanoTime() - t0) / 1e9
-      // between queries (outside the timed window): drop any cached tables a
-      // query left behind and collect the garbage it generated, so query N's
-      // number doesn't include query N-1's memory pressure — in-run totals
-      // drifted up to 3x from isolated runs before this
-      spark.sharedState.cacheManager.clearCache()
-      // cacheManager only covers DataFrame caches — the graph loops' FINAL
-      // localCheckpoint RDDs (their result's lineage root, released only
-      // after the output cache is gone) live in the RDD block store and
-      // accumulated across the sweep (one node-sized RDD per graph query)
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      // between queries (outside the timed window): collect the garbage the
+      // query generated, so query N's number doesn't include query N-1's
+      // memory pressure
       System.gc()
       val rt = Runtime.getRuntime
       jvmUsed(name) = (rt.totalMemory() - rt.freeMemory()) >> 20

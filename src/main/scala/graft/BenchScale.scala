@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.operators.Scope
 
 /** Scale-jump sweep: times an audited query set at two scale factors
   * (default sf0.1 → the 10× `scaledata/sf1` built by
@@ -500,6 +502,13 @@ object BenchScale {
     // its candidate rate is the documented contract, same rule as x154.
     "x251_incremental_linkage" -> 1.5)
 
+  /** Build `df` and drain it into the noop sink inside one Scope: the sink
+    * runs every operator of the plan (a count() lets Catalyst prune the
+    * projection or sort that IS the query), and the Scope releases the
+    * query's caches and checkpoints. */
+  private def drain(df: => DataFrame): Unit =
+    Scope { df.write.format("noop").mode("overwrite").save() }
+
   def main(args: Array[String]): Unit = {
     val smallDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val bigDir = if (args.length > 1) args(1) else "scaledata/sf1"
@@ -522,17 +531,13 @@ object BenchScale {
     // rationale) by running three representative queries on sf0.001
     val warmDir = "/root/testdata/sf0.001"
     Seq("q01_lineitem_agg", "x09_ngram_jaccard", "x96_more_like_this")
-      .foreach(n => SparkEntry.queries(n)(spark, warmDir).count())
+      .foreach(n => drain(SparkEntry.queries(n)(spark, warmDir)))
 
     def time(name: String, dir: String): Double = {
       val ts = (1 to reps).map { _ =>
         val t0 = System.nanoTime()
-        SparkEntry.queries(name)(spark, dir).count()
+        drain(SparkEntry.queries(name)(spark, dir))
         val dt = (System.nanoTime() - t0) / 1e9
-        spark.sharedState.cacheManager.clearCache()
-        // retire leaked final localCheckpoint RDDs (outside cacheManager)
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
         System.gc()
         dt
       }
@@ -572,14 +577,11 @@ object BenchScale {
         def run(dir: String, nCentroids: Int): Double = {
           val ts = (1 to reps).map { _ =>
             val t0 = System.nanoTime()
-            graft.operators.Similarity.cellBlockedPairs(
+            drain(graft.operators.Similarity.cellBlockedPairs(
               graft.queries.Tables.embeddings(spark, dir),
               "vec_id", "embedding", threshold = 0.3,
-              nCentroids = nCentroids, passes = 6).count()
+              nCentroids = nCentroids, passes = 6))
             val dt = (System.nanoTime() - t0) / 1e9
-            spark.sharedState.cacheManager.clearCache()
-            spark.sparkContext.getPersistentRDDs.values
-              .foreach(_.unpersist(blocking = false))
             System.gc()
             dt
           }

@@ -6,6 +6,8 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
+import graft.operators.Scope
+
 /** Dump `.explain("formatted")` for named declared queries — the plan
   * evidence the optimization rounds commit under plans/rNN/. Usage:
   *
@@ -13,10 +15,9 @@ import org.apache.spark.sql.execution.FormattedMode
   *
   * writes <outDir>/<query>_<suffix>.txt per query. Same session config as
   * Bench (local[$SPARK_GRAFT_CPUS], AQE on, 64 MB broadcast threshold), so
-  * the captured plan is the one the bench executes. Queries whose builder
-  * caches internally (fn returns the materialized cache) are captured
-  * through the InMemoryRelation's stored plan — the full operator tree is
-  * inside it. */
+  * the captured plan is the one the bench executes. Each query is built
+  * inside a Scope, which releases its caches and checkpoints once the plan
+  * text is captured. */
 object Plans {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: Plans <outDir> <suffix> <query> [query ...]")
@@ -48,14 +49,10 @@ object Plans {
           System.err.println(s"plans: no such query: $name")
         case Some(fn) =>
           spark.sparkContext.setJobDescription(s"plans: $name")
-          val df = fn(spark, sfDir)
-          val txt = df.queryExecution.explainString(FormattedMode)
+          val txt = Scope(fn(spark, sfDir).queryExecution.explainString(FormattedMode))
           Files.write(outDir.resolve(s"${name}_$suffix.txt"),
             txt.getBytes(StandardCharsets.UTF_8))
           println(s"plans: wrote ${name}_$suffix.txt (${txt.length} chars)")
-          spark.sharedState.cacheManager.clearCache()
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
       }
     } finally spark.stop()
     if (failed) sys.exit(1)

@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.operators.Scope
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -29,21 +30,14 @@ object Verify {
     var nFailed = 0
     SparkEntry.queries.filter { case (n, _) => selected(n) }.foreach { case (name, fn) =>
       nRun += 1
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      // the Scope releases every cache and checkpoint the query made
+      try Scope {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+      }
       catch { case e: Throwable =>
         nFailed += 1
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // Backstop for queries that cache their OUTPUT frame (x81/x87/x96/
-      // x100 …): the per-operator releaseCaches() frees internal caches,
-      // but the output cache is only consumed here — without this, 145
-      // output caches accumulate across the sweep (Bench does the same
-      // per-query clear). getPersistentRDDs additionally retires the graph
-      // loops' final localCheckpoint RDDs, which live outside cacheManager.
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -199,7 +199,6 @@ object FormatDetector {
     * Returns, per column, every candidate with its match rate over
     * non-blank values (rate 0 for empty columns). */
   def matchRates(df: DataFrame): Map[String, Map[String, Double]] = {
-    graft.functions.GraftFunctions.register(df.sparkSession) // date_fr's parser
     val cols = df.columns.toSeq
     if (cols.isEmpty) return Map.empty
     val aggs: Seq[Column] = cols.flatMap { name =>

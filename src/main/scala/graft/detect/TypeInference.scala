@@ -47,6 +47,9 @@ object TypeInference {
   }
 
   def infer(df: DataFrame): Map[String, ColumnInfo] = {
+    // the first user of smart_to_timestamp on the ingest path: castAll and
+    // FormatDetector's date_fr vote run after it on the same session
+    graft.functions.GraftFunctions.register(df.sparkSession)
     val cols = df.columns.toSeq
     if (cols.isEmpty) return Map.empty
 

@@ -89,7 +89,8 @@ object CsvIngest {
 
   /** A2: Spark selects the gzip codec by file extension only; the reference
     * detects gzip by magic bytes regardless of name (utils/file.py:27-31).
-    * Bridge: link content-gzip files under a .csv.gz name. */
+    * Bridge: copy content-gzip files to a temporary .csv.gz name, which
+    * the caller deletes once its last Spark action is done. */
   private def gzipAwarePath(path: String): String = {
     val p = java.nio.file.Paths.get(path)
     val head = {
@@ -235,57 +236,62 @@ object CsvIngest {
 
     val dialect = CsvSniffer.sniff(csvPath)
     val readablePath = gzipAwarePath(csvPath)
-    val parsed = readCsv(spark, readablePath, dialect)
-    // reference parity (analysis/csv.py:273 `if line:`): blank and CR-only
-    // lines come through the csv parser as rows whose every field is null
-    // or whitespace (python's universal-newline text read makes them empty
-    // lists, which the reference skips) — drop them. (A fully-quoted empty
-    // row like `"";""` is also dropped; the reference would keep it as a
-    // row of NULLs — acceptable divergence, it carries no information.)
-    val raw = parsed.where(
-      parsed.columns.map(c => trim(col(s"`$c`"), " \t\r\n\f") =!= "")
-        .reduce(_ || _))
+    // the temporary gzip copy lives until the last Spark action, on
+    // success and on failure alike
+    try {
+      val parsed = readCsv(spark, readablePath, dialect)
+      // reference parity (analysis/csv.py:273 `if line:`): blank and CR-only
+      // lines come through the csv parser as rows whose every field is null
+      // or whitespace (python's universal-newline text read makes them empty
+      // lists, which the reference skips) — drop them. (A fully-quoted empty
+      // row like `"";""` is also dropped; the reference would keep it as a
+      // row of NULLs — acceptable divergence, it carries no information.)
+      val raw = parsed.where(
+        parsed.columns.map(c => trim(col(s"`$c`"), " \t\r\n\f") =!= "")
+          .reduce(_ || _))
 
-    val types: Map[String, ColumnInfo] = FormatDetector.inferWithFormats(raw)
-    val typed = renameReserved(TypeInference.castAll(raw, types))
+      val types: Map[String, ColumnInfo] = FormatDetector.inferWithFormats(raw)
+      val typed = renameReserved(TypeInference.castAll(raw, types))
 
-    // one parse feeds every downstream consumer (the reference re-reads the
-    // file once per sink — analysis/csv.py:268-270; persist fixes that)
-    typed.persist()
-    val rowCount = typed.count()
+      // one parse feeds every downstream consumer (the reference re-reads the
+      // file once per sink — analysis/csv.py:268-270; persist fixes that)
+      typed.persist()
+      val rowCount = typed.count()
 
-    val tableName = md5Hex(url)
-    val outPath = s"$warehouse/$tableName"
-    onPhase(graft.model.ResourceStatus.InsertingInDb) // E7 (analysis/csv.py:354)
-    typed.write.mode(SaveMode.Overwrite).parquet(outPath)
+      val tableName = md5Hex(url)
+      val outPath = s"$warehouse/$tableName"
+      onPhase(graft.model.ResourceStatus.InsertingInDb) // E7 (analysis/csv.py:354)
+      typed.write.mode(SaveMode.Overwrite).parquet(outPath)
 
-    // C4 parquet export gate — (url, size) surfaces on the check row like
-    // csv_to_parquet's return (analysis/csv.py:305-340)
-    val export = exportDir.flatMap { dir =>
-      if (rowCount >= minLinesForParquet) {
-        onPhase(graft.model.ResourceStatus.ConvertingToParquet) // E7 (csv.py:312)
-        val p = s"$dir/$tableName.parquet"
-        typed.write.mode(SaveMode.Overwrite).parquet(p)
-        Some((p, dirSize(p)))
-      } else None
-    }
+      // C4 parquet export gate — (url, size) surfaces on the check row like
+      // csv_to_parquet's return (analysis/csv.py:305-340)
+      val export = exportDir.flatMap { dir =>
+        if (rowCount >= minLinesForParquet) {
+          onPhase(graft.model.ResourceStatus.ConvertingToParquet) // E7 (csv.py:312)
+          val p = s"$dir/$tableName.parquet"
+          typed.write.mode(SaveMode.Overwrite).parquet(p)
+          Some((p, dirSize(p)))
+        } else None
+      }
 
-    // OnePassProfiler: single scan (measured 13x the two-pass melt+window
-    // profiler at sf0.1); distinct counts are linear-counting estimates
-    val prof =
-      if (profile) OnePassProfiler.profile(typed)
-      else Map.empty[String, graft.model.ColumnProfile]
-    typed.unpersist()
+      // OnePassProfiler: single scan (measured 13x the two-pass melt+window
+      // profiler at sf0.1); distinct counts are linear-counting estimates
+      val prof =
+        if (profile) OnePassProfiler.profile(typed)
+        else Map.empty[String, graft.model.ColumnProfile]
+      typed.unpersist()
 
-    val inspection = Inspection(
-      encoding = dialect.encoding,
-      separator = dialect.separator,
-      headerRowIdx = dialect.headerRowIdx,
-      header = raw.columns.toSeq,
-      totalLines = rowCount,
-      columns = types,
-      profile = prof)
+      val inspection = Inspection(
+        encoding = dialect.encoding,
+        separator = dialect.separator,
+        headerRowIdx = dialect.headerRowIdx,
+        header = raw.columns.toSeq,
+        totalLines = rowCount,
+        columns = types,
+        profile = prof)
 
-    IngestResult(tableName, inspection, rowCount, outPath, export)
+      IngestResult(tableName, inspection, rowCount, outPath, export)
+    } finally if (readablePath != csvPath)
+      java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(readablePath))
   }
 }

@@ -31,17 +31,6 @@ import org.apache.spark.sql.functions._
   * core-subgraph-sized, not corpus-sized). */
 object Clustering {
 
-  private val caches = new CacheRegistry
-  private def tracked(df: DataFrame): DataFrame = caches.tracked(df)
-
-  /** Unpersist this thread's grid/neighbor caches (Dedup.releaseCaches
-    * contract — call after materializing the result; the components
-    * machinery additionally pins Dedup's and Graph's registries,
-    * released the same way). */
-  def releaseCaches(): Unit = {
-    caches.releaseAll(); Dedup.releaseCaches(); Graph.releaseCaches()
-  }
-
   /** DBSCAN over (idCol, xCol, yCol) points: returns
     * (id, cluster, is_core, n_neighbors) per input point — cluster is the
     * smallest member core id, −1 for noise; n_neighbors counts the
@@ -56,12 +45,11 @@ object Clustering {
     require(eps > 0.0, "gridDbscan: eps must be positive")
     require(minPts >= 1 && minPts <= 1000000, "gridDbscan: minPts in [1, 1e6]")
 
-    val pts = tracked(points
+    val pts = Scope.persist(points
       .select(col(idCol).cast("long").as("id"),
         col(xCol).cast("double").as("x"), col(yCol).cast("double").as("y"))
       .withColumn("cx", floor(col("x") / eps).cast("long"))
-      .withColumn("cy", floor(col("y") / eps).cast("long"))
-      .persist())
+      .withColumn("cy", floor(col("y") / eps).cast("long")))
 
     // directed neighbor pairs (ia → ib, ia ≠ ib, dist² ≤ eps²): probes
     // explode to the 3×3 block, candidates equi-join on the cell key
@@ -71,20 +59,18 @@ object Clustering {
         explode(typedlit(offsets)).as("o"), col("cx"), col("cy"))
       .select(col("ia"), col("xa"), col("ya"),
         (col("cx") + col("o._1")).as("ncx"), (col("cy") + col("o._2")).as("ncy"))
-    val nb = tracked(probe
+    val nb = Scope.persist(probe
       .join(pts.select(col("id").as("ib"), col("x").as("xb"), col("y").as("yb"),
         col("cx").as("ncx"), col("cy").as("ncy")), Seq("ncx", "ncy"))
       .where(col("ia") =!= col("ib"))
       .where(((col("xa") - col("xb")) * (col("xa") - col("xb")) +
         (col("ya") - col("yb")) * (col("ya") - col("yb"))) <= lit(eps) * lit(eps))
-      .select("ia", "ib")
-      .persist())
+      .select("ia", "ib"))
 
     val counts = nb.groupBy("ia").agg((count(lit(1)) + lit(1L)).as("n"))
-    val withN = tracked(pts.select("id")
+    val withN = Scope.persist(pts.select("id")
       .join(counts.withColumnRenamed("ia", "id"), Seq("id"), "left")
-      .select(col("id"), coalesce(col("n"), lit(1L)).as("n_neighbors"))
-      .persist())
+      .select(col("id"), coalesce(col("n"), lit(1L)).as("n_neighbors")))
     val core = withN.where(col("n_neighbors") >= minPts).select("id")
 
     // components over the core-core subgraph; self-loops keep isolated
@@ -100,11 +86,10 @@ object Clustering {
     // path; genuinely large sets take the O(log diameter) pointer-jump
     // rounds instead of min-label's O(diameter) — the geometric-chain
     // worst case that made the plain propagation the x159 bench heavy.
-    val comp = tracked(Dedup.duplicateClusters(
+    val comp = Scope.persist(Dedup.duplicateClusters(
       coreCore.unionAll(core.select(col("id").as("src"), col("id").as("dst"))),
       aCol = "src", bCol = "dst")
-      .withColumnsRenamed(Map("id" -> "node", "cluster" -> "comp"))
-      .persist())
+      .withColumnsRenamed(Map("id" -> "node", "cluster" -> "comp")))
 
     val coreAssign = comp.select(col("node").as("id"), col("comp").as("cluster"),
       lit(true).as("is_core"))
@@ -179,7 +164,7 @@ object Clustering {
     * all nCells distance numerators are then PLAN-LITERAL fold
     * expressions on a single cached scan (the x183/x173 discipline —
     * nothing shuffles after the stats agg except the |cells|-row report
-    * aggregation). Caller epilogue: materialize, then releaseCaches(). */
+    * aggregation). Consume the result inside a Scope. */
   /** External cluster validation: adjusted Rand index (Hubert & Arabie
     * 1985) + normalized mutual information (Strehl & Ghosh 2002, sqrt
     * normalization) between a GIVEN labeling and the deterministic IVF
@@ -200,8 +185,7 @@ object Clustering {
     * Scale shape: assignment is a pure projection through plan-literal
     * pivots (the pivotMatrix precedent); ONE corpus aggregation to the
     * (labels × cells)-bounded contingency; margins, pair sums and folds
-    * all run on that cached frame. Caller epilogue: materialize, then
-    * releaseCaches(). */
+    * all run on that cached frame. Consume the result inside a Scope. */
   def clusterAgreement(
       emb: DataFrame,
       idCol: String,
@@ -215,14 +199,13 @@ object Clustering {
     graft.functions.GraftFunctions.register(spark)
     val pivots = Similarity.pivotMatrix(emb, idCol, vecCol, nCells, seed)
     val dec = "decimal(38,0)"
-    val cells = tracked(emb
+    val cells = Scope.persist(emb
       .select(col(labelCol).cast("long").as("l"), col(vecCol).as("__v"))
       .where(col("l").isNotNull)
       .withColumn("c",
         call_function("graft_nearest_centroid", col("__v"),
           typedlit(pivots.map(_.toSeq).toSeq)).cast("long"))
-      .groupBy("l", "c").agg(count(lit(1)).as("nij"))
-      .persist())
+      .groupBy("l", "c").agg(count(lit(1)).as("nij")))
     val rowM = cells.groupBy("l").agg(sum("nij").as("ai"))
     val colM = cells.groupBy("c").agg(sum("nij").as("bj"))
     val tot = cells.agg(
@@ -300,7 +283,7 @@ object Clustering {
     graft.functions.GraftFunctions.register(spark)
     val pivots = Similarity.pivotMatrix(emb, idCol, vecCol, nCells, seed)
     val dec = "decimal(38,0)"
-    val quant = tracked(emb
+    val quant = Scope.persist(emb
       .select(col(idCol).as("id"), col(vecCol).as("__v"))
       .withColumn("__scale",
         expr("array_max(transform(__v, x -> abs(CAST(x AS DOUBLE)))) / 127.0D"))
@@ -310,8 +293,7 @@ object Clustering {
       .withColumn("cell",
         call_function("graft_nearest_centroid", col("__v"),
           org.apache.spark.sql.functions.typedlit(pivots.map(_.toSeq).toSeq)))
-      .select(col("id"), col("cell"), col("q"))
-      .persist())
+      .select(col("id"), col("cell"), col("q")))
     // per-cell integer centroid stats: ONE (cell, dim) aggregation →
     // nCells × dim longs on the driver (metadata-sized)
     val statRows = quant

@@ -173,8 +173,7 @@ object DataQuality {
     * the global rank is the two-phase range-exchange rank
     * (Sharding.rankByColumns — per-partition windows + metadata-sized
     * driver offsets, never a single-partition sort), and the maxima are
-    * one aggregation. Caller epilogue: materialize, then
-    * Sharding.releaseShardCaches(). */
+    * one aggregation. Consume the result inside a Scope. */
   def drawUniformityAudit(
       df: DataFrame,
       keyCol: Column,

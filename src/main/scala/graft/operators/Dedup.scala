@@ -28,20 +28,10 @@ object Dedup {
   private def shr(x: Column, n: Column): Column = call_function("shiftright", x, n)
 
   // Intermediate sketch tables (shingle/gram hash sets, fingerprints) are
-  // persisted because the results are lazy — the caller materializes them
-  // after this function returns. releaseCaches() is the matching hook: call
-  // it once the result is materialized so cached sketch tables don't occupy
-  // executor memory for the rest of the job (at 100 TB an unreleased shingle
-  // cache is an OOM, not a nuisance). Thread-local (see CacheRegistry):
-  // build and release on the same thread; concurrent callers are isolated.
-  private val caches = new CacheRegistry
-
-  private def tracked(df: DataFrame): DataFrame = caches.tracked(df)
-
-  /** Unpersist every sketch table cached by THIS THREAD's dedup calls since
-    * its last release. Call once the result is materialized, on the thread
-    * that built it. Other threads' in-flight dedup queries are unaffected. */
-  def releaseCaches(): Unit = caches.releaseAll()
+  // persisted through Scope because the results are lazy — the caller
+  // materializes them after this function returns, inside its Scope, which
+  // then frees them (at 100 TB an unreleased shingle cache is an OOM, not a
+  // nuisance).
 
   /** Exact duplicate groups by content digest. One shuffle; digest-first so
     * wide text never travels — only (digest, id). The ids sample is bounded
@@ -119,21 +109,19 @@ object Dedup {
     // materialize the sorted shingle-hash sets once — the persist is a hard
     // boundary so banding and verification both read cached longs; shingle
     // strings never materialize at all (native graft_shingle_hashes kernel)
-    val hashed = tracked(df
+    val hashed = Scope.persist(df
       .select(col(idCol).as("id"),
         call_function("graft_shingle_hashes", col(textCol), lit(shingleSize)).as("bh"))
-      .where(size(col("bh")) > 0)
-      .persist())
+      .where(size(col("bh")) > 0))
 
     // native banding kernel: signature minima + per-band mixing in one
     // static call (GraftMinhashBands); only (band, band_hash, id) travel
     // into the bucket join — shingles stay behind
-    val banded = tracked(hashed.select(
+    val banded = Scope.persist(hashed.select(
       col("id"),
       posexplode(call_function("graft_minhash_bands",
         col("bh"), lit(bands), lit(rowsPerBand))))
-      .withColumnsRenamed(Map("pos" -> "band", "col" -> "band_hash"))
-      .persist())
+      .withColumnsRenamed(Map("pos" -> "band", "col" -> "band_hash")))
 
     val a = banded.select(col("band"), col("band_hash"), col("id").as("id_a"))
     val b = banded.select(col("band"), col("band_hash"), col("id").as("id_b"))
@@ -179,11 +167,10 @@ object Dedup {
       threshold: Double = 0.8,
       broadcastRight: Boolean = true): DataFrame = {
 
-    def hashedSide(df: DataFrame): DataFrame = tracked(df
+    def hashedSide(df: DataFrame): DataFrame = Scope.persist(df
       .select(col(idCol).as("id"),
         call_function("graft_shingle_hashes", col(textCol), lit(shingleSize)).as("bh"))
-      .where(size(col("bh")) > 0)
-      .persist())
+      .where(size(col("bh")) > 0))
 
     def bandedSide(hashed: DataFrame): DataFrame = hashed.select(
       col("id"),
@@ -273,8 +260,8 @@ object Dedup {
       threshold: Double = 0.8,
       broadcastBatch: Boolean = true): DataFrame = {
     val bi = buildMinhashIndex(batch, textCol, idCol, shingleSize, bands, rowsPerBand)
-    val batchSets = tracked(bi.sets.persist())
-    val batchBands = tracked(bi.bands.persist())
+    val batchSets = Scope.persist(bi.sets)
+    val batchBands = Scope.persist(bi.bands)
 
     def verify(cands: DataFrame, rightSets: DataFrame, vs: String): DataFrame =
       cands
@@ -341,8 +328,8 @@ object Dedup {
     val segBits = 64 / segments
     // persist: the fingerprint must not be recomputed on each side of the
     // self-join below
-    val withFp = tracked(
-      df.select(col(idCol).as("id"), simhash64(col(textCol)).as("fp")).persist())
+    val withFp = Scope.persist(
+      df.select(col(idCol).as("id"), simhash64(col(textCol)).as("fp")))
 
     val segmented = withFp.select(
       col("id"), col("fp"),
@@ -391,22 +378,20 @@ object Dedup {
     // native path end-to-end: graft_ngram_hashes emits the SORTED DISTINCT
     // gram-hash set straight from the string (measured: materializing gram
     // string arrays cost 37s/5k docs in interpreted transform+distinct)
-    val gramsDf = tracked(df.select(
+    val gramsDf = Scope.persist(df.select(
       col(idCol).as("id"),
       call_function("graft_ngram_hashes", norm, lit(n)).as("bh"))
-      .where(size(col("bh")) > 0)
-      .persist())
+      .where(size(col("bh")) > 0))
 
     // persisted like minhashNearDuplicates' banded frame: the bucket
     // self-join scans it from BOTH legs, and without the persist each leg
     // re-ran the banding kernel (bands×rowsPerBand hashes per doc) over
     // the cached gram sets — one kernel pass, two cache scans (guide §2.4)
-    val banded = tracked(gramsDf.select(
+    val banded = Scope.persist(gramsDf.select(
       col("id"), size(col("bh")).as("sz"),
       posexplode(call_function("graft_minhash_bands",
         col("bh"), lit(bands), lit(rowsPerBand))))
-      .withColumnsRenamed(Map("pos" -> "band", "col" -> "band_hash"))
-      .persist())
+      .withColumnsRenamed(Map("pos" -> "band", "col" -> "band_hash")))
 
     val a = banded.select(col("band"), col("band_hash"), col("id").as("id_a"), col("sz").as("sz_a"))
     val b = banded.select(col("band"), col("band_hash"), col("id").as("id_b"), col("sz").as("sz_b"))
@@ -483,9 +468,9 @@ object Dedup {
       if (head.length <= localEdgeThreshold)
         return localClusters(pairs.sparkSession, head)
     }
-    val sym = tracked(edges
+    val sym = Scope.persist(edges
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().persist())
+      .distinct())
 
     // Iterative-DataFrame lineage management: `labels` appears three times
     // in each round's plan (self rows, neighbor join, jump join), so the
@@ -493,13 +478,11 @@ object Dedup {
     // the driver around round 7. createDataFrame(df.rdd, schema) collapses
     // each round to a constant-size LogicalRDD while the underlying RDD
     // DAG shares nodes by reference (no blowup), stays recomputable, and
-    // the plain persist()s stay releasable — unlike localCheckpoint, whose
-    // blocks neither unpersist() nor releaseCaches() can free.
+    // the plain persists stay releasable round by round.
     val spark = pairs.sparkSession
-    var roundCache = sym.select(col("src").as("id")).distinct()
+    var roundCache = Scope.persist(sym.select(col("src").as("id")).distinct()
       .withColumn("label", col("id"))
-      .withColumn("old", col("id"))
-      .persist()
+      .withColumn("old", col("id")))
     var iter = 0
     var converged = false
     while (iter < maxIter && !converged) {
@@ -515,27 +498,24 @@ object Dedup {
       // pointer jump: every label value is itself a vertex id present in
       // `labels`, and prevLabel(x) <= x, so the left join + coalesce only
       // ever lowers the label
-      val next = neighborMin
+      val next = Scope.persist(neighborMin
         .join(labels.select(col("id").as("m1"), col("label").as("jump")), Seq("m1"), "left")
-        .select(col("id"), coalesce(col("jump"), col("m1")).as("label"), col("old"))
-        .persist()
+        .select(col("id"), coalesce(col("jump"), col("m1")).as("label"), col("old")))
       // ONE action per round: this count materializes the round AND reads
       // the convergence signal — the old label rides the same aggregation
       // as the new one, so no separate join+isEmpty job
       val nChanged = next.where(col("label") =!= col("old")).count()
       converged = nChanged == 0L
-      roundCache.unpersist(blocking = false)
+      Scope.release(roundCache)
       roundCache = next
       iter += 1
     }
-    if (!converged) {
-      roundCache.unpersist(blocking = false)
+    if (!converged)
       throw new IllegalStateException(
         s"duplicateClusters did not converge after $maxIter rounds; " +
           "returning partially-propagated labels would split real duplicate " +
           "clusters. Raise maxIter or inspect the pair graph.")
-    }
-    tracked(roundCache).select(col("id"), col("label").as("cluster"))
+    roundCache.select(col("id"), col("label").as("cluster"))
   }
 
   /** Driver-side union-find with path compression for the small-pair-set
@@ -690,7 +670,7 @@ object Dedup {
     // persisted: the pair self-join scans `kept` from BOTH legs, and
     // without the persist each leg re-ran the winnow kernel AND the
     // df semi-join (guide §2.4) — 16-byte rows, the cheap-cache side
-    val kept = tracked(fps.join(keep, Seq("fp"), "left_semi").persist())
+    val kept = Scope.persist(fps.join(keep, Seq("fp"), "left_semi"))
     val a = kept.select(col("fp"), col("id").as("id_a"))
     val b = kept.select(col("fp"), col("id").as("id_b"))
     a.join(b, Seq("fp"))
@@ -736,11 +716,10 @@ object Dedup {
     // 8-byte hashes works as well as strings -- and the postings join,
     // window and verify then move longs, never shingle text (a first
     // formulation shuffled string shingle arrays: 16.6 s at sf0.1).
-    val hashed = tracked(df
+    val hashed = Scope.persist(df
       .select(col(idCol).as("id"),
         call_function("graft_shingle_hashes", col(textCol), lit(shingleSize)).as("bh"))
-      .where(size(col("bh")) > 0)
-      .persist())
+      .where(size(col("bh")) > 0))
     val toks = hashed.select(col("id"), size(col("bh")).as("sz"),
       explode(col("bh")).as("tok"))
     val dfreq = toks.groupBy("tok").agg(count(lit(1)).as("__df"))
@@ -751,11 +730,10 @@ object Dedup {
     // per-doc prefix window (guide §2.4) — 24-byte rows, ~(1−t)·|T|+1 per
     // doc, the cheap-cache side
     val w = Window.partitionBy("id").orderBy(col("__df"), col("tok"))
-    val prefix = tracked(toks.join(dfreq, Seq("tok"))
+    val prefix = Scope.persist(toks.join(dfreq, Seq("tok"))
       .withColumn("__r", row_number().over(w))
       .where(col("__r") <= col("sz") - ceil(lit(threshold) * col("sz")) + 1)
-      .select(col("tok"), col("id"), col("sz"))
-      .persist())
+      .select(col("tok"), col("id"), col("sz")))
 
     val a = prefix.select(col("tok"), col("id").as("id_a"), col("sz").as("sz_a"))
     val b = prefix.select(col("tok"), col("id").as("id_b"), col("sz").as("sz_b"))
@@ -815,11 +793,10 @@ object Dedup {
     import org.apache.spark.sql.expressions.Window
     graft.functions.GraftFunctions.register(df.sparkSession)
 
-    val hashed = tracked(df
+    val hashed = Scope.persist(df
       .select(col(idCol).as("id"),
         call_function("graft_shingle_hashes", col(textCol), lit(shingleSize)).as("bh"))
-      .where(size(col("bh")) > 0)
-      .persist())
+      .where(size(col("bh")) > 0))
     val toks = hashed.select(col("id"), size(col("bh")).as("sz"),
       explode(col("bh")).as("tok"))
     val dfreq = toks.groupBy("tok").agg(count(lit(1)).as("__df"))

@@ -17,12 +17,6 @@ import org.apache.spark.sql.functions._
   * — x105's oracle recomputes the same counts and ratio algebra in SQL. */
 object Evaluation {
 
-  private val caches = new CacheRegistry
-
-  /** Unpersist frames pinned by this thread's last agreementReport call.
-    * Call once the result is materialized. */
-  def releaseCaches(): Unit = caches.releaseAll()
-
   /** (threshold, tp, fp, fn, tn, precision, recall, f1) per threshold.
     * A null score matches neither `>= t` nor `< t` and lands in no count
     * (mirrors SQL three-valued logic). Precision/recall/F1 define 0/0 as
@@ -244,13 +238,11 @@ object Evaluation {
   def agreementReport(df: DataFrame, a: Column, b: Column): DataFrame = {
     val dec = "decimal(38,0)"
     // the classes²-row contingency feeds five downstream aggregates —
-    // cache it so the corpus is scanned exactly once (caller epilogue:
-    // materialize, then Evaluation.releaseCaches())
-    val cells = caches.tracked(df
+    // cache it so the corpus is scanned exactly once (released by the caller's Scope)
+    val cells = Scope.persist(df
       .where(a.isNotNull && b.isNotNull)
       .groupBy(a.cast("string").as("ra"), b.cast("string").as("rb"))
-      .agg(count(lit(1)).cast(dec).as("c"))
-      .persist())
+      .agg(count(lit(1)).cast(dec).as("c")))
     val classes = cells.select(col("ra").as("k"))
       .unionAll(cells.select(col("rb").as("k")))
       .agg(countDistinct(col("k")).as("n_classes"))
@@ -373,7 +365,7 @@ object Evaluation {
         (for (i <- names.indices; j <- (i + 1) until names.size)
           yield sum(col(names(i)).cast(dec) * col(names(j)))
             .as(s"x_${names(i)}__${names(j)}"))
-    val wide = caches.tracked(base.agg(aggs.head, aggs.tail: _*).persist())
+    val wide = Scope.persist(base.agg(aggs.head, aggs.tail: _*))
     val pairs = for (i <- names.indices; j <- (i + 1) until names.size) yield {
       val (a, b) = (names(i), names(j))
       val nD = col("n").cast("double")
@@ -494,8 +486,7 @@ object Evaluation {
     * single-partition global window); the rank sums then aggregate
     * directly from the tie frame (Σ rows r₂ = Σ groups cnt·r₂), so the
     * corpus is touched exactly once and everything after is
-    * magnitude-granular. One output row. Caller epilogue: materialize,
-    * then releaseCaches(). */
+    * magnitude-granular. One output row. Consume the result inside a Scope. */
   def wilcoxonSignedRank(
       df: DataFrame,
       aCol: Column,
@@ -511,10 +502,9 @@ object Evaluation {
       .agg(count(lit(1)).as("t"), sum(when(col("pos"), 1L).otherwise(0L)).as("tp"))
     // two-phase prefix sum of t over ascending |d|: range-partition,
     // per-partition running window, partition offsets broadcast back
-    val parted = caches.tracked(groups
+    val parted = Scope.persist(groups
       .repartitionByRange(col("ad"))
-      .withColumn("__pid", spark_partition_id())
-      .persist())
+      .withColumn("__pid", spark_partition_id()))
     val partSums = parted.groupBy("__pid").agg(sum("t").as("__s"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     val offsets: Map[Int, Long] = {
@@ -561,10 +551,9 @@ object Evaluation {
   private def midrank2(rows: DataFrame, vc: String): DataFrame = {
     val W = org.apache.spark.sql.expressions.Window
     val groups = rows.groupBy(vc).agg(count(lit(1)).as("t"))
-    val parted = caches.tracked(groups
+    val parted = Scope.persist(groups
       .repartitionByRange(col(vc))
-      .withColumn("__pid", spark_partition_id())
-      .persist())
+      .withColumn("__pid", spark_partition_id()))
     val partSums = parted.groupBy("__pid").agg(sum("t").as("__s"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     val offsets: Map[Int, Long] = {
@@ -598,17 +587,16 @@ object Evaluation {
     * inside decimal(38) to ~1e12 rows). Only the closing Pearson-on-ranks
     * ratio touches fp, from identically-converted decimal components —
     * x167's oracle replays the identical rank algebra in HUGEINTs.
-    * Caller epilogue: materialize, then releaseCaches(). */
+    * Consume the result inside a Scope. */
   def spearmanRho(
       df: DataFrame,
       xCol: Column,
       yCol: Column,
       roundTo: Int = 4): DataFrame = {
     val dec = "decimal(38,0)"
-    val rows = caches.tracked(df
+    val rows = Scope.persist(df
       .select(xCol.cast("long").as("x"), yCol.cast("long").as("y"))
-      .where(col("x").isNotNull && col("y").isNotNull)
-      .persist())
+      .where(col("x").isNotNull && col("y").isNotNull))
     val ranked = rows
       .join(midrank2(rows, "x"), "x")
       .join(midrank2(rows, "y"), "y")
@@ -645,19 +633,17 @@ object Evaluation {
     * the strict x-order). Concordant/discordant/tie counts are exact
     * decimals; only the closing tau-b ratio touches fp, from
     * identically-converted components — x168's oracle replays the same
-    * cell algebra in HUGEINTs. Caller epilogue: materialize, then
-    * releaseCaches(). */
+    * cell algebra in HUGEINTs. Consume the result inside a Scope. */
   def kendallTauB(
       df: DataFrame,
       xCol: Column,
       yCol: Column,
       roundTo: Int = 4): DataFrame = {
     val dec = "decimal(38,0)"
-    val cells = caches.tracked(df
+    val cells = Scope.persist(df
       .select(xCol.cast("long").as("x"), yCol.cast("long").as("y"))
       .where(col("x").isNotNull && col("y").isNotNull)
-      .groupBy("x", "y").agg(count(lit(1)).as("c"))
-      .persist())
+      .groupBy("x", "y").agg(count(lit(1)).as("c")))
     val a = cells.select(col("x").as("ax"), col("y").as("ay"), col("c").as("ca"))
     val b = cells.select(col("x").as("bx"), col("y").as("by"), col("c").as("cb"))
     // strict x-order: every x-distinct unordered pair appears exactly once
@@ -702,8 +688,7 @@ object Evaluation {
     * range exchange (per-partition windows + broadcast offsets — the
     * totals n₁/n₂ fall out of the same offset collection for free); the
     * max is one more aggregation on the distinct-value frame. x171's
-    * oracle replays the identical integer ECDF algebra. Caller epilogue:
-    * materialize, then releaseCaches(). */
+    * oracle replays the identical integer ECDF algebra. Consume the result inside a Scope. */
   def ksTest(
       df: DataFrame,
       vCol: Column,
@@ -717,10 +702,9 @@ object Evaluation {
       .groupBy("v")
       .agg(sum(when(col("a"), 1L).otherwise(0L)).as("c1"),
         sum(when(col("a"), 0L).otherwise(1L)).as("c2"))
-    val parted = caches.tracked(groups
+    val parted = Scope.persist(groups
       .repartitionByRange(col("v"))
-      .withColumn("__pid", spark_partition_id())
-      .persist())
+      .withColumn("__pid", spark_partition_id()))
     val partSums = parted.groupBy("__pid")
       .agg(sum("c1").as("s1"), sum("c2").as("s2"))
       .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
@@ -775,8 +759,7 @@ object Evaluation {
     * AND the cross-partition next-value handoff (each partition's min
     * value is already in the driver's offset collection; the last row of
     * partition p reads partition p+1's min as its lead). x176's oracle
-    * replays the identical integer algebra. Caller epilogue: materialize,
-    * then releaseCaches(). */
+    * replays the identical integer algebra. Consume the result inside a Scope. */
   def wasserstein1(
       df: DataFrame,
       vCol: Column,
@@ -789,10 +772,9 @@ object Evaluation {
       .groupBy("v")
       .agg(sum(when(col("a"), 1L).otherwise(0L)).as("c1"),
         sum(when(col("a"), 0L).otherwise(1L)).as("c2"))
-    val parted = caches.tracked(groups
+    val parted = Scope.persist(groups
       .repartitionByRange(col("v"))
-      .withColumn("__pid", spark_partition_id())
-      .persist())
+      .withColumn("__pid", spark_partition_id()))
     val partStats = parted.groupBy("__pid")
       .agg(sum("c1").as("s1"), sum("c2").as("s2"), min("v").as("mv"))
       .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
@@ -892,18 +874,16 @@ object Evaluation {
     * frame joined back by key; the χ² sum runs as an ORDER-PINNED fold
     * over the one collected (x, y)-sorted cell array (bounded by
     * contract), so the fp sum is partition-order-free and the oracle
-    * replays the identical fold via list_reduce. Caller epilogue:
-    * materialize, then releaseCaches(). */
+    * replays the identical fold via list_reduce. Consume the result inside a Scope. */
   def chiSquareIndependence(
       df: DataFrame,
       xCol: Column,
       yCol: Column,
       roundTo: Int = 4): DataFrame = {
-    val cells = caches.tracked(df
+    val cells = Scope.persist(df
       .select(xCol.cast("string").as("x"), yCol.cast("string").as("y"))
       .where(col("x").isNotNull && col("y").isNotNull)
-      .groupBy("x", "y").agg(count(lit(1)).as("obs"))
-      .persist())
+      .groupBy("x", "y").agg(count(lit(1)).as("obs")))
     val rows = cells.groupBy("x").agg(sum("obs").as("rs"))
     val cols = cells.groupBy("y").agg(sum("obs").as("cs"))
     val shape = cells.agg(
@@ -966,11 +946,10 @@ object Evaluation {
         }: _*)).as("fv"))
       .select(col("fv.feature").as("feature"), col("fv.v").as("v"), col("yy"))
       .where(col("yy").isNotNull && col("v").isNotNull)
-    val cells = caches.tracked(rows
+    val cells = Scope.persist(rows
       .groupBy("feature", "v")
       .agg(count(lit(1)).as("nv"),
-        sum(when(col("yy"), 1L).otherwise(0L)).as("pv"))
-      .persist())
+        sum(when(col("yy"), 1L).otherwise(0L)).as("pv")))
     // per feature: n, positives (the parent split is per feature — each
     // feature may drop a different null set)
     val parent = cells.groupBy("feature")
@@ -1006,7 +985,7 @@ object Evaluation {
     * replays bit-for-bit. H(label) is the fixed two-term expression from
     * the same frame. Output: (feature, n, mi_nats, u_label) ordered by
     * mi DESC, NULL u when the label is constant under that feature's
-    * null-drop. Caller epilogue: materialize, then releaseCaches().
+    * null-drop. Consume the result inside a Scope.
     *
     * Scale shape: ONE scan fans every feature out through a single
     * explode (featureAuc's shape); (feature, v, label) counts collapse
@@ -1025,10 +1004,9 @@ object Evaluation {
         }: _*)).as("fv"))
       .select(col("fv.feature").as("feature"), col("fv.v").as("v"), col("yy"))
       .where(col("yy").isNotNull && col("v").isNotNull)
-    val cells = caches.tracked(rows
+    val cells = Scope.persist(rows
       .groupBy("feature", "v", "yy")
-      .agg(count(lit(1)).as("c"))
-      .persist())
+      .agg(count(lit(1)).as("c")))
     val nv = cells.groupBy("feature", "v").agg(sum("c").as("nv"))
     val nl = cells.groupBy("feature", "yy").agg(sum("c").as("nl"))
     val tot = cells.groupBy("feature")
@@ -1376,9 +1354,9 @@ object Evaluation {
       roundTo: Int = 4): DataFrame =
     // the bounded (value × group) cell frame feeds both the rank frame
     // and the per-group join — cache it so the corpus is scanned exactly
-    // once (caller epilogue: materialize, then releaseCaches())
+    // once (released by the caller's Scope)
     finishKruskalWallis(
-      caches.tracked(valueGroupCells(df, value, group).persist()), roundTo)
+      Scope.persist(valueGroupCells(df, value, group)), roundTo)
 
   /** The STATEFUL half of the rank tests: per (value, group) cell count —
     * one commutative long per cell, exactly the aggregation state
@@ -1877,18 +1855,16 @@ object Evaluation {
     *
     * Scale shape: ONE corpus aggregation to the quantized bin state
     * (the [[brierBinStats]] kernel); every join after runs on the
-    * cached ≤ nBins+2-row frame. Caller epilogue: materialize, then
-    * releaseCaches(). */
+    * cached ≤ nBins+2-row frame. Consume the result inside a Scope. */
   def pavCalibrate(
       df: DataFrame,
       score: Column,
       label: Column,
       nBins: Int = 10): DataFrame = {
     val dec = "decimal(38,0)"
-    val cells = caches.tracked(
+    val cells = Scope.persist(
       brierBinStats(df, score, label, nBins)
-        .select(col("bin"), col("n"), col("n_pos"))
-        .persist())
+        .select(col("bin"), col("n"), col("n_pos")))
     pavFit(cells)
       .select(col("bin"),
         // lo is the bin's real left edge — the −1/nBins CLAMP bins are open
@@ -1948,15 +1924,15 @@ object Evaluation {
     * Σ(f − 10⁶y)² = n·f² − 2·f·10⁶·pos + 10¹²·pos per bin, all from the
     * SAME quantized bin state. Scale shape: ONE corpus aggregation; the
     * fit joins and both closes run on the ≤ nBins+2-row cached frame.
-    * Caller epilogue: materialize, then releaseCaches(). */
+    * Consume the result inside a Scope. */
   def recalibrationLift(
       df: DataFrame,
       score: Column,
       label: Column,
       nBins: Int = 10): DataFrame = {
     val dec = "decimal(38,0)"
-    val stats = caches.tracked(
-      brierBinStats(df, score, label, nBins).persist())
+    val stats = Scope.persist(
+      brierBinStats(df, score, label, nBins))
     val before = finishBrier(stats)
       .select(col("n"), col("n_pos"),
         col("brier_ppm").as("brier_raw_ppm"),

@@ -23,17 +23,6 @@ import org.apache.spark.sql.functions._
   * keep variants nearby, or union several passes with different keys. */
 object FuzzyLinkage {
 
-  // qgramJoin persists the per-side gram projections (each feeds both the
-  // df aggregation and the prefix selection) — the Dedup.releaseCaches
-  // contract: call releaseCaches() on the building thread once the join
-  // result is materialized.
-  private val caches = new CacheRegistry
-  private def tracked(df: DataFrame): DataFrame = caches.tracked(df)
-
-  /** Unpersist every frame cached by THIS THREAD's qgramJoin calls since
-    * its last release. */
-  def releaseCaches(): Unit = caches.releaseAll()
-
   /** For each `dirty` row, its best `clean` match: minimum Levenshtein
     * distance ≤ `maxDist` among the sorted neighborhood, ties to the
     * smallest clean id. Output: dirty_id, dirty_val, clean_id, clean_val,
@@ -186,22 +175,22 @@ object FuzzyLinkage {
       q: Int,
       persistPrefix: Boolean): Prolog = {
     val l = sideFrame(left, leftId, leftCol, "left")
-    val r = tracked(sideFrame(right, rightId, rightCol, "right").persist())
+    val r = Scope.persist(sideFrame(right, rightId, rightCol, "right"))
     val minLenForFilter = q + maxDist * q // |s| ≥ this ⇒ count threshold ≥ 1
-    val longL = tracked(l.where(col("left_len") >= minLenForFilter).persist())
-    val longR = tracked(r.where(col("right_len") >= minLenForFilter).persist())
-    val gl = tracked(occGrams(longL, "left", q).persist())
-    val gr = tracked(occGrams(longR, "right", q).persist())
+    val longL = Scope.persist(l.where(col("left_len") >= minLenForFilter))
+    val longR = Scope.persist(r.where(col("right_len") >= minLenForFilter))
+    val gl = Scope.persist(occGrams(longL, "left", q))
+    val gr = Scope.persist(occGrams(longR, "right", q))
     // one global element order for both sides: df asc over the UNION
     // (rarest first), then (gram, occ) for determinism. Persisted: BOTH
     // prefix windows read it (it was recomputed once per side before).
-    val dfreq = tracked(gl.unionByName(gr).groupBy("__g", "__occ")
-      .agg(count(lit(1)).as("__df")).persist())
+    val dfreq = Scope.persist(gl.unionByName(gr).groupBy("__g", "__occ")
+      .agg(count(lit(1)).as("__df")))
     val prefixLen = maxDist * q + 1
     // the prefix frames persist only when a caller consumes them twice
     // (the auto route: preflight counts + the exact join)
     def maybe(df: DataFrame): DataFrame =
-      if (persistPrefix) tracked(df.persist()) else df
+      if (persistPrefix) Scope.persist(df) else df
     Prolog(l, r, longL, longR, gl, gr, dfreq,
       maybe(rarestPrefix(gl, dfreq, prefixLen, "left_id")),
       maybe(rarestPrefix(gr, dfreq, prefixLen, "right_id")),
@@ -331,7 +320,7 @@ object FuzzyLinkage {
     * Scale shape: identical linear prologue to qgramJoin (same helpers),
     * then THREE metadata-sized aggregations — per-key prefix counts
     * joined and summed (never exploded into pairs), and two length
-    * histograms. Caller epilogue: releaseCaches() after materializing. */
+    * histograms. Consume the result inside a Scope. */
   def qgramJoinPreflight(
       left: DataFrame,
       right: DataFrame,
@@ -502,8 +491,7 @@ object FuzzyLinkage {
     * candidates pay Levenshtein. Driver state: the preflight row and two
     * length minima.
     *
-    * Output: (left_id, right_id, dist, route). Caller epilogue:
-    * releaseCaches() after materializing, as with qgramJoin. */
+    * Output: (left_id, right_id, dist, route). Consume the result inside a Scope. */
   def similarityJoinAuto(
       left: DataFrame,
       right: DataFrame,
@@ -559,8 +547,8 @@ object FuzzyLinkage {
       // exact short branch below — a larger set than the exact route's
       // short branch, still bounded by the length-bucket equi-join shape
       val minLenForFilter = sigQ + maxDist * sigQ
-      val longL = tracked(l.where(col("left_len") >= minLenForFilter).persist())
-      val longR = tracked(r.where(col("right_len") >= minLenForFilter).persist())
+      val longL = Scope.persist(l.where(col("left_len") >= minLenForFilter))
+      val longR = Scope.persist(r.where(col("right_len") >= minLenForFilter))
 
       // the similarity floor anchors at the shortest LONG string across
       // both sides (two metadata aggregations); when either side has no
@@ -642,8 +630,8 @@ object FuzzyLinkage {
     * signature table, the pricing histogram) is computed ONCE and
     * persisted, so each arriving batch pays only batch-linear work to be
     * priced AND matched. Release with [[QgramIndex.release]] when the
-    * maintenance loop retires the index (deliberately NOT on the
-    * thread-local releaseCaches contract — the index outlives batches). */
+    * maintenance loop retires the index (deliberately NOT tracked by a
+    * Scope — the index outlives batches). */
   final case class QgramIndex private[operators] (
       side: DataFrame,
       dfreq: DataFrame,
@@ -780,8 +768,8 @@ object FuzzyLinkage {
     * band/prefix tables never shuffle — the incrementalNearDuplicates
     * posture; the id-keyed verify fetches against `index.side` stay
     * shuffled (store the corpus bucketed by id to co-locate them at
-    * 100 TB). Output: (left_id, right_id, dist, route). Caller epilogue:
-    * releaseCaches() after materializing each batch's result. */
+    * 100 TB). Output: (left_id, right_id, dist, route). Consume each
+    * batch's result inside a Scope. */
   // the per-batch projections every incremental entry point starts from:
   // side frame, its exact-route long split, and the batch prefixes ranked
   // under the INDEX's corpus-df order (unseen grams at df 0 — any order
@@ -795,17 +783,16 @@ object FuzzyLinkage {
     val d = index.maxDist
     val q = index.q
     val minLenExact = q + d * q
-    val l = tracked(sideFrame(batch, leftId, leftCol, "left").persist())
-    val longL = tracked(l.where(col("left_len") >= minLenExact).persist())
+    val l = Scope.persist(sideFrame(batch, leftId, leftCol, "left"))
+    val longL = Scope.persist(l.where(col("left_len") >= minLenExact))
     val w = Window.partitionBy("__id")
       .orderBy(col("__df"), col("__g"), col("__occ"))
-    val lPrefix = tracked(occGrams(longL, "left", q)
+    val lPrefix = Scope.persist(occGrams(longL, "left", q)
       .join(index.dfreq, Seq("__g", "__occ"), "left")
       .na.fill(0L, Seq("__df"))
       .withColumn("__r", row_number().over(w))
       .where(col("__r") <= d * q + 1)
-      .select(col("__g"), col("__occ"), col("__id").as("left_id"))
-      .persist())
+      .select(col("__g"), col("__occ"), col("__id").as("left_id")))
     (l, longL, lPrefix)
   }
 
@@ -854,11 +841,10 @@ object FuzzyLinkage {
       leftId: String,
       leftCol: String): Long = {
     graft.functions.GraftFunctions.register(batch.sparkSession)
-    val m = caches.mark()
-    val (l, longL, lPrefix) = batchFrames(batch, index, leftId, leftCol)
-    val priced = priceAgainst(l, longL, lPrefix, index)
-    caches.releaseSince(m)
-    priced
+    Scope {
+      val (l, longL, lPrefix) = batchFrames(batch, index, leftId, leftCol)
+      priceAgainst(l, longL, lPrefix, index)
+    }
   }
 
   def incrementalSimilarityJoin(
@@ -915,7 +901,7 @@ object FuzzyLinkage {
       val longCand = index.bandedSig
         .join(maybeBroadcast(bandedL), Seq("__band", "__bh"))
         .select("left_id", "right_id")
-      val longAnchorL = tracked(l.where(col("left_len") >= anchor).persist())
+      val longAnchorL = Scope.persist(l.where(col("left_len") >= anchor))
       val shortCand = shortBranchCandidates(l, index.side, longAnchorL,
         d, anchor, sigMinLenR).select("left_id", "right_id")
       verify(longCand.unionByName(shortCand), "approximate_minhash")

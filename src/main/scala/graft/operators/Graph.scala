@@ -34,22 +34,6 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  private val caches = new CacheRegistry
-
-  /** Unpersist frames pinned by the last pageRankFixedPoint call on this
-    * thread. Call once the result is materialized. */
-  def releaseCaches(): Unit = caches.releaseAll()
-
-  /** Free a superstep's localCheckpoint RDD once the next round is live.
-    * Package-visible: StreamingComponents retires its previous labeling
-    * checkpoint with the same discipline. */
-  private[graft] def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
   /** Symmetrize a (src, dst) edge projection in ONE scan of its input:
     * `dir.unionAll(dir.swap)` evaluates the underlying derivation once PER
     * LEG inside the edge-cache fill job (Spark does not dedup common
@@ -153,15 +137,13 @@ object Graph {
     require(maxIters >= 1 && maxIters <= 200, "connectedComponents: maxIters in [1, 200]")
     val dir = edges.select(
       col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-    val e = caches.tracked(
+    val e = Scope.persist(
       symmetrized(dir)
         .distinct()
-        .repartition(col("src"))
-        .persist())
+        .repartition(col("src")))
     val nodes = e.select(col("src").as("node")).distinct()
 
-    var labels = nodes.select(col("node"), col("node").as("comp"))
-      .localCheckpoint(true)
+    var labels = Scope.checkpoint(nodes.select(col("node"), col("node").as("comp")), eager = true)
     var t = 0
     var converged = false
     while (t < maxIters && !converged) {
@@ -176,9 +158,9 @@ object Graph {
       // changed-row count is the action that materializes it (the old
       // shape paid the eager-count job AND a separate limit-probe job —
       // Dedup.duplicateClusters' convergence discipline, guide §2.6)
-      val next = step.localCheckpoint(false)
+      val next = Scope.checkpoint(step, eager = false)
       converged = next.where(col("__chg")).count() == 0L
-      releaseCheckpoint(labels)
+      Scope.release(labels)
       labels = next
       t += 1
     }
@@ -212,15 +194,15 @@ object Graph {
     // the normalized edge list and degree table each feed multiple scans
     // (orientation ×2, the final join) — cache both so the caller's edge
     // DERIVATION (often a join-heavy projection) runs exactly once
-    val und = caches.tracked(edges.where(a =!= b)
+    val und = Scope.persist(edges.where(a =!= b)
       .select(least(a, b).as("a"), greatest(a, b).as("b"))
-      .distinct().persist())
-    val deg = caches.tracked(und.select(col("a").as("node"))
+      .distinct())
+    val deg = Scope.persist(und.select(col("a").as("node"))
       .unionAll(und.select(col("b").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("deg")).persist())
+      .groupBy("node").agg(count(lit(1)).as("deg")))
     // orient low (deg, id) -> high (deg, id); carry the head's degree so
     // the wedge join can order its two legs without re-joining deg
-    val oriented = caches.tracked(
+    val oriented = Scope.persist(
       und.join(deg.select(col("node").as("a"), col("deg").as("da")), Seq("a"))
         .join(deg.select(col("node").as("b"), col("deg").as("db")), Seq("b"))
         .select(
@@ -233,8 +215,7 @@ object Graph {
           when(col("da") < col("db") ||
                (col("da") === col("db") && col("a") < col("b")),
             col("db")).otherwise(col("da")).as("dv"))
-        .repartition(col("u"))
-        .persist())
+        .repartition(col("u")))
     val o1 = oriented
     val o2 = oriented.select(
       col("u").as("u2"), col("v").as("w"), col("dv").as("dw"))
@@ -271,27 +252,26 @@ object Graph {
     * table onto the labeling scan. The label-merge CC runs on the
     * COMPONENT graph (≤ 2·|batch| nodes — batch-sized, not
     * corpus-sized). Pinned by the x135 plan audit: with auto-broadcast
-    * disabled, the labeling never sits below a shuffle exchange. Caller
-    * epilogue: materialize, then releaseCaches(). */
+    * disabled, the labeling never sits below a shuffle exchange. Consume
+    * the result inside a Scope. */
   def componentsIncremental(
       labels: DataFrame,
       newEdges: DataFrame,
       srcCol: String, dstCol: String,
       maxIters: Int = 50): DataFrame = {
-    val e = caches.tracked(newEdges.select(
+    val e = Scope.persist(newEdges.select(
       col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .distinct().persist())
-    val nn = caches.tracked(e.select(col("src").as("node"))
-      .unionAll(e.select(col("dst").as("node"))).distinct().persist())
+      .distinct())
+    val nn = Scope.persist(e.select(col("src").as("node"))
+      .unionAll(e.select(col("dst").as("node"))).distinct())
     // labels of batch endpoints already in the corpus: the batch-sized
     // node set broadcasts into the labeling — corpus scanned, not shuffled
-    val hit = caches.tracked(
-      labels.join(broadcast(nn), Seq("node")).persist())
+    val hit = Scope.persist(
+      labels.join(broadcast(nn), Seq("node")))
     // endpoints take their existing component; unseen nodes self-label
-    val lab = caches.tracked(nn
+    val lab = Scope.persist(nn
       .join(broadcast(hit), Seq("node"), "left")
-      .select(col("node"), coalesce(col("comp"), col("node")).as("comp"))
-      .persist())
+      .select(col("node"), coalesce(col("comp"), col("node")).as("comp")))
     // the merge graph connects old canonical labels via the new edges
     val le = e
       .join(lab.select(col("node").as("src"), col("comp").as("__ca")), Seq("src"))
@@ -338,8 +318,7 @@ object Graph {
     * struct-min + an anti-join against the accumulated state; state and
     * frontier are localCheckpoint'd, previous rounds released.
     * Convergence = an empty frontier (no scan of the full state). Seeds
-    * are a driver-side list (query metadata). Caller epilogue:
-    * materialize, then releaseCaches(). */
+    * are a driver-side list (query metadata). Consume the result inside a Scope. */
   def bfsLevels(
       edges: DataFrame,
       srcCol: String, dstCol: String,
@@ -352,11 +331,10 @@ object Graph {
     import spark.implicits._
     val dir = edges.select(
       col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-    val e = caches.tracked(
+    val e = Scope.persist(
       symmetrized(dir)
         .distinct()
-        .repartition(col("src"))
-        .persist())
+        .repartition(col("src")))
     // the accumulated state is the UNION of the (checkpointed) per-round
     // frontiers — never re-materialized: the old shape localCheckpointed
     // state ∪ fresh every round, an O(|state|) eager write per round on
@@ -370,9 +348,8 @@ object Graph {
     // cost is O(maxIters²) cheap leg visits. Acceptable at the 200-round
     // cap; if that cap is ever raised past a few thousand, fold frontiers
     // into a periodically re-checkpointed state instead.
-    var frames = List(
-      seeds.distinct.map(s => (s, 0L, s)).toDF("node", "dist", "seed")
-        .localCheckpoint(true))
+    var frames = List(Scope.checkpoint(
+      seeds.distinct.map(s => (s, 0L, s)).toDF("node", "dist", "seed"), eager = true))
     var frontier = frames.head
     var t = 0
     var done = false
@@ -388,16 +365,15 @@ object Graph {
       // emptiness count is the action that materializes it (the old shape
       // paid the eager-count job AND a separate limit-probe job whose
       // executeTake scanned every partition on the final empty round)
-      val fresh = cand
+      val fresh = Scope.checkpoint(cand
         .join(stateNodes, Seq("node"), "left_anti")
-        .select(col("node"), col("m.dist").as("dist"), col("m.seed").as("seed"))
-        .localCheckpoint(false)
+        .select(col("node"), col("m.dist").as("dist"), col("m.seed").as("seed")), eager = false)
       done = fresh.count() == 0L
       if (!done) {
         frames = fresh :: frames
         frontier = fresh
       } else {
-        releaseCheckpoint(fresh)
+        Scope.release(fresh)
       }
       t += 1
     }
@@ -427,12 +403,11 @@ object Graph {
       edges: DataFrame,
       leftCol: String, rightCol: String,
       scale: Long = 1000000000000L): DataFrame = {
-    val e = caches.tracked(
+    val e = Scope.persist(
       edges.select(col(leftCol).cast("long").as("l"),
         col(rightCol).cast("long").as("r"))
         .distinct()
-        .repartition(col("r"))
-        .persist())
+        .repartition(col("r")))
     val deg = e.groupBy("r").agg(count(lit(1)).as("__deg"))
     val weighted = e.join(deg, Seq("r"))
       .select(col("r"), col("l"), expr(s"${scale}L div __deg").as("__w"))
@@ -457,23 +432,22 @@ object Graph {
     * contribution join is keyed by peer against the cached edge
     * projection; existing interactions leave via a keyed anti-join; the
     * per-left top-k is a group-partitioned window (never a global sort).
-    * Caller epilogue: materialize, then releaseCaches(). */
+    * Consume the result inside a Scope. */
   def recommendations(
       edges: DataFrame,
       leftCol: String, rightCol: String,
       k: Int,
       scale: Long = 1000000000000L): DataFrame = {
     require(k >= 1 && k <= 100, "recommendations: k in [1, 100]")
-    val e = caches.tracked(
+    val e = Scope.persist(
       edges.select(col(leftCol).cast("long").as("l"),
         col(rightCol).cast("long").as("r"))
-        .distinct()
-        .persist())
+        .distinct())
     // the pair-score frame feeds BOTH symmetrization branches — persisted,
     // or the Σ deg² wedge self-join (the expensive phase) runs twice
     // (guide §2.4; rows are 32-byte integers, so the cache is cheap where
     // a full-text cache was not — see the x100 experiment)
-    val sims = caches.tracked(sharedNeighborScores(e, "l", "r", scale).persist())
+    val sims = Scope.persist(sharedNeighborScores(e, "l", "r", scale))
     val sym = sims.select(col("a").as("c"), col("b").as("peer"), col("ra_fp"))
       .unionAll(sims.select(col("b").as("c"), col("a").as("peer"), col("ra_fp")))
     val contrib = sym
@@ -511,12 +485,11 @@ object Graph {
   def butterflyCounts(
       edges: DataFrame,
       leftCol: String, rightCol: String): DataFrame = {
-    val e = caches.tracked(
+    val e = Scope.persist(
       edges.select(col(leftCol).cast("long").as("l"),
         col(rightCol).cast("long").as("r"))
         .distinct()
-        .repartition(col("l"))
-        .persist())
+        .repartition(col("l")))
     val e2 = e.select(col("l"), col("r").as("r2"))
     val pairs = e.join(e2, Seq("l"))
       .where(col("r") < col("r2"))
@@ -560,10 +533,9 @@ object Graph {
     // lazy checkpoints: the edge counts below are the materializing
     // actions, so each round (and the init) is ONE job — the old eager
     // flag paid an internal count job and then ran the same count again
-    var cur = edges.where(a =!= b)
+    var cur = Scope.checkpoint(edges.where(a =!= b)
       .select(least(a, b).as("a"), greatest(a, b).as("b"))
-      .distinct()
-      .localCheckpoint(false)
+      .distinct(), eager = false)
     var nEdges = cur.count()
     var t = 0
     var converged = false
@@ -573,14 +545,13 @@ object Graph {
         .groupBy("node").agg(count(lit(1)).as("deg"))
         .where(col("deg") >= k)
         .select("node")
-      val next = cur
+      val next = Scope.checkpoint(cur
         .join(alive.select(col("node").as("a")), Seq("a"), "left_semi")
         .join(alive.select(col("node").as("b")), Seq("b"), "left_semi")
-        .select("a", "b")
-        .localCheckpoint(false)
+        .select("a", "b"), eager = false)
       val nNext = next.count()
       converged = nNext == nEdges
-      releaseCheckpoint(cur)
+      Scope.release(cur)
       cur = next
       nEdges = nNext
       t += 1
@@ -617,22 +588,20 @@ object Graph {
     require(steps >= 1 && steps <= 50, "deterministicWalks: steps in [1, 50]")
     require(walksPerNode >= 1 && walksPerNode <= 64,
       "deterministicWalks: walksPerNode in [1, 64]")
-    val e = caches.tracked(
+    val e = Scope.persist(
       edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
         .distinct()
-        .repartition(col("src"))
-        .persist())
-    var frontier = e.select(col("src").as("start")).distinct()
+        .repartition(col("src")))
+    var frontier = Scope.checkpoint(e.select(col("src").as("start")).distinct()
       .select(col("start"),
         explode(array((0 until walksPerNode).map(i => lit(i.toLong)): _*))
           .as("widx"),
-        col("start").as("node"))
-      .localCheckpoint(true)
+        col("start").as("node")), eager = true)
     // every step's frontier feeds the FINAL path union, so no checkpoint
     // is released mid-loop (unlike pageRank, where only two rank tables
     // are ever live); the ≤ steps+1 frames are |walks|-row each and the
-    // ContextCleaner frees them when the result is consumed
+    // caller's Scope frees them once the result is consumed
     val paths = scala.collection.mutable.ArrayBuffer[DataFrame](
       frontier.select(col("start"), col("widx"), lit(0).as("step"), col("node")))
     (1 to steps).foreach { r =>
@@ -643,10 +612,9 @@ object Graph {
             md5(concat_ws(":", col("start"), col("widx"), lit(r), col("dst")))
               .as("draw"),
             col("dst")).as("c"))
-      frontier = cand.groupBy("start", "widx")
+      frontier = Scope.checkpoint(cand.groupBy("start", "widx")
         .agg(min("c").as("m"))
-        .select(col("start"), col("widx"), col("m.dst").as("node"))
-        .localCheckpoint(true)
+        .select(col("start"), col("widx"), col("m.dst").as("node")), eager = true)
       paths += frontier.select(col("start"), col("widx"),
         lit(r).as("step"), col("node"))
     }
@@ -680,12 +648,11 @@ object Graph {
       scale: Long = 1000000000000L): DataFrame = {
     require(iters >= 1 && iters <= 100, "hitsBipartite: iters in [1, 100]")
     require(scale >= 1000, "hitsBipartite: scale too small for fixed-point")
-    val e = caches.tracked(
+    val e = Scope.persist(
       edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
         .distinct()
-        .repartition(col("src"))
-        .persist())
+        .repartition(col("src")))
     require(!e.isEmpty, "hitsBipartite: empty edge list")
     val dec = "decimal(38,0)"
     // ONE job per half-step: the raw-score checkpoint is marked lazy and
@@ -699,15 +666,14 @@ object Graph {
     // is the integer's digits and the cast back is lossless, so the
     // division is bit-identical to the broadcast shape.
     def renorm(raw: DataFrame): (DataFrame, DataFrame) = {
-      val ck = raw.localCheckpoint(false)
+      val ck = Scope.checkpoint(raw, eager = false)
       val m = ck.agg(max("rv").as("m")).collect()(0).getDecimal(0)
       (ck.select(col("node"),
         expr(s"(cast(rv as $dec) * $scale) div cast('${m.toPlainString}' as $dec)")
           .as("v")), ck)
     }
-    var hubs = e.select(col("src").as("node")).distinct()
-      .select(col("node"), lit(scale).as("v"))
-      .localCheckpoint(true)
+    var hubs = Scope.checkpoint(e.select(col("src").as("node")).distinct()
+      .select(col("node"), lit(scale).as("v")), eager = true)
     var hubsCk: DataFrame = hubs
     var auths: DataFrame = null
     var authsCk: DataFrame = null
@@ -718,14 +684,14 @@ object Graph {
         .groupBy(col("dst").as("node"))
         .agg(sum(col("v").cast("decimal(38,0)")).as("rv"))
       val (nextA, ckA) = renorm(rawA)
-      if (authsCk != null) releaseCheckpoint(authsCk)
+      if (authsCk != null) Scope.release(authsCk)
       auths = nextA
       authsCk = ckA
       val rawH = e.join(auths.select(col("node").as("dst"), col("v")), Seq("dst"))
         .groupBy(col("src").as("node"))
         .agg(sum(col("v").cast("decimal(38,0)")).as("rv"))
       val (nextH, ckH) = renorm(rawH)
-      releaseCheckpoint(hubsCk)
+      Scope.release(hubsCk)
       hubs = nextH
       hubsCk = ckH
     }
@@ -746,19 +712,17 @@ object Graph {
     require(scale >= 1000000L && scale <= 1000000000000000000L,
       "pageRankFixedPoint: scale in [1e6, 1e18] (rank sums must fit a long)")
 
-    val e = caches.tracked(
+    val e = Scope.persist(
       edges.select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-        .repartition(col("src"))
-        .persist())
+        .repartition(col("src")))
 
     val nodes = e.select(col("src").as("node"))
       .unionAll(e.select(col("dst").as("node")))
       .distinct()
     val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    val nd = caches.tracked(
+    val nd = Scope.persist(
       nodes.join(deg.withColumnRenamed("src", "node"), Seq("node"), "left")
-        .select(col("node"), coalesce(col("deg"), lit(0L)).as("deg"))
-        .persist())
+        .select(col("node"), coalesce(col("deg"), lit(0L)).as("deg")))
     val n = nd.count()
     require(n > 0, "pageRankFixedPoint: empty graph")
     // teleport set: all nodes (classic) or the seed set (personalized);
@@ -782,7 +746,7 @@ object Graph {
     // broadcast shape. Free a round's localCheckpoint RDD once the next
     // round is live.
     def matWithDang(df: DataFrame): (DataFrame, Long) = {
-      val ck = df.localCheckpoint(false)
+      val ck = Scope.checkpoint(df, eager = false)
       val d = ck.where(col("deg") === 0)
         .agg(coalesce(sum("r"), lit(0L)).as("dang"))
         .collect()(0).getLong(0)
@@ -807,7 +771,7 @@ object Graph {
         if (t == 0) lastStepPlans.clear()
         lastStepPlans += step.queryExecution.executedPlan.toString
       }
-      releaseCheckpoint(ranks)
+      Scope.release(ranks)
       ranks = next
       dang = dangNext
       t += 1
@@ -839,10 +803,9 @@ object Graph {
     val dirE = edges.select(
       col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .where(col("src") =!= col("dst"))
-    val sym = caches.tracked(
+    val sym = Scope.persist(
       symmetrized(dirE)
-        .distinct()
-        .persist())
+        .distinct())
     val deg = sym.groupBy("src").agg(count(lit(1)).as("d"))
     sym
       .join(deg.withColumnRenamed("d", "dj"), Seq("src"))
@@ -878,8 +841,7 @@ object Graph {
     * (−count, label) struct — the PageRank superstep class. Labels are
     * localCheckpointed per round (lineage truncation); every node
     * appears as a dst in the symmetric edge set, so no
-    * isolated-node/coalesce leg is needed. Caller epilogue: materialize,
-    * then releaseCaches(). */
+    * isolated-node/coalesce leg is needed. Consume the result inside a Scope. */
   def labelPropagation(
       edges: DataFrame,
       srcCol: String, dstCol: String,
@@ -888,14 +850,12 @@ object Graph {
     val dirE = edges.select(
       col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .where(col("src") =!= col("dst"))
-    val e = caches.tracked(
+    val e = Scope.persist(
       symmetrized(dirE)
         .distinct()
-        .repartition(col("src"))
-        .persist())
-    var labels = e.select(col("src").as("node"), col("src").as("lbl"))
-      .distinct()
-      .localCheckpoint(true)
+        .repartition(col("src")))
+    var labels = Scope.checkpoint(e.select(col("src").as("node"), col("src").as("lbl"))
+      .distinct(), eager = true)
     var t = 0
     while (t < iters) {
       val next = e
@@ -905,10 +865,9 @@ object Graph {
         .groupBy("node")
         .agg(min(struct((-col("cnt")).as("nc"), col("lbl"))).as("m"))
         .select(col("node"), col("m.lbl").as("lbl"))
-        .localCheckpoint(true)
       val old = labels
-      labels = next
-      releaseCheckpoint(old)
+      labels = Scope.checkpoint(next, eager = true)
+      Scope.release(old)
       t += 1
     }
     labels.select(col("node"), col("lbl").as("community"))

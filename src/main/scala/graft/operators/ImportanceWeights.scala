@@ -24,13 +24,6 @@ object ImportanceWeights {
 
   val DefaultBuckets = 4096
 
-  private val caches = new CacheRegistry
-
-  /** Unpersist this thread's feature caches from weightsAgainstTarget
-    * (same contract as Dedup.releaseCaches: call once the weights are
-    * materialized, on the thread that built them). */
-  def releaseCaches(): Unit = caches.releaseAll()
-
   /** One row per (idCol, bucket) feature occurrence. The unigram+bigram
     * hashes come from the one-pass native kernel (graft_gram_hashes_fnv —
     * no gram strings, no interpreted HOF chain; an earlier md5-over-
@@ -98,8 +91,8 @@ object ImportanceWeights {
     * standard DSIR setup), the raw feature pass is the dominant cost and
     * would otherwise run twice — once for the raw counts, once for
     * scoring. This path materializes the (id, bucket) features ONCE and
-    * feeds both, halving the explode+hash work. Call releaseCaches() once
-    * the result is materialized. */
+    * feeds both, halving the explode+hash work. Consume the result inside
+    * a Scope. */
   def weightsAgainstTarget(
       raw: DataFrame,
       target: DataFrame,
@@ -107,8 +100,7 @@ object ImportanceWeights {
       idCol: String,
       buckets: Int = DefaultBuckets,
       roundTo: Int = 4): DataFrame = {
-    val rawFeats = features(raw, textCol, idCol, buckets).persist()
-    caches.tracked(rawFeats)
+    val rawFeats = Scope.persist(features(raw, textCol, idCol, buckets))
     val tc = features(target, textCol, idCol, buckets)
       .groupBy("bucket").agg(count(lit(1)).as("tc"))
     val rc = rawFeats.groupBy("bucket").agg(count(lit(1)).as("rc"))
@@ -131,11 +123,9 @@ object ImportanceWeights {
       buckets: Int = DefaultBuckets,
       roundTo: Int = 4): DataFrame = {
     graft.functions.GraftFunctions.register(raw.sparkSession)
-    val feats = raw.select(col(idCol), isTarget.as("__t"),
+    val feats = Scope.persist(raw.select(col(idCol), isTarget.as("__t"),
       explode(call_function("graft_gram_hashes_fnv", col(textCol))).as("__gh"))
-      .select(col(idCol), col("__t"), pmod(col("__gh"), lit(buckets.toLong)).as("bucket"))
-      .persist()
-    caches.tracked(feats)
+      .select(col(idCol), col("__t"), pmod(col("__gh"), lit(buckets.toLong)).as("bucket")))
     val tc = feats.where(col("__t")).groupBy("bucket").agg(count(lit(1)).as("tc"))
     val rc = feats.groupBy("bucket").agg(count(lit(1)).as("rc"))
     feats

@@ -26,12 +26,6 @@ import org.apache.spark.sql.functions._
   * cross-engine. */
 object MarketBasket {
 
-  private val caches = new CacheRegistry
-
-  /** Unpersist frames pinned by the last associationRules call on this
-    * thread. Call once the result is materialized. */
-  def releaseCaches(): Unit = caches.releaseAll()
-
   def associationRules(
       df: DataFrame,
       basketCol: String, itemCol: String,
@@ -40,10 +34,9 @@ object MarketBasket {
       roundTo: Int = 6): DataFrame = {
     require(minPairCount >= 1L, "associationRules: minPairCount >= 1")
     require(topK >= 1, "associationRules: topK >= 1")
-    val items = caches.tracked(
+    val items = Scope.persist(
       df.select(col(basketCol).cast("long").as("b"), col(itemCol).cast("long").as("it"))
-        .distinct()
-        .persist())
+        .distinct())
     val nBaskets = items.select("b").distinct().count()
     require(nBaskets > 0, "associationRules: empty input")
 

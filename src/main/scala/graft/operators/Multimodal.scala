@@ -199,9 +199,9 @@ object Multimodal {
     * map-side-combinable aggregation to the distinct-hash frame, one
     * equi-join back (output linear; a mega-cluster is input-sized skew,
     * which AQE's skew split CAN handle — unlike quadratic emission).
-    * Caller epilogue: releaseCaches() after materializing. */
+    * Consume the result inside a Scope. */
   def perceptualClusters(media: DataFrame): DataFrame = {
-    val members = tracked(perceptualHashes(media).persist())
+    val members = Scope.persist(perceptualHashes(media))
     members.hint("shuffle_hash")
       .join(clusterStats(members), Seq("phash"))
       .select("media_id", "phash", "cluster_rep", "cluster_size")
@@ -220,12 +220,12 @@ object Multimodal {
     * dist-0 "pair" is the cluster itself — read cluster_size).
     *
     * Output: (ph_a, ph_b, dist, rep_a, rep_b, size_a, size_b).
-    * Caller epilogue: releaseCaches() after materializing. */
+    * Consume the result inside a Scope. */
   def perceptualNearDuplicateClusters(media: DataFrame, maxDist: Int = 3): DataFrame = {
     require(maxDist >= 0 && maxDist <= 16,
       "perceptualNearDuplicateClusters: maxDist in [0, 16]")
-    val members = tracked(perceptualHashes(media).persist())
-    val stats = tracked(clusterStats(members).persist())
+    val members = Scope.persist(perceptualHashes(media))
+    val stats = Scope.persist(clusterStats(members))
     distinctHashPairs(stats, maxDist)
       .join(stats.select(col("phash").as("ph_a"), col("cluster_rep").as("rep_a"),
         col("cluster_size").as("size_a")).hint("shuffle_hash"), Seq("ph_a"))
@@ -266,21 +266,20 @@ object Multimodal {
     * row-scaled, and AQE's compressed-size estimate must never turn one
     * into a broadcast build (the similarityJoinAuto sf10 lesson).
     * Nothing blob-sized travels past the codec scan.
-    * Caller epilogue: releaseCaches() after materializing. */
+    * Consume the result inside a Scope. */
   def perceptualNearDuplicates(media: DataFrame, maxDist: Int = 3): DataFrame = {
     require(maxDist >= 0 && maxDist <= 16,
       "perceptualNearDuplicates: maxDist in [0, 16]")
-    val members = tracked(perceptualHashes(media).persist())
-    val stats = tracked(clusterStats(members).persist())
+    val members = Scope.persist(perceptualHashes(media))
+    val stats = Scope.persist(clusterStats(members))
 
     // dist-0 pairs: within-cluster expansion over clusters of size ≥ 2
     // (semi-join keeps singleton-dominated corpora out of the self-join);
     // left salted by id hash — unique per cluster, so a mega-cluster
     // spreads across all salts — right replicated into every salt
-    val dupMembers = tracked(members
+    val dupMembers = Scope.persist(members
       .join(stats.where(col("cluster_size") >= 2).select("phash"),
-        Seq("phash"), "left_semi")
-      .persist())
+        Seq("phash"), "left_semi"))
     val ma = dupMembers.select(col("phash"), col("media_id").as("id_a"))
       .withColumn("__salt", pmod(xxhash64(col("id_a")), lit(PairSalts)).cast("int"))
     val mb = dupMembers.select(col("phash"), col("media_id").as("id_b"))
@@ -361,17 +360,6 @@ object Multimodal {
       .withColumn("dist", expr("bit_count(ph_a ^ ph_b)").cast("long"))
       .where(col("dist") <= maxDist)
   }
-
-  // the perceptual-dedup family persists the 16-byte/row hash frame and
-  // the distinct-hash cluster stats (each feeds several joins) — the
-  // FuzzyLinkage.releaseCaches contract: release on the building thread
-  // once materialized.
-  private val caches = new CacheRegistry
-  private def tracked(df: DataFrame): DataFrame = caches.tracked(df)
-
-  /** Unpersist every frame cached by THIS THREAD's perceptual-dedup
-    * calls since its last release. */
-  def releaseCaches(): Unit = caches.releaseAll()
 
   /** Size-aware repartitioning: blobs bucketed by log2(size) then spread
     * round-robin inside a bucket — keeps a task from accumulating only

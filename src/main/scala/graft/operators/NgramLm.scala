@@ -25,13 +25,6 @@ import org.apache.spark.sql.functions._
   */
 object NgramLm {
 
-  private val caches = new CacheRegistry
-
-  /** Unpersist this thread's per-call token-hash caches (same contract as
-    * Dedup.releaseCaches: call once the scores are materialized, on the
-    * thread that built them — thread-local, see CacheRegistry). */
-  def releaseCaches(): Unit = caches.releaseAll()
-
   /** A fitted bigram LM: hashed count tables + vocabulary size. The model
     * IS two DataFrames — it scales with the corpus, ships to scorers as
     * shuffle joins (or broadcasts, when the vocabulary is bounded), and can
@@ -59,8 +52,7 @@ object NgramLm {
   /** Train the count-based LM on a corpus: two aggregations over one
     * kernel-tokenized scan. */
   def fit(df: DataFrame, textCol: String, idCol: String): BigramModel = {
-    val base = hashed(df, textCol, idCol).persist()
-    caches.tracked(base)
+    val base = Scope.persist(hashed(df, textCol, idCol))
     val uni = base.select(explode(col("th")).as("wh"))
       .groupBy("wh").agg(count(lit(1)).as("c1"))
     val bc = explodeBigrams(base, idCol).groupBy("bh").agg(count(lit(1)).as("c2"))
@@ -143,10 +135,10 @@ object NgramLm {
     require(discountPct >= 1 && discountPct <= 99,
       "knBigramScore: discountPct in [1, 99] (D = discountPct/100 must sit in (0, 1))")
     val d = discountPct / 100.0
-    val base = caches.tracked(hashed(df, textCol, idCol).persist())
-    val bi = caches.tracked(explodeBigramPairs(base, idCol).persist())
-    val bc = caches.tracked(
-      bi.groupBy("w1h", "w2h").agg(count(lit(1)).as("c2")).persist())
+    val base = Scope.persist(hashed(df, textCol, idCol))
+    val bi = Scope.persist(explodeBigramPairs(base, idCol))
+    val bc = Scope.persist(
+      bi.groupBy("w1h", "w2h").agg(count(lit(1)).as("c2")))
     val hist = bc.groupBy("w1h")
       .agg(sum("c2").as("c1"), count(lit(1)).as("n1fw"))
     val cont = bc.groupBy("w2h").agg(count(lit(1)).as("n1bw"))

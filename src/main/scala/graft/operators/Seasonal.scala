@@ -25,12 +25,6 @@ import org.apache.spark.sql.functions._
   * rows, thousands not billions), never on raw events. */
 object Seasonal {
 
-  private val caches = new CacheRegistry
-
-  /** Unpersist frames pinned by this thread's last seriesHealthReport
-    * call. Call once the result is materialized. */
-  def releaseCaches(): Unit = caches.releaseAll()
-
   def weekdayAnomalies(
       df: DataFrame,
       series: Column,
@@ -72,10 +66,9 @@ object Seasonal {
       roundTo: Int = 4): DataFrame =
     // the calendar-bounded daily frame feeds the grid completion, both
     // domain projections and the rank pass — cache it so the corpus
-    // aggregates exactly once (caller epilogue: materialize, then
-    // releaseCaches())
+    // aggregates exactly once (released by the caller's Scope)
     finishFriedman(
-      caches.tracked(dailyCounts(df, series, ts).persist()), roundTo)
+      Scope.persist(dailyCounts(df, series, ts)), roundTo)
 
   /** The stateless Friedman finish over an ALREADY-MATERIALIZED
     * (series, day, cnt) frame — shared by the batch test and the
@@ -361,8 +354,7 @@ object Seasonal {
     * them here demonstrates the single-state discipline: the raw stream
     * collapses to (series × day) counts EXACTLY ONCE (cached), every
     * monitor reads that frame, and the per-series MASE row broadcasts
-    * back onto the daily grain. Caller epilogue: materialize, then
-    * Seasonal.releaseCaches(). */
+    * back onto the daily grain. Consume the result inside a Scope. */
   def seriesHealthReport(
       df: DataFrame,
       series: Column,
@@ -370,7 +362,7 @@ object Seasonal {
       k: Int = 3,
       h: Long = 40,
       season: Int = 7): DataFrame =
-    finishHealth(caches.tracked(dailyCounts(df, series, ts).persist()),
+    finishHealth(Scope.persist(dailyCounts(df, series, ts)),
       k, h, season)
 
   /** The composed finishing view over an ALREADY-MATERIALIZED daily
@@ -603,9 +595,9 @@ object Seasonal {
       maxLag: Int = 7,
       roundTo: Int = 4): DataFrame =
     // the daily frame feeds the ACF self-join AND the n_days aggregation
-    // — cache it (caller epilogue: materialize, then releaseCaches())
+    // — cache it (released by the caller's Scope)
     finishLjungBox(
-      caches.tracked(dailyCounts(df, series, ts).persist()), maxLag, roundTo)
+      Scope.persist(dailyCounts(df, series, ts)), maxLag, roundTo)
 
   /** The stateless Ljung–Box finish over the shared daily frame. */
   def finishLjungBox(
@@ -657,9 +649,9 @@ object Seasonal {
       maxLag: Int = 5,
       roundTo: Int = 4): DataFrame =
     // the ACF self-join references the daily frame twice — cache it
-    // (caller epilogue: materialize, then releaseCaches())
+    // (released by the caller's Scope)
     finishPacf(
-      caches.tracked(dailyCounts(df, series, ts).persist()), maxLag, roundTo)
+      Scope.persist(dailyCounts(df, series, ts)), maxLag, roundTo)
 
   /** The stateless PACF finish over the shared daily frame. */
   def finishPacf(

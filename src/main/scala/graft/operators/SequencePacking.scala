@@ -20,8 +20,8 @@ import org.apache.spark.sql.functions._
   * Bin ids are local to their shard; (shard, bin) is the global pack key.
   * The result is a pure function of (ids, token counts, contextLen,
   * shardBudget) — no partitioning or cluster-size sensitivity — which is
-  * what makes the exact SQL oracle possible. The shard layout cache follows
-  * Sharding's contract: call Sharding.releaseShardCaches() when done. */
+  * what makes the exact SQL oracle possible. The shard layout cache is
+  * released by the caller's Scope. */
 object SequencePacking {
 
   def packGreedy(

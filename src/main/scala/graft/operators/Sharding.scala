@@ -24,17 +24,9 @@ import org.apache.spark.sql.functions._
   * materialization, so without the persist the offsets could describe a
   * different layout than the final pass reads (a correctness requirement,
   * not a cache optimization; a production run would write the ranged data
-  * out and read it back instead). Call releaseShardCaches() when done.
+  * out and read it back instead). The caller's Scope releases it.
   */
 object Sharding {
-
-  private val caches = new CacheRegistry
-
-  private def tracked(df: DataFrame): DataFrame = caches.tracked(df)
-
-  /** Unpersist every layout cached by this thread's assignShards calls
-    * since the last release (thread-local — see CacheRegistry). */
-  def releaseShardCaches(): Unit = caches.releaseAll()
 
   /** Assign each document a shard id so shards carry ~`budget` tokens each.
     * Output = input columns + `shard` (long). Deterministic in (ids, token
@@ -53,10 +45,9 @@ object Sharding {
     val nPart = if (numPartitions > 0) numPartitions
       else spark.sessionState.conf.numShufflePartitions
 
-    val parted = tracked(
+    val parted = Scope.persist(
       docs.repartitionByRange(nPart, col(idCol))
-        .withColumn("__pid", spark_partition_id())
-        .persist())
+        .withColumn("__pid", spark_partition_id()))
 
     // per-partition totals → exclusive offsets (metadata-sized driver work)
     val totals = parted.groupBy("__pid").agg(sum(col(tokenCol)).as("__tot"))
@@ -92,15 +83,15 @@ object Sharding {
     * offsets → per-partition row_number + offset), NEVER a global
     * single-partition window. Cost at any scale: one range exchange.
     *
-    * Output = input columns + `pos` (long, 0-based). Call
-    * releaseShardCaches() once the result is materialized. */
+    * Output = input columns + `pos` (long, 0-based). Consume the result
+    * inside a Scope. */
   /** Global 0-based rank over an arbitrary lexicographic column order — the
     * same two-phase recipe as assignShards/shufflePositions (range exchange
     * → metadata-sized per-partition counts → driver offsets → parallel
     * per-partition row_number + offset), generalized to any sort key. The
     * caller must make `orderCols` a total order (end with a unique id);
     * ties would otherwise make the rank nondeterministic. Output = input
-    * columns + `pos` (long). Call releaseShardCaches() when materialized. */
+    * columns + `pos` (long). Consume the result inside a Scope. */
   def rankByColumns(
       docs: DataFrame,
       orderCols: Seq[String],
@@ -112,10 +103,9 @@ object Sharding {
     val nPart = if (numPartitions > 0) numPartitions
       else spark.sessionState.conf.numShufflePartitions
 
-    val parted = tracked(
+    val parted = Scope.persist(
       docs.repartitionByRange(nPart, orderCols.map(col): _*)
-        .withColumn("__pid", spark_partition_id())
-        .persist())
+        .withColumn("__pid", spark_partition_id()))
 
     val counts = parted.groupBy("__pid").agg(count(lit(1)).as("__n"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
@@ -168,11 +158,10 @@ object Sharding {
       else spark.sessionState.conf.numShufflePartitions
     val key = md5(concat_ws(":", lit(seed), col(idCol).cast("string")))
 
-    val parted = tracked(
+    val parted = Scope.persist(
       docs.withColumn("__key", key)
         .repartitionByRange(nPart, col("__key"), col(idCol))
-        .withColumn("__pid", spark_partition_id())
-        .persist())
+        .withColumn("__pid", spark_partition_id()))
 
     val counts = parted.groupBy("__pid").agg(count(lit(1)).as("__n"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap

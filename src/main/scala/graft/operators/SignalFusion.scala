@@ -26,8 +26,7 @@ import org.apache.spark.sql.functions._
   * per-source constants), then a broadcast-sized value→rank map joins
   * back — corpus rows are never globally sorted. The final fused rank is
   * the two-phase range-exchange rank (Sharding.rankByColumns), NEVER a
-  * single-partition row_number window over the corpus. Caller epilogue:
-  * materialize, then Sharding.releaseShardCaches(). */
+  * single-partition row_number window over the corpus. Consume the result inside a Scope. */
 object SignalFusion {
 
     /** Blend `signals` (column name → weight) into (…keep, fused, rank).
@@ -93,8 +92,7 @@ object SignalFusion {
     * per-group rank is one keyed window; N rides a broadcast 1-row
     * aggregate off the CACHED ranked frame; the value lookup is an
     * equi-join on the target position. Cross-products (r·N ~ N²) ride
-    * decimal(38,0). Caller epilogue: materialize, then
-    * Sharding.releaseShardCaches(). */
+    * decimal(38,0). Consume the result inside a Scope. */
   def quantileNormalize(
       df: DataFrame,
       group: Column,

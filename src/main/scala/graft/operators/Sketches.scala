@@ -23,19 +23,6 @@ import org.apache.spark.sql.functions._
   */
 object Sketches {
 
-  // Cached sketch frames pinned by kmvOverlapEstimates — same contract as
-  // Dedup.releaseCaches: callers invoke releaseCaches() once the overlap
-  // result is materialized, on the same thread (thread-local — see
-  // CacheRegistry), so repeated or concurrent invocations can't release
-  // each other's frames.
-  private val caches = new CacheRegistry
-
-  private def tracked(df: DataFrame): DataFrame = caches.tracked(df)
-
-  /** Unpersist every cache pinned by this thread's kmvOverlapEstimates
-    * calls since the last release. Call after materializing the result. */
-  def releaseCaches(): Unit = caches.releaseAll()
-
   /** Four (multiplier, offset) pairs — splitmix64/murmur3 mixing constants,
     * all multipliers odd (bijective mod 2⁶⁴). Depth ≤ 4. Exposed to the
     * query pack so the DuckDB oracle replays the same family. */
@@ -240,9 +227,8 @@ object Sketches {
     // aggregation — two complete corpus scans for a metadata-sized input
     // (measured 14.9 s → 7.5 s at sf0.1 on x87). The cache is bounded by
     // nGroups·k doubles, the same budget as the sketches themselves, and
-    // registered for releaseCaches() so callers can free it once the
-    // overlap result is materialized.
-    val mat = tracked(sketches.cache())
+    // released by the caller's Scope once the overlap result is consumed.
+    val mat = Scope.persist(sketches)
     mat.count()
     val a = mat.select(col("grp").as("source_a"), col("sk").as("__ska"))
     val b = mat.select(col("grp").as("source_b"), col("sk").as("__skb"))

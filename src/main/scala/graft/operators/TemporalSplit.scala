@@ -31,9 +31,8 @@ object TemporalSplit {
     * range-exchange rank (Sharding.rankByColumns — per-partition windows
     * plus metadata-sized offsets, never a single-partition global
     * window); the nFolds boundary rows then broadcast back over the
-    * scan for one counting aggregation. Caller epilogue: materialize the
-    * result, then Sharding.releaseShardCaches(). Empty input → empty
-    * output (no boundary position exists). */
+    * scan for one counting aggregation. Consume the result inside a
+    * Scope. Empty input → empty output (no boundary position exists). */
   def walkForwardFolds(
       events: DataFrame,
       tsCol: String,

@@ -263,12 +263,6 @@ object TextAnalysis {
         lit(epsilon).as("epsilon"))
   }
 
-  /** Unpersist frames pinned by the last tClosenessAudit call on this
-    * thread. Call once the result is materialized. */
-  def releaseCaches(): Unit = caches.releaseAll()
-
-  private val caches = new CacheRegistry
-
   /** t-closeness release audit (Li, Li & Venkatasubramanian 2007): even a
     * k-anonymous, l-diverse group leaks when its sensitive-attribute
     * DISTRIBUTION skews far from the corpus-wide one (the "everyone in
@@ -290,7 +284,7 @@ object TextAnalysis {
     * re-aggregation and the value-margin re-aggregation, and the
     * |values|-row margin table broadcasts back onto the cells. Cross
     * products ride decimal(38,0) so 10¹⁴-row cohorts cannot overflow.
-    * Caller epilogue: materialize, then releaseCaches(). */
+    * Consume the result inside a Scope. */
   def tClosenessAudit(
       df: DataFrame,
       quasi: Seq[(String, Column)],

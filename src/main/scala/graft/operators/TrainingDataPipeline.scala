@@ -95,45 +95,69 @@ object TrainingDataPipeline {
     // gates this costs count-table shuffles + a scoring join, hence opt-in.
     // Docs with <2 tokens have no score and fail the gate (they are junk
     // for training anyway).
-    val withLm = minLmScore match {
-      case None => withContamination.withColumn("__lm_ok", lit(true))
-      case Some(minScore) =>
-        val scores = NgramLm
-          .bigramLmScore(withContamination, textCol, idCol)
-          .select(col(idCol), col("lm_score"))
-        withContamination.join(scores, Seq(idCol), "left")
-          .withColumn("__lm_ok", coalesce(col("lm_score") >= minScore, lit(false)))
-          .drop("lm_score")
-    }
-    // one stage-pure flag per gate; the funnel counts below AND them in
-    // pipeline order, so each report field attributes drops to exactly the
-    // stage that caused them (a doc failing repetition no longer shows up as
-    // a "quality" drop, nor a decontaminated one as a "language" drop)
-    val flagged = withLm
-      .withColumn("__q_ok", TextAnalysis.qualityScore(col(textCol)) >= minQuality)
-      .withColumn("__rep_ok", repetitionOk)
-      .withColumn("__lang_ok",
-        if (keepLangs.isEmpty) lit(true)
-        else TextAnalysis.langId(col(textCol)).isin(keepLangs: _*))
-      .persist()
-    val gateNoLm = col("__q_ok") && col("__rep_ok") && col("__lang_ok") && col("__decon_ok")
-    val gateOk = gateNoLm && col("__lm_ok")
     val trackExtras = maxDupTokenRatio.isDefined || maxTopBigramRatio.isDefined ||
       benchmark.isDefined
-    // funnel accounting in stage order: quality → repetition → language →
-    // decontamination → LM score → exact dedup, all from ONE aggregation
-    // over the scan
-    val stageCounts = flagged.agg(
-      count(lit(1)).as("input"),
-      count(when(col("__q_ok"), 1)).as("after_q"),
-      count(when(col("__q_ok") && col("__rep_ok"), 1)).as("after_rep"),
-      count(when(col("__q_ok") && col("__rep_ok") && col("__lang_ok"), 1)).as("after_lang"),
-      count(when(gateNoLm, 1)).as("after_decon"),
-      count(when(gateOk, 1)).as("after_lm"),
-      // distinct DIGESTS, not distinct texts: the dedup stage itself keys on
-      // md5(text), and counting the digest keeps raw document text out of
-      // the aggregation exchange (~32 B/row shuffled instead of the full doc)
-      count_distinct(when(gateOk, md5(col(textCol)))).as("after_exact")).head()
+    // the funnel's scratch caches (gate flags, the exact-dedup set, the
+    // dedup sketches and LM tables) are released by this inner Scope as
+    // soon as the counts are in; a retained `cleaned` moves to the caller's
+    val (cleaned, stageCounts, fin) = Scope {
+      val withLm = minLmScore match {
+        case None => withContamination.withColumn("__lm_ok", lit(true))
+        case Some(minScore) =>
+          val scores = NgramLm
+            .bigramLmScore(withContamination, textCol, idCol)
+            .select(col(idCol), col("lm_score"))
+          withContamination.join(scores, Seq(idCol), "left")
+            .withColumn("__lm_ok", coalesce(col("lm_score") >= minScore, lit(false)))
+            .drop("lm_score")
+      }
+      // one stage-pure flag per gate; the funnel counts below AND them in
+      // pipeline order, so each report field attributes drops to exactly the
+      // stage that caused them (a doc failing repetition no longer shows up as
+      // a "quality" drop, nor a decontaminated one as a "language" drop)
+      val flagged = Scope.persist(withLm
+        .withColumn("__q_ok", TextAnalysis.qualityScore(col(textCol)) >= minQuality)
+        .withColumn("__rep_ok", repetitionOk)
+        .withColumn("__lang_ok",
+          if (keepLangs.isEmpty) lit(true)
+          else TextAnalysis.langId(col(textCol)).isin(keepLangs: _*)))
+      val gateNoLm = col("__q_ok") && col("__rep_ok") && col("__lang_ok") && col("__decon_ok")
+      val gateOk = gateNoLm && col("__lm_ok")
+      // funnel accounting in stage order: quality → repetition → language →
+      // decontamination → LM score → exact dedup, all from ONE aggregation
+      // over the scan
+      val stageCounts = flagged.agg(
+        count(lit(1)).as("input"),
+        count(when(col("__q_ok"), 1)).as("after_q"),
+        count(when(col("__q_ok") && col("__rep_ok"), 1)).as("after_rep"),
+        count(when(col("__q_ok") && col("__rep_ok") && col("__lang_ok"), 1)).as("after_lang"),
+        count(when(gateNoLm, 1)).as("after_decon"),
+        count(when(gateOk, 1)).as("after_lm"),
+        // distinct DIGESTS, not distinct texts: the dedup stage itself keys on
+        // md5(text), and counting the digest keeps raw document text out of
+        // the aggregation exchange (~32 B/row shuffled instead of the full doc)
+        count_distinct(when(gateOk, md5(col(textCol)))).as("after_exact")).head()
+
+      val lang = flagged.where(gateOk).drop("__q_ok", "__rep_ok", "__lang_ok", "__decon_ok")
+      // the dedup'd set feeds both the near-dup join and the final filter
+      val exact = Scope.persist(Dedup.dropExactDuplicates(lang, textCol, idCol))
+
+      // near-dup resolution is per COMPONENT, not per pair: A≈B and B≈C are
+      // one duplicate cluster even when A≉C directly, and only the minimum id
+      // survives (the published collapse rule; a pairwise id_b drop keeps a
+      // doc that only ever appears on the left of its pairs)
+      val nearPairs = Dedup.minhashNearDuplicates(
+        exact, textCol, idCol, threshold = nearDupThreshold)
+      val drop = Dedup.duplicateClusters(nearPairs)
+        .where(col("id") =!= col("cluster"))
+        .select(col("id").as(idCol))
+      val cleaned = exact.join(drop, Seq(idCol), "left_anti")
+        .withColumn("__n_tokens", TextAnalysis.tokenCount(col(textCol)))
+        .withColumn("__n_tokens_bpe", TextAnalysis.tokenCountBpe(col(textCol)))
+
+      cleaned.persist()
+      (cleaned, stageCounts, cleaned.agg(count(lit(1)), sum("__n_tokens")).head())
+    }
     val input = stageCounts.getLong(0)
     val afterQuality = stageCounts.getLong(1)
     val afterRep = if (trackExtras) Some(stageCounts.getLong(2)) else None
@@ -141,35 +165,11 @@ object TrainingDataPipeline {
     val afterDecon = if (benchmark.isDefined) Some(stageCounts.getLong(4)) else None
     val afterLm = if (minLmScore.isDefined) Some(stageCounts.getLong(5)) else None
     val afterExact = stageCounts.getLong(6)
-
-    val lang = flagged.where(gateOk).drop("__q_ok", "__rep_ok", "__lang_ok", "__decon_ok")
-    // the dedup'd set feeds both the near-dup join and the final filter
-    val exact = Dedup.dropExactDuplicates(lang, textCol, idCol).persist()
-
-    // near-dup resolution is per COMPONENT, not per pair: A≈B and B≈C are
-    // one duplicate cluster even when A≉C directly, and only the minimum id
-    // survives (the published collapse rule; a pairwise id_b drop keeps a
-    // doc that only ever appears on the left of its pairs)
-    val nearPairs = Dedup.minhashNearDuplicates(
-      exact, textCol, idCol, threshold = nearDupThreshold)
-    val drop = Dedup.duplicateClusters(nearPairs)
-      .where(col("id") =!= col("cluster"))
-      .select(col("id").as(idCol))
-    val cleaned = exact.join(drop, Seq(idCol), "left_anti")
-      .withColumn("__n_tokens", TextAnalysis.tokenCount(col(textCol)))
-      .withColumn("__n_tokens_bpe", TextAnalysis.tokenCountBpe(col(textCol)))
-
-    cleaned.persist()
-    val fin = cleaned.agg(count(lit(1)), sum("__n_tokens")).head()
     val afterNear = fin.getLong(0)
     val totalTokens = fin.getLong(1)
-    exact.unpersist()
-    flagged.unpersist()
-    Dedup.releaseCaches()
-    NgramLm.releaseCaches()
     // report-only callers (benchmarks, accounting jobs) should not keep the
     // cleaned corpus cached across the rest of the job
-    if (!retainResult) cleaned.unpersist()
+    if (retainResult) Scope.persist(cleaned) else cleaned.unpersist()
 
     (cleaned, Report(input, afterQuality, afterLang, afterExact, afterNear,
       totalTokens, afterRep, afterDecon, afterLm))
@@ -203,10 +203,9 @@ object TrainingDataPipeline {
     // dup-cluster blocking, the anti-join, and two funnel aggregations);
     // unpersisted, EVERY reference re-ran the centroid aggregation +
     // cosine scan behind keptIds. The id frame is 8-byte rows — the
-    // cheap-cache side of the x100 lesson. Caller epilogue:
-    // releaseFlagshipCaches() after materializing.
-    val keptIds = trackedF(
-      cos.where(col("cos_centroid") >= minCosCentroid).select(col(idCol)).persist())
+    // cheap-cache side of the x100 lesson.
+    val keptIds = Scope.persist(
+      cos.where(col("cos_centroid") >= minCosCentroid).select(col(idCol)))
     val kept = emb.join(keptIds, Seq(idCol), "left_semi")
     // the pivot quantizer refuses an empty corpus by contract; a fully
     // trimmed (or empty) input short-circuits to an empty funnel instead
@@ -229,15 +228,6 @@ object TrainingDataPipeline {
         coalesce(col("__t2"), lit(0L)).as("n_after_dedup"))
   }
 
-  // Caches pinned by curationFlagship — the Dedup.releaseCaches contract:
-  // call releaseFlagshipCaches() once the funnel result is materialized,
-  // on the thread that built it (thread-local — see CacheRegistry).
-  private val flagshipCaches = new CacheRegistry
-
-  private def trackedF(df: DataFrame): DataFrame = flagshipCaches.tracked(df)
-
-  def releaseFlagshipCaches(): Unit = flagshipCaches.releaseAll()
-
   /** The whole-pipeline text-curation flagship (x100): C4 line rules →
     * corpus-wide keep-first paragraph dedup → exact dedup → benchmark
     * decontamination → per-source mixture downsampling → HRW shard
@@ -254,8 +244,7 @@ object TrainingDataPipeline {
     * `docs` must already be line-structured in `textCol` (lines joined
     * with '\n'); `benchmark` supplies the decontamination gram source.
     * Output: (stage, n_docs, n_tokens) funnel rows — stages 0_input …
-    * 5_mixture plus one 6_shard_<k> row per shard. Call
-    * releaseFlagshipCaches() after materializing. */
+    * 5_mixture plus one 6_shard_<k> row per shard. */
   def curationFlagship(
       docs: DataFrame,
       textCol: String,
@@ -300,17 +289,15 @@ object TrainingDataPipeline {
     // nd/dc stages, where the same experiment measured SLOWER (their
     // recomputes are cheap projections off this cache) — see
     // OPTIMIZATION_r13.md.
-    val c4 = trackedF(C4Filters.c4Report(base, "text",
+    val c4 = Scope.persist(C4Filters.c4Report(base, "text",
         minWordsPerLine, minKeptLines, badPhrases, lineSep = "\n")
       .where(col("keep"))
-      .select(col(idCol), col(sourceCol), col("clean_text").as("text"))
-      .cache())
+      .select(col(idCol), col(sourceCol), col("clean_text").as("text")))
 
-    val pd = trackedF(ParagraphDedup
+    val pd = Scope.persist(ParagraphDedup
       .keepFirstParagraphs(c4, "text", idCol, sep = "\n")
       .select(col(idCol), col(sourceCol), col("cleaned_text"))
-      .where(length(col("cleaned_text")) > 0)
-      .cache())
+      .where(length(col("cleaned_text")) > 0))
     pd.count()
 
     val nd = Dedup.dropExactDuplicates(pd, "cleaned_text", idCol)
@@ -331,9 +318,8 @@ object TrainingDataPipeline {
       .where(col("__ratio") < contaminationMax)
       .select(col(idCol), col(sourceCol), col("cleaned_text"))
 
-    val mix = trackedF(MixtureSampling
-      .sampleByRates(dc, sourceCol, idCol, mixRates, defaultRate)
-      .cache())
+    val mix = Scope.persist(MixtureSampling
+      .sampleByRates(dc, sourceCol, idCol, mixRates, defaultRate))
     mix.count()
 
     val shards = Sharding.hrwShard(mix, idCol, nShards)

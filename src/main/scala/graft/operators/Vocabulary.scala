@@ -24,18 +24,6 @@ object Vocabulary {
   private def tokens(textCol: Column): Column =
     filter(split(lower(trim(textCol)), "\\s+"), t => t =!= "")
 
-  // Token-array projections pinned by the BM25/MLT retrieval family —
-  // same contract as Dedup.releaseCaches: callers invoke releaseCaches()
-  // once the ranked result is materialized, on the same thread
-  // (thread-local — see CacheRegistry).
-  private val caches = new CacheRegistry
-
-  private def tracked(df: DataFrame): DataFrame = caches.tracked(df)
-
-  /** Unpersist every cache pinned by this thread's retrieval calls since
-    * the last release. Call after materializing the ranked result. */
-  def releaseCaches(): Unit = caches.releaseAll()
-
   /** ONE tokenization of the corpus, persisted as a (doc, token-array)
     * projection: every retrieval consumer (query term profile, df lookup,
     * postings, document length, corpus stats) derives from this cache by
@@ -43,12 +31,11 @@ object Vocabulary {
     * lineage re-runs the split regex over the full corpus once per
     * consumer (measured ~5 tokenization scans through x96's more-like-this
     * before this cache). Cache size ≈ the postings themselves; released by
-    * releaseCaches() once the ranked result is materialized. */
+    * the caller's Scope once the ranked result is consumed. */
   private def tokenArrays(
       docs: DataFrame, textCol: String, idCol: String): DataFrame =
-    tracked(docs
-      .select(col(idCol).as("doc"), tokens(col(textCol)).as("__t"))
-      .persist())
+    Scope.persist(docs
+      .select(col(idCol).as("doc"), tokens(col(textCol)).as("__t")))
 
   /** Corpus term statistics: one row per distinct term with
     * (term, tf = total occurrences, df = documents containing it).
@@ -193,15 +180,14 @@ object Vocabulary {
       topK: Int = 50): DataFrame = {
     require(minCount >= 1 && topK >= 1, "minCount and topK must be positive")
     val toks = tokens(col(textCol))
-    val pairs = caches.tracked(docs
+    val pairs = Scope.persist(docs
       .select(toks.as("__t")).where(size(col("__t")) >= 2)
       .select(explode(transform(
         sequence(lit(1), size(col("__t")) - 1),
         i => struct(
           element_at(col("__t"), i).as("w1"),
           element_at(col("__t"), (i + 1).cast("int")).as("w2")))).as("__p"))
-      .select(col("__p.w1").as("w1"), col("__p.w2").as("w2"))
-      .persist())
+      .select(col("__p.w1").as("w1"), col("__p.w2").as("w2")))
     val lm = pairs.groupBy("w1").agg(count(lit(1)).as("c1"))
     val rm = pairs.groupBy("w2").agg(count(lit(1)).as("c2"))
     val n2 = pairs.agg(count(lit(1)).as("n2"))
@@ -453,8 +439,7 @@ object Vocabulary {
     * projection feeds the BM25 core AND the relevance flags); relevance
     * tests are plan-literal array_contains conjunctions (no join); the
     * ranked top-k (|queries|·k rows) BROADCASTS into the relevance scan;
-    * per-query metrics run on |queries| driver-sized rows. Caller
-    * epilogue: materialize, then releaseCaches(). */
+    * per-query metrics run on |queries| driver-sized rows. Consume the result inside a Scope. */
   def retrievalEvalBm25(
       docs: DataFrame,
       textCol: String,
@@ -478,8 +463,8 @@ object Vocabulary {
     val tokArr = tokenArrays(docs, textCol, idCol)
     // the |queries|·k ranked frame feeds the hit join AND the n_ret
     // counts — cache it so the postings join + top-k window run once
-    val ranked = tracked(
-      bm25RankCore(tokArr, qterms, k, k1, b, excludeSelf = false).persist())
+    val ranked = Scope.persist(
+      bm25RankCore(tokArr, qterms, k, k1, b, excludeSelf = false))
     // relevance flags: one pass over the cached token arrays, one
     // plan-literal conjunction per query — no join, no second tokenize
     def termOk(t: String): Column =
@@ -562,7 +547,7 @@ object Vocabulary {
       .groupBy("term")
       .agg(sum(when(col("__a"), 1L).otherwise(0L)).as("ca"),
         sum(when(!col("__a"), 1L).otherwise(0L)).as("cb"))
-    val cached = tracked(counts.persist())
+    val cached = Scope.persist(counts)
     def top(side: String): DataFrame = {
       val c = col(if (side == "a") "ca" else "cb")
       cached.where(c > 0L)
@@ -617,8 +602,7 @@ object Vocabulary {
     *
     * Scale shape: ONE cached tokenization feeds BOTH ranking variants
     * (two bounded top-k frames); the match join and folds run on
-    * |queries|·k rows. Caller epilogue: materialize, then
-    * releaseCaches(). */
+    * |queries|·k rows. Consume the result inside a Scope. */
   def rboCompare(
       docs: DataFrame,
       textCol: String,
@@ -644,14 +628,12 @@ object Vocabulary {
     // postings pipeline (guide §1.2: fix the distributed algorithm
     // before anything else; measured ~2× on x202's corpus scan). Each
     // ranking still persists: it feeds the match join AND its own count.
-    val scored = tracked(
-      bm25ScorePair(tokArr, qterms, k1 = 1.2, b1 = 0.75, b2 = 0.0).persist())
-    val a = tracked(rankFromScores(scored, "score1", k)
-      .select(col("qid"), col("doc"), col("rank").as("ra"))
-      .persist())
-    val bSide = tracked(rankFromScores(scored, "score2", k)
-      .select(col("qid"), col("doc"), col("rank").as("rb"))
-      .persist())
+    val scored = Scope.persist(
+      bm25ScorePair(tokArr, qterms, k1 = 1.2, b1 = 0.75, b2 = 0.0))
+    val a = Scope.persist(rankFromScores(scored, "score1", k)
+      .select(col("qid"), col("doc"), col("rank").as("ra")))
+    val bSide = Scope.persist(rankFromScores(scored, "score2", k)
+      .select(col("qid"), col("doc"), col("rank").as("rb")))
     // tail(m) = Σ_{d=m..k} (1−p)·p^{d−1}/d — literal doubles, shared
     // verbatim with the oracle
     val coeff = (1 to k).map(d => (1.0 - p) * math.pow(p, d - 1) / d)
@@ -692,7 +674,7 @@ object Vocabulary {
     * feeds the term profile, the df lookup, AND the BM25 core (postings,
     * dl, stats), where the naive lineage re-tokenized the corpus ~5×.
     * Nothing collects — the term selection stays a DataFrame end to end.
-    * Call releaseCaches() once the result is materialized. */
+    * Consume the result inside a Scope. */
   def moreLikeThis(
       docs: DataFrame,
       textCol: String,
@@ -713,10 +695,9 @@ object Vocabulary {
     // df(term) is just the per-term row count of that frame — before
     // this, the corpus postings exploded + joined twice (once for dfs,
     // once inside bm25RankCore; guide §1.2 / §2.4).
-    val tfAll = tracked(toks
+    val tfAll = Scope.persist(toks
       .join(broadcast(qtf.select("term")), Seq("term"))
-      .groupBy("doc", "term").agg(count(lit(1)).cast("double").as("tf"))
-      .persist())
+      .groupBy("doc", "term").agg(count(lit(1)).cast("double").as("tf")))
     val dfs = tfAll.groupBy("term").agg(count(lit(1)).cast("double").as("qdf"))
     val nDocs = tokArr.agg(count(lit(1)).cast("double").as("qn"))
     val top = qtf.join(broadcast(dfs), Seq("term"))
@@ -797,10 +778,9 @@ object Vocabulary {
     val vocab = docs
       .select(explode(tokens(col(textCol))).as("token"))
       .groupBy("token").agg(count(lit(1)).as("cnt"))
-    val parted = tracked(
+    val parted = Scope.persist(
       vocab.repartitionByRange(nPart, desc("cnt"), col("token"))
-        .withColumn("__pid", spark_partition_id())
-        .persist())
+        .withColumn("__pid", spark_partition_id()))
     val perPid = parted.groupBy("__pid").agg(sum("cnt").as("__s"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
     val total = perPid.map(_._2).sum
@@ -883,7 +863,7 @@ object Vocabulary {
       .select(least(col("wa"), col("wb")).as("w1"),
         greatest(col("wa"), col("wb")).as("w2"))
       .distinct()
-    val und = tracked(pairs.persist())
+    val und = Scope.persist(pairs)
     val ids = und.select(col("w1").as("word")).unionAll(und.select(col("w2")))
       .distinct()
       .select(col("word"), xxhash64(col("word")).as("node"))
@@ -895,8 +875,6 @@ object Vocabulary {
       .select(col("word"), col("rank_fp"), col("deg").as("degree"))
       .orderBy(desc("rank_fp"), col("word"))
       .limit(topK)
-    // the pagerank caches belong to Graph's registry; the pair projection
-    // to this object's — both released by the caller's releaseCaches
   }
 
   /** Skip-gram (center, context) pair counts (Mikolov 2013's word2vec
@@ -909,16 +887,15 @@ object Vocabulary {
     * each offset is a codegen'd slice/zip over the cached arrays (no
     * joins, no windows); the symmetric union feeds one hash aggregation
     * with map-side partials, so the exchange carries distinct-pair rows,
-    * never positions. Caller epilogue: materialize, then
-    * releaseCaches(). */
+    * never positions. Consume the result inside a Scope. */
   def skipgramPairs(
       df: DataFrame,
       textCol: String,
       idCol: String,
       window: Int = 2): DataFrame = {
     require(window >= 1 && window <= 16, "skipgramPairs: window in [1, 16]")
-    val toks = tracked(df.select(tokens(col(textCol)).as("tk"))
-      .where(size(col("tk")) >= 2).persist())
+    val toks = Scope.persist(df.select(tokens(col(textCol)).as("tk"))
+      .where(size(col("tk")) >= 2))
     val pairs = (1 to window).map { d =>
       val n = greatest(size(col("tk")) - d, lit(0))
       toks

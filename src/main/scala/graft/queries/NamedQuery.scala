@@ -8,14 +8,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * by name before hashing); both sides carry a total ORDER BY so row order is
   * deterministic in either engine.
   *
-  * Output-cache contract: many builders end with the
-  * `out.cache(); out.count(); <operator>.releaseCaches(); out` epilogue —
-  * internal operator caches release inside the builder, but the OUTPUT
-  * cache is deliberately left pinned for the caller to consume. Bench and
-  * Verify clear it per query (`cacheManager.clearCache()` +
-  * `getPersistentRDDs.unpersist`); any OTHER caller of SparkEntry.queries
-  * must do the same after consuming the frame or it leaks one output cache
-  * per invocation. */
+  * Cache contract: `fn` returns a lazy frame. The caches and checkpoints
+  * its operators make are tracked by the caller's open
+  * [[graft.operators.Scope]], so a caller builds AND consumes the frame
+  * inside one `Scope { ... }`, which releases all of them when it closes
+  * (Verify, Bench, BenchScale and Plans do). A caller that opens no Scope
+  * owns whatever the query left persisted. */
 final case class NamedQuery(
     fn: (SparkSession, String) => DataFrame,
     oracle: Option[String])

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Bootstrap, BpeTrainer, C4Filters, Chunking, Clustering, Conformal, CorpusStats, Curriculum, DataQuality, Dedup, Evaluation, FuzzyLinkage, Graph, ImportanceWeights, LabelQa, Layout, Linalg, LineDedup, LshPlanner, MarketBasket, MixtureSampling, Multimodal, NaiveBayes, NgramLm, OptimalTransport, Outliers, ParagraphDedup, QualityRules, RadixSelect, Seasonal, SequenceMining, SequencePacking, Sharding, SignalFusion, Similarity, Sketches, Skew, SubstringDedup, Survival, TemporalSplit, TextAnalysis, TextExtraction, TrainingDataPipeline, Vocabulary}
+import graft.operators.{Bootstrap, BpeTrainer, C4Filters, Chunking, Clustering, Conformal, CorpusStats, Curriculum, DataQuality, Dedup, Evaluation, FuzzyLinkage, Graph, ImportanceWeights, LabelQa, Layout, Linalg, LineDedup, LshPlanner, MarketBasket, MixtureSampling, Multimodal, NaiveBayes, NgramLm, OptimalTransport, Outliers, ParagraphDedup, QualityRules, RadixSelect, Scope, Seasonal, SequenceMining, SequencePacking, Sharding, SignalFusion, Similarity, Sketches, Skew, SubstringDedup, Survival, TemporalSplit, TextAnalysis, TextExtraction, TrainingDataPipeline, Vocabulary}
 
 /** LLM-pipeline operators (graft.operators) exposed through the driver's
   * query/oracle contract. Everything expressible in ANSI SQL carries an
@@ -69,6 +69,14 @@ object OperatorQueries {
     "WITH " + base + ",\n" + iters.mkString(",\n")
   }
 
+  /** A QgramIndex built for one query call: its frames go to the caller's
+    * Scope instead of living until `release()`. */
+  private def scoped(idx: FuzzyLinkage.QgramIndex): FuzzyLinkage.QgramIndex = {
+    Seq(idx.side, idx.dfreq, idx.prefix, idx.prefixCounts, idx.bandedSig, idx.lenHist)
+      .foreach(Scope.persist)
+    idx
+  }
+
   private def dkMul64(a: String, c: Long): String = {
     val cl = c & 0xffffffffL
     val ch = c >>> 32
@@ -124,11 +132,7 @@ object OperatorQueries {
         val pairs = Dedup.minhashNearDuplicates(Tables.documents(s, dir),
           "text", "doc_id", shingleSize = 3, bands = 16, rowsPerBand = 4,
           threshold = 0.5)
-        val out = Dedup.duplicateClusters(pairs).orderBy("id")
-        val materialized = out.cache()
-        materialized.count()
-        Dedup.releaseCaches()
-        materialized
+        Dedup.duplicateClusters(pairs).orderBy("id")
       },
       """WITH RECURSIVE t AS (
         |  SELECT doc_id,
@@ -674,13 +678,9 @@ object OperatorQueries {
         val docs = Tables.documents(s, dir)
           .select(col("doc_id"),
             size(expr("regexp_extract_all(text, '\\\\S+', 0)")).cast("long").as("n_tokens"))
-        val out = Sharding.assignShards(docs, "doc_id", "n_tokens", budget = 5000L)
+        Sharding.assignShards(docs, "doc_id", "n_tokens", budget = 5000L)
           .select("doc_id", "n_tokens", "shard")
           .orderBy("doc_id")
-        val materialized = out.cache()
-        materialized.count() // settle the ranged layout before releasing it
-        Sharding.releaseShardCaches()
-        materialized
       },
       """SELECT doc_id,
         |  CAST(length(regexp_extract_all(text, '\S+')) AS BIGINT) AS n_tokens,
@@ -742,13 +742,9 @@ object OperatorQueries {
         val docs = Tables.documents(s, dir)
           .select(col("doc_id"),
             size(expr("regexp_extract_all(text, '\\\\S+', 0)")).cast("long").as("n_tokens"))
-        val out = SequencePacking.packGreedy(docs, "doc_id", "n_tokens",
+        SequencePacking.packGreedy(docs, "doc_id", "n_tokens",
           contextLen = 2000L, shardBudget = 10000L)
           .orderBy("doc_id")
-        val materialized = out.cache()
-        materialized.count() // settle the ranged layout before releasing it
-        Sharding.releaseShardCaches()
-        materialized
       },
       """WITH docs AS (
         |  SELECT doc_id, CAST(length(regexp_extract_all(text, '\S+')) AS BIGINT) AS n_tokens,
@@ -782,12 +778,8 @@ object OperatorQueries {
     // ln() last-ulp differences between engines cannot flip the hash.
     "x26_ngram_lm_score" -> sql(
       (s, dir) => {
-        val out = NgramLm.bigramLmScore(Tables.documents(s, dir), "text", "doc_id")
+        NgramLm.bigramLmScore(Tables.documents(s, dir), "text", "doc_id")
           .orderBy("doc_id")
-        val materialized = out.cache()
-        materialized.count()
-        NgramLm.releaseCaches()
-        materialized
       },
       """WITH t AS (
         |  SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\s+'), x -> x <> '') AS toks
@@ -1014,14 +1006,10 @@ object OperatorQueries {
     // single-partition window; the oracle IS that global window.
     "x34_global_shuffle" -> sql(
       (s, dir) => {
-        val out = Sharding.shufflePositions(
+        Sharding.shufflePositions(
           Tables.documents(s, dir).select("doc_id"), "doc_id", seed = "42")
           .select("doc_id", "pos")
           .orderBy("doc_id")
-        val materialized = out.cache()
-        materialized.count() // settle the ranged layout before releasing it
-        Sharding.releaseShardCaches()
-        materialized
       },
       """SELECT doc_id,
         |  row_number() OVER (ORDER BY md5('42:' || CAST(doc_id AS VARCHAR)), doc_id) - 1 AS pos
@@ -1079,29 +1067,22 @@ object OperatorQueries {
                 lit("x37: doc_id exceeds Long.MaxValue / 2^20; packed chunk_id would overflow")))
               .otherwise(col("doc_id") * base + col("chunk_idx")))
         // packed feeds BOTH the bin-order pass and the final join — cache it
-        // so the groupByKey pack shuffle runs once (released below with the
-        // shard layouts)
-        val packed = SequencePacking.packGreedy(
+        // so the groupByKey pack shuffle runs once
+        val packed = Scope.persist(SequencePacking.packGreedy(
           chunks.select(col("chunk_id"), col("n_tokens")),
-          "chunk_id", "n_tokens", contextLen = 64L, shardBudget = 4096L)
-          .cache()
+          "chunk_id", "n_tokens", contextLen = 64L, shardBudget = 4096L))
         val bins = packed.select(col("shard"), col("bin")).distinct()
           .withColumn("bin_key", col("shard") * 1048576L + col("bin"))
         val order = Sharding.shufflePositions(bins, "bin_key", seed = "v1")
           .withColumnRenamed("pos", "bin_pos")
           .select("shard", "bin", "bin_pos")
-        val out = packed.join(order, Seq("shard", "bin"))
+        packed.join(order, Seq("shard", "bin"))
           .select(
             // integral div: fp division would lose precision past 2^53
             expr(s"chunk_id div $base").as("doc_id"),
             (col("chunk_id") % base).as("chunk_idx"),
             col("n_tokens"), col("shard"), col("bin"), col("bin_pos"))
           .orderBy("doc_id", "chunk_idx")
-        val materialized = out.cache()
-        materialized.count() // settle the ranged layouts before releasing
-        packed.unpersist(blocking = false)
-        Sharding.releaseShardCaches()
-        materialized
       },
       """WITH t AS (
         |  SELECT doc_id, list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS toks
@@ -1297,13 +1278,9 @@ object OperatorQueries {
     // exactly — a full hash-match on the weights.
     "x43_dsir_weights" -> sql(
       (s, dir) => {
-        val out = ImportanceWeights.weightsAgainstSubset(
+        ImportanceWeights.weightsAgainstSubset(
           Tables.documents(s, dir), col("lang") === "en", "text", "doc_id")
           .orderBy("doc_id")
-        val materialized = out.cache()
-        materialized.count()
-        ImportanceWeights.releaseCaches()
-        materialized
       },
       s"""WITH t AS (
         |  SELECT doc_id, lang,
@@ -1639,14 +1616,10 @@ object OperatorQueries {
     // arithmetic AND the distributed rank both replay exactly.
     "x48_curriculum_buckets" -> sql(
       (s, dir) => {
-        val out = Curriculum.difficultyBuckets(
+        Curriculum.difficultyBuckets(
           Tables.documents(s, dir), "n_chars", "doc_id", nBuckets = 10)
           .select("doc_id", "n_chars", "bucket")
           .orderBy("doc_id")
-        val materialized = out.cache()
-        materialized.count()
-        Sharding.releaseShardCaches()
-        materialized
       },
       """SELECT doc_id, n_chars,
         |  CAST(ntile(10) OVER (ORDER BY n_chars, doc_id) AS BIGINT) AS bucket
@@ -1727,14 +1700,10 @@ object OperatorQueries {
     // double-row_number replay.
     "x51_source_interleave" -> sql(
       (s, dir) => {
-        val out = Sharding.interleavePositions(
+        Sharding.interleavePositions(
           Tables.documents(s, dir).select("doc_id", "source"), "source", "doc_id")
           .select("doc_id", "source", "pos")
           .orderBy("doc_id")
-        val materialized = out.cache()
-        materialized.count()
-        Sharding.releaseShardCaches()
-        materialized
       },
       """WITH r AS (
         |  SELECT doc_id, source,
@@ -1775,14 +1744,9 @@ object OperatorQueries {
       (s, dir) => {
         val scored = NgramLm.bigramLmScore(Tables.documents(s, dir), "text", "doc_id")
           .select("doc_id", "lm_score")
-        val out = Curriculum.difficultyBuckets(scored, "lm_score", "doc_id", nBuckets = 3)
+        Curriculum.difficultyBuckets(scored, "lm_score", "doc_id", nBuckets = 3)
           .select("doc_id", "lm_score", "bucket")
           .orderBy("doc_id")
-        val materialized = out.cache()
-        materialized.count()
-        NgramLm.releaseCaches()
-        Sharding.releaseShardCaches()
-        materialized
       },
       """WITH t AS (
         |  SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\s+'), x -> x <> '') AS toks
@@ -1896,12 +1860,8 @@ object OperatorQueries {
         val pairs = Dedup.minhashNearDuplicates(docs, "text", "doc_id",
           shingleSize = 3, bands = 16, rowsPerBand = 4, threshold = 0.5)
         val clusters = Dedup.duplicateClusters(pairs)
-        val out = Dedup.clusterRepresentatives(clusters, docs, "doc_id", "n_chars")
+        Dedup.clusterRepresentatives(clusters, docs, "doc_id", "n_chars")
           .orderBy("id")
-        val materialized = out.cache()
-        materialized.count()
-        Dedup.releaseCaches()
-        materialized
       },
       """WITH RECURSIVE t AS (
         |  SELECT doc_id,
@@ -2143,7 +2103,7 @@ object OperatorQueries {
         val pairs = Dedup.minhashNearDuplicates(docs, "text", "doc_id",
           shingleSize = 3, bands = 16, rowsPerBand = 4, threshold = 0.5)
         val clusters = Dedup.duplicateClusters(pairs)
-        val out = docs.select(col("doc_id").as("id"), col("source"))
+        docs.select(col("doc_id").as("id"), col("source"))
           .join(clusters, Seq("id"), "left")
           .groupBy("source")
           .agg(
@@ -2154,10 +2114,6 @@ object OperatorQueries {
             floor(col("n_dup_docs") / col("n_docs") * lit(10000.0) + lit(0.5))
               / lit(10000.0))
           .orderBy("source")
-        val materialized = out.cache()
-        materialized.count()
-        Dedup.releaseCaches()
-        materialized
       },
       """WITH RECURSIVE t AS (
         |  SELECT doc_id,
@@ -2203,7 +2159,7 @@ object OperatorQueries {
         val docs = Tables.documents(s, dir)
           .select(col("doc_id"),
             size(expr("regexp_extract_all(text, '\\\\S+', 0)")).cast("long").as("n_tokens"))
-        val out = Sharding.assignShards(docs, "doc_id", "n_tokens", budget = 5000L)
+        Sharding.assignShards(docs, "doc_id", "n_tokens", budget = 5000L)
           .groupBy("shard")
           .agg(
             count(lit(1)).as("n_docs"),
@@ -2212,10 +2168,6 @@ object OperatorQueries {
               transform(sort_array(collect_list(col("doc_id"))), _.cast("string"))), 256)
               .as("content_sha256"))
           .orderBy("shard")
-        val materialized = out.cache()
-        materialized.count() // settle the ranged layout before releasing it
-        Sharding.releaseShardCaches()
-        materialized
       },
       """WITH s AS (
         |  SELECT doc_id,
@@ -2242,15 +2194,11 @@ object OperatorQueries {
         val index = Dedup.buildMinhashIndex(
           docs.where(col("doc_id") % 2 === 0), "text", "doc_id",
           shingleSize = 3, bands = 16, rowsPerBand = 4)
-        val out = Dedup.incrementalNearDuplicates(
+        Dedup.incrementalNearDuplicates(
           docs.where(col("doc_id") % 2 === 1), index, "text", "doc_id",
           shingleSize = 3, bands = 16, rowsPerBand = 4, threshold = 0.5)
           .withColumn("jaccard", round(col("jaccard"), 4))
           .orderBy("id_a", "id_b")
-        val materialized = out.cache()
-        materialized.count()
-        Dedup.releaseCaches()
-        materialized
       },
       """WITH t AS (
         |  SELECT doc_id,
@@ -2780,14 +2728,10 @@ object OperatorQueries {
         val dirty = c.select(col("c_custkey"),
           expr("concat(substr(c_name, 1, 9 + c_custkey % 9), " +
             "substr(c_name, 11 + c_custkey % 9))").as("dirty_name"))
-        val out = FuzzyLinkage.bestMatch(clean, dirty, "c_custkey", "c_name",
+        FuzzyLinkage.bestMatch(clean, dirty, "c_custkey", "c_name",
           "c_custkey", "dirty_name", neighborhood = 8, maxDist = 2)
           .withColumn("dist", col("dist").cast("long"))
           .orderBy("dirty_id")
-        val materialized = out.cache()
-        materialized.count()
-        Sharding.releaseShardCaches()
-        materialized
       },
       """WITH clean AS (SELECT c_custkey AS id, c_name AS val, 0 AS src FROM customer),
         |dirty AS (
@@ -2821,14 +2765,10 @@ object OperatorQueries {
     // 4-decimal-rounded score so ln() ulps can't reorder the top-k.
     "x81_bm25_search" -> sql(
       (s, dir) => {
-        val out = Vocabulary.bm25TopK(Tables.documents(s, dir), "text", "doc_id",
+        Vocabulary.bm25TopK(Tables.documents(s, dir), "text", "doc_id",
           Seq("q1" -> "merge sort", "q2" -> "hash join",
             "q3" -> "window scan", "q4" -> "slow query"), k = 10)
           .orderBy("qid", "rank")
-        val materialized = out.cache()
-        materialized.count()
-        Vocabulary.releaseCaches()
-        materialized
       },
       """WITH dl AS (
         |  SELECT doc_id AS doc,
@@ -3031,14 +2971,10 @@ object OperatorQueries {
     // filtering principle, paying Σ prefix-postings² instead.
     "x86_prefix_jaccard" -> sql(
       (s, dir) => {
-        val out = Dedup.prefixJaccardPairs(Tables.documents(s, dir),
+        Dedup.prefixJaccardPairs(Tables.documents(s, dir),
           "text", "doc_id", threshold = 0.5, shingleSize = 3)
           .withColumn("jaccard", round(col("jaccard"), 4))
           .orderBy("id_a", "id_b")
-        val materialized = out.cache()
-        materialized.count()
-        Dedup.releaseCaches()
-        materialized
       },
       """WITH t AS (
         |  SELECT doc_id,
@@ -3068,14 +3004,10 @@ object OperatorQueries {
     // arrays.
     "x87_kmv_overlap" -> sql(
       (s, dir) => {
-        val out = Sketches.kmvSourceOverlap(
+        Sketches.kmvSourceOverlap(
           Tables.documents(s, dir), "text", "source",
           shingleSize = 3, k = 64)
           .orderBy("source_a", "source_b")
-        val materialized = out.cache()
-        materialized.count()
-        Sketches.releaseCaches()
-        materialized
       },
       """WITH t AS (
         |  SELECT source,
@@ -3143,13 +3075,9 @@ object OperatorQueries {
         val pairs = Dedup.minhashNearDuplicates(docs, "text", "doc_id",
           shingleSize = 3, bands = 16, rowsPerBand = 4, threshold = 0.5)
         val clusters = Dedup.duplicateClusters(pairs)
-        val out = Dedup.softDedupReport(
+        Dedup.softDedupReport(
           docs.select("doc_id", "source"), "doc_id", clusters, seed = "sd")
           .orderBy("doc_id")
-        val materialized = out.cache()
-        materialized.count()
-        Dedup.releaseCaches()
-        materialized
       },
       """WITH RECURSIVE t AS (
         |  SELECT doc_id,
@@ -3203,13 +3131,9 @@ object OperatorQueries {
     // rank, the boundary picks, and every window count.
     "x89_embargo_split" -> sql(
       (s, dir) => {
-        val out = TemporalSplit.walkForwardFolds(Tables.events(s, dir),
+        TemporalSplit.walkForwardFolds(Tables.events(s, dir),
           "ts", "event_id", nFolds = 4, embargoMicros = 172800000000L)
           .orderBy("fold")
-        val materialized = out.cache()
-        materialized.count()
-        Sharding.releaseShardCaches()
-        materialized
       },
       """WITH e AS (SELECT event_id, epoch_us(ts) AS us FROM events),
         |n AS (SELECT count(*) AS n, max(us) AS maxus FROM e),
@@ -3470,13 +3394,9 @@ object OperatorQueries {
     // stays a broadcast DataFrame end to end; nothing collects.
     "x96_more_like_this" -> sql(
       (s, dir) => {
-        val out = Vocabulary.moreLikeThis(Tables.documents(s, dir), "text", "doc_id",
+        Vocabulary.moreLikeThis(Tables.documents(s, dir), "text", "doc_id",
           queryDocId = 7L, nTerms = 6, k = 15)
           .orderBy("rank")
-        val materialized = out.cache()
-        materialized.count()
-        Vocabulary.releaseCaches()
-        materialized
       },
       """WITH dl AS (
         |  SELECT doc_id AS doc,
@@ -3550,15 +3470,11 @@ object OperatorQueries {
     // cosine pairs, recursive-CTE components, and the three counts.
     "x99_embedding_curation" -> sql(
       (s, dir) => {
-        val out = TrainingDataPipeline.curateEmbeddings(Tables.embeddings(s, dir),
+        TrainingDataPipeline.curateEmbeddings(Tables.embeddings(s, dir),
           "vec_id", "embedding", "label",
           minCosCentroid = 0.0, dupThreshold = 0.35,
           nCells = 16, seed = "v1", passes = 2)
           .orderBy("label")
-        val materialized = out.cache()
-        materialized.count()
-        TrainingDataPipeline.releaseFlagshipCaches()
-        materialized
       },
       """WITH RECURSIVE
         |d AS (
@@ -3643,16 +3559,12 @@ object OperatorQueries {
                 concat_ws(" ", slice(col("t"), (i * 8 + 1).cast("int"), lit(8))),
                 when(i % 3 =!= 0, lit(".")).otherwise(lit("")))))
             .as("text"))
-        val out = TrainingDataPipeline.curationFlagship(
+        TrainingDataPipeline.curationFlagship(
           lined, "text", "doc_id", "source",
           benchmark = Tables.documents(s, dir).where(col("doc_id") < 20),
           badPhrases = Seq("customer line", "spark group"),
           mixRates = Map("src0" -> 0.5, "src1" -> 0.5, "src2" -> 0.25),
           nShards = 8)
-        val materialized = out.cache()
-        materialized.count()
-        TrainingDataPipeline.releaseFlagshipCaches()
-        materialized
       },
       """WITH t0 AS (
         |  SELECT doc_id, source,
@@ -4057,7 +3969,7 @@ object OperatorQueries {
         val g = Dedup.ngramJaccardPairs(docs, "text", "doc_id",
           n = 5, threshold = 0.8)
           .select(col("id_a"), col("id_b"), lit("g").as("src"))
-        val out = m.union(sh).union(g)
+        m.union(sh).union(g)
           .groupBy("id_a", "id_b")
           .agg(
             (max(when(col("src") === "m", 1).otherwise(0)) === 1).as("in_minhash"),
@@ -4066,10 +3978,6 @@ object OperatorQueries {
           .groupBy("in_minhash", "in_simhash", "in_gram")
           .agg(count(lit(1)).as("n_pairs"))
           .orderBy("in_minhash", "in_simhash", "in_gram")
-        val materialized = out.cache()
-        materialized.count()
-        Dedup.releaseCaches()
-        materialized
       },
       s"""WITH mt AS (
         |  SELECT doc_id,
@@ -4328,7 +4236,7 @@ object OperatorQueries {
             struct((col("p") * 2 + 1).as("src"), (col("c") * 2).as("dst"))))
             .as("__e"))
           .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
-        val out = Graph.pageRankFixedPoint(edges, "src", "dst", iters = 5)
+        Graph.pageRankFixedPoint(edges, "src", "dst", iters = 5)
           .select(
             when(col("node") % 2 === 0, lit("customer"))
               .otherwise(lit("supplier")).as("node_type"),
@@ -4336,10 +4244,6 @@ object OperatorQueries {
             col("deg").as("out_deg"),
             col("rank_fp"))
           .orderBy(desc("rank_fp"), col("node_type"), col("entity_key"))
-        val materialized = out.cache()
-        materialized.count()
-        Graph.releaseCaches()
-        materialized
       },
       s"""WITH base AS MATERIALIZED (
         |  SELECT DISTINCT o.o_custkey AS c, l.l_suppkey AS p
@@ -4617,14 +4521,10 @@ object OperatorQueries {
         val sig = docs.select(col("doc_id"), col("source"), col("n_chars"),
             call_function("graft_quality_score", col("text")).as("q"))
           .join(broadcast(prior), Seq("source"))
-        val out = SignalFusion.fuseRanked(sig,
+        SignalFusion.fuseRanked(sig,
           Seq("q" -> 0.5, "n_chars" -> 0.2, "prior" -> 0.3),
           keep = Seq("doc_id"))
           .orderBy("rank")
-        val materialized = out.cache()
-        materialized.count()
-        Sharding.releaseShardCaches()
-        materialized
       },
       """WITH f AS MATERIALIZED (
         |  SELECT doc_id, source, n_chars, trim(text) AS txt,
@@ -4705,14 +4605,10 @@ object OperatorQueries {
     // basket, never the catalog.
     "x116_association_rules" -> sql(
       (s, dir) => {
-        val out = MarketBasket.associationRules(
+        MarketBasket.associationRules(
           Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_partkey")),
           "l_orderkey", "l_partkey", minPairCount = 2L, topK = 100)
           .orderBy("rank")
-        val materialized = out.cache()
-        materialized.count()
-        MarketBasket.releaseCaches()
-        materialized
       },
       """WITH it AS MATERIALIZED (
         |  SELECT DISTINCT l_orderkey AS b, l_partkey AS itm FROM lineitem),
@@ -4773,7 +4669,7 @@ object OperatorQueries {
         // (orderBy+limit → TakeOrderedAndProject, per-partition heaps), then
         // the rank window runs on the 100-row result — never the full node
         // frame through one partition.
-        val out = ranked
+        ranked
           .orderBy(desc("rank_fp"), col("node_type"), col("entity_key"))
           .limit(100)
           .withColumn("rank", row_number().over(
@@ -4781,10 +4677,6 @@ object OperatorQueries {
               .orderBy(desc("rank_fp"), col("node_type"), col("entity_key")))
             .cast("long"))
           .orderBy("rank")
-        val materialized = out.cache()
-        materialized.count()
-        Graph.releaseCaches()
-        materialized
       },
       s"""WITH base AS MATERIALIZED (
         |  SELECT DISTINCT o.o_custkey AS c, l.l_suppkey AS p
@@ -4841,7 +4733,7 @@ object OperatorQueries {
         val edges = strong
           .select((col("c") * 2).as("src"), (col("p") * 2 + 1).as("dst"))
         val cc = Graph.connectedComponents(edges, "src", "dst")
-        val out = cc.groupBy("comp")
+        cc.groupBy("comp")
           .agg(count(lit(1)).as("size"),
             sum(when(col("node") % 2 === 0, 1L).otherwise(0L)).as("n_customers"),
             sum(when(col("node") % 2 === 1, 1L).otherwise(0L)).as("n_suppliers"))
@@ -4851,10 +4743,6 @@ object OperatorQueries {
             expr("comp div 2").as("canonical_key"),
             col("size"), col("n_customers"), col("n_suppliers"))
           .orderBy(desc("size"), col("canonical_type"), col("canonical_key"))
-        val materialized = out.cache()
-        materialized.count()
-        Graph.releaseCaches()
-        materialized
       },
       """WITH RECURSIVE p AS MATERIALIZED (
         |  SELECT o_custkey AS c, l_suppkey AS s, count(DISTINCT o.o_orderkey) AS cnt
@@ -4904,16 +4792,12 @@ object OperatorQueries {
           .select(col("p").as("x"), col("p2").as("y"))
           .distinct()
         val tc = Graph.triangleCounts(ed, "x", "y")
-        val out = tc.select(
+        tc.select(
             col("node").as("s_suppkey"), col("deg"), col("triangles"),
             when(col("deg") >= 2,
               expr("(2 * triangles * 1000000) div (deg * (deg - 1))"))
               .otherwise(lit(0L)).as("coef_ppm"))
           .orderBy(desc("triangles"), col("s_suppkey"))
-        val materialized = out.cache()
-        materialized.count()
-        Graph.releaseCaches()
-        materialized
       },
       """WITH p AS MATERIALIZED (
         |  SELECT o_custkey AS c, l_suppkey AS s, count(DISTINCT o.o_orderkey) AS cnt
@@ -4970,10 +4854,7 @@ object OperatorQueries {
           .when(col("n_chars") < 379, "mid").otherwise("long")
         val sp = length(col("text")) - length(regexp_replace(col("text"), " ", ""))
         val rb = when(sp < 38, "short").when(sp < 68, "mid").otherwise("long")
-        val out = Evaluation.agreementReport(d, ra, rb).cache()
-        out.count()
-        Evaluation.releaseCaches()
-        out
+        Evaluation.agreementReport(d, ra, rb)
       },
       """WITH r AS (
         |  SELECT
@@ -5194,13 +5075,9 @@ object OperatorQueries {
           .agg(countDistinct(o("o_orderkey")).as("cnt"))
           .where(col("cnt") >= 2)
           .select(col("c"), col("p"))
-        val out = Graph.hitsBipartite(strong, "c", "p", iters = 4)
+        Graph.hitsBipartite(strong, "c", "p", iters = 4)
           .select(col("side"), col("node").as("entity_key"), col("score_fp"))
           .orderBy("side", "entity_key")
-        val materialized = out.cache()
-        materialized.count()
-        Graph.releaseCaches()
-        materialized
       },
       hitsOracle(iters = 4)),
 
@@ -5224,13 +5101,9 @@ object OperatorQueries {
             struct(col("src"), col("dst")),
             struct(col("dst").as("src"), col("src").as("dst")))).as("__e"))
           .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
-        val out = Graph.deterministicWalks(sym, "src", "dst",
+        Graph.deterministicWalks(sym, "src", "dst",
           steps = 4, walksPerNode = 2)
           .orderBy("start", "widx", "step")
-        val materialized = out.cache()
-        materialized.count()
-        Graph.releaseCaches()
-        materialized
       },
       walksOracle(steps = 4)),
 
@@ -5241,13 +5114,9 @@ object OperatorQueries {
     // interpolation. The oracle replays the identical rank algebra.
     "x129_quantile_normalize" -> sql(
       (s, dir) => {
-        val out = SignalFusion.quantileNormalize(Tables.documents(s, dir),
+        SignalFusion.quantileNormalize(Tables.documents(s, dir),
           col("source"), col("n_chars"), col("doc_id"))
           .orderBy("id")
-        val materialized = out.cache()
-        materialized.count()
-        Sharding.releaseShardCaches()
-        materialized
       },
       """WITH e AS (SELECT source AS grp, n_chars AS s, doc_id AS id
         |  FROM documents),
@@ -5294,13 +5163,9 @@ object OperatorQueries {
           .agg(countDistinct(o("o_orderkey")).as("cnt"))
           .where(col("cnt") >= 2)
           .select(col("c"), col("p"))
-        val out = Graph.butterflyCounts(strong, "c", "p")
+        Graph.butterflyCounts(strong, "c", "p")
           .select(col("node").as("s_suppkey"), col("deg"), col("butterflies"))
           .orderBy(desc("butterflies"), col("s_suppkey"))
-        val materialized = out.cache()
-        materialized.count()
-        Graph.releaseCaches()
-        materialized
       },
       """WITH sp AS MATERIALIZED (
         |  SELECT o_custkey AS l, l_suppkey AS r
@@ -5397,7 +5262,7 @@ object OperatorQueries {
         val isNew = (expr("src div 2") + expr("dst div 2")) % 5 === 0
         val base = Graph.connectedComponents(
           edges.where(!isNew), "src", "dst")
-        val out = Graph.componentsIncremental(base,
+        Graph.componentsIncremental(base,
           edges.where(isNew), "src", "dst")
           .select(
             when(col("node") % 2 === 0, lit("customer"))
@@ -5407,10 +5272,6 @@ object OperatorQueries {
               .otherwise(lit("supplier")).as("canonical_type"),
             expr("comp div 2").as("canonical_key"))
           .orderBy("entity_type", "entity_key")
-        val materialized = out.cache()
-        materialized.count()
-        Graph.releaseCaches()
-        materialized
       },
       """WITH RECURSIVE p AS MATERIALIZED (
         |  SELECT o_custkey AS c, l_suppkey AS s, count(DISTINCT o.o_orderkey) AS cnt
@@ -5455,7 +5316,7 @@ object OperatorQueries {
           .select(col("o_custkey").as("c"), col("l_suppkey").as("p"))
           .distinct()
           .select((col("c") * 2).as("src"), (col("p") * 2 + 1).as("dst"))
-        val out = Graph.bfsLevels(edges, "src", "dst", seeds)
+        Graph.bfsLevels(edges, "src", "dst", seeds)
           .select(
             when(col("node") % 2 === 0, lit("customer"))
               .otherwise(lit("supplier")).as("entity_type"),
@@ -5463,10 +5324,6 @@ object OperatorQueries {
             col("dist"),
             expr("seed div 2").as("seed_custkey"))
           .orderBy("entity_type", "entity_key")
-        val materialized = out.cache()
-        materialized.count()
-        Graph.releaseCaches()
-        materialized
       },
       """WITH RECURSIVE base AS MATERIALIZED (
         |  SELECT DISTINCT o.o_custkey AS c, l.l_suppkey AS p
@@ -5516,7 +5373,7 @@ object OperatorQueries {
         // Top-100 epilogue, the x47 pattern: TakeOrdered the Σdeg² wedge-pair
         // frame down to 100 rows FIRST (per-partition heaps), then rank the
         // 100-row result — the full pair frame never crosses one partition.
-        val out = Graph.sharedNeighborScores(strong, "c", "p")
+        Graph.sharedNeighborScores(strong, "c", "p")
           .select(col("a").as("cust_a"), col("b").as("cust_b"),
             col("shared"), col("ra_fp"))
           .orderBy(desc("ra_fp"), col("cust_a"), col("cust_b"))
@@ -5526,10 +5383,6 @@ object OperatorQueries {
               .orderBy(desc("ra_fp"), col("cust_a"), col("cust_b")))
             .cast("long"))
           .orderBy("rank")
-        val materialized = out.cache()
-        materialized.count()
-        Graph.releaseCaches()
-        materialized
       },
       """WITH sp AS MATERIALIZED (
         |  SELECT o_custkey AS l, l_suppkey AS r
@@ -5566,14 +5419,10 @@ object OperatorQueries {
           .agg(countDistinct(o("o_orderkey")).as("cnt"))
           .where(col("cnt") >= 2)
           .select(col("c"), col("p"))
-        val out = Graph.recommendations(strong, "c", "p", k = 3)
+        Graph.recommendations(strong, "c", "p", k = 3)
           .select(col("l").as("custkey"), col("rank"),
             col("r").as("s_suppkey"), col("score_fp"), col("n_contributors"))
           .orderBy("custkey", "rank")
-        val materialized = out.cache()
-        materialized.count()
-        Graph.releaseCaches()
-        materialized
       },
       """WITH sp AS MATERIALIZED (
         |  SELECT o_custkey AS l, l_suppkey AS r
@@ -5617,17 +5466,13 @@ object OperatorQueries {
     // identity, so only observed cells materialize.
     "x139_tcloseness" -> sql(
       (s, dir) => {
-        val out = TextAnalysis.tClosenessAudit(
+        TextAnalysis.tClosenessAudit(
           Tables.documents(s, dir),
           quasi = Seq(
             "source" -> col("source"),
             "len_bucket" -> expr("n_chars div 100")),
           sensitive = col("lang"), tPpm = 200000)
           .orderBy("source", "len_bucket")
-        val materialized = out.cache()
-        materialized.count()
-        TextAnalysis.releaseCaches()
-        materialized
       },
       """WITH cells AS MATERIALIZED (
         |  SELECT source, (n_chars // 100)::BIGINT AS len_bucket, lang AS v,
@@ -5662,13 +5507,9 @@ object OperatorQueries {
     // chain over "doc:j", then mod total, then the cumulative-range map).
     "x140_negative_sampling" -> sql(
       (s, dir) => {
-        val out = Vocabulary.negativeSamples(Tables.documents(s, dir),
+        Vocabulary.negativeSamples(Tables.documents(s, dir),
           "text", "doc_id", k = 5)
           .orderBy("doc_id", "neg_idx")
-        val materialized = out.cache()
-        materialized.count()
-        Vocabulary.releaseCaches()
-        materialized
       },
       s"""WITH t AS (
         |  SELECT unnest(list_filter(string_split_regex(lower(trim(text)), '\\s+'), x -> x <> '')) AS tok
@@ -6028,13 +5869,9 @@ object OperatorQueries {
     // reads that cached frame (plan-audited single scan).
     "x134_series_health" -> sql(
       (s, dir) => {
-        val out = Seasonal.seriesHealthReport(Tables.events(s, dir),
+        Seasonal.seriesHealthReport(Tables.events(s, dir),
           col("event_type"), col("ts"), k = 3, h = 40, season = 7)
           .orderBy("series", "day")
-        val materialized = out.cache()
-        materialized.count()
-        Seasonal.releaseCaches()
-        materialized
       },
       """WITH d AS MATERIALIZED (
         |  SELECT event_type::VARCHAR AS series, ts::DATE AS day,
@@ -6095,13 +5932,9 @@ object OperatorQueries {
     // as integer ppm so the oracle hash-replays.
     "x151_containment_join" -> sql(
       (s, dir) => {
-        val out = Dedup.containmentPairs(Tables.documents(s, dir),
+        Dedup.containmentPairs(Tables.documents(s, dir),
           "text", "doc_id", threshold = 0.8, shingleSize = 3)
           .orderBy("id_a", "id_b")
-        val materialized = out.cache()
-        materialized.count()
-        Dedup.releaseCaches()
-        materialized
       },
       """WITH t AS (
         |  SELECT doc_id,
@@ -6169,14 +6002,10 @@ object OperatorQueries {
           expr("concat(substr(substr(text, 1, 40), 1, CAST(doc_id % 31 AS INT)), " +
             "substr(substr(text, 1, 40), CAST(doc_id % 31 AS INT) + 2))")
             .as("dirty_title"))
-        val out = FuzzyLinkage.qgramJoin(clean, dirty, "doc_id", "title",
+        FuzzyLinkage.qgramJoin(clean, dirty, "doc_id", "title",
           "doc_id", "dirty_title", maxDist = 1, q = 3)
           .withColumnsRenamed(Map("left_id" -> "clean_id", "right_id" -> "dirty_id"))
           .orderBy("clean_id", "dirty_id")
-        val materialized = out.cache()
-        materialized.count()
-        FuzzyLinkage.releaseCaches()
-        materialized
       },
       """WITH clean AS (
         |  SELECT doc_id AS clean_id, substr(text, 1, 40) AS val FROM documents),
@@ -6198,12 +6027,8 @@ object OperatorQueries {
     // collision-free hashing on this corpus).
     "x155_kneser_ney_score" -> sql(
       (s, dir) => {
-        val out = NgramLm.knBigramScore(Tables.documents(s, dir), "text", "doc_id")
+        NgramLm.knBigramScore(Tables.documents(s, dir), "text", "doc_id")
           .orderBy("doc_id")
-        val materialized = out.cache()
-        materialized.count()
-        NgramLm.releaseCaches()
-        materialized
       },
       """WITH t AS (
         |  SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\s+'), x -> x <> '') AS toks
@@ -6239,13 +6064,8 @@ object OperatorQueries {
     // match loudly.
     "x156_textrank_keywords" -> sql(
       (s, dir) => {
-        val out = Vocabulary.textrankKeywords(Tables.documents(s, dir),
+        Vocabulary.textrankKeywords(Tables.documents(s, dir),
           "text", "doc_id", iters = 5, topK = 20)
-        val materialized = out.cache()
-        materialized.count()
-        Vocabulary.releaseCaches()
-        Graph.releaseCaches()
-        materialized
       },
       s"""WITH t AS (
         |  SELECT list_filter(string_split_regex(lower(trim(text)), '\\s+'), x -> x <> '') AS toks
@@ -6300,13 +6120,9 @@ object OperatorQueries {
         val sem = Similarity.bruteForceTopK(emb, probe, "vec_id", "embedding",
           "qid", "qvec", k = 100)
           .select(col("vec_id").as("doc_id"), col("rank"))
-        val out = SignalFusion.rrfFuse(Seq(lex, sem), "doc_id", "rank",
+        SignalFusion.rrfFuse(Seq(lex, sem), "doc_id", "rank",
           kRrf = 60, topK = 20)
           .withColumnRenamed("id", "doc_id")
-        val materialized = out.cache()
-        materialized.count()
-        Vocabulary.releaseCaches()
-        materialized
       },
       """WITH dl AS (
         |  SELECT doc_id AS doc,
@@ -6394,14 +6210,10 @@ object OperatorQueries {
       (s, dir) => {
         val scores = Linalg.pcaProject(Tables.embeddings(s, dir), "embedding",
           dim = 64, carry = Seq("vec_id"), iters = 12)
-        val out = Clustering.gridDbscan(scores, "vec_id", "pc1", "pc2",
+        Clustering.gridDbscan(scores, "vec_id", "pc1", "pc2",
           eps = 0.03, minPts = 5)
           .withColumnRenamed("id", "vec_id")
           .orderBy("vec_id")
-        val materialized = out.cache()
-        materialized.count()
-        Clustering.releaseCaches()
-        materialized
       },
       s"""WITH RECURSIVE $pcaFitCtes,
         |pts AS MATERIALIZED (
@@ -6459,13 +6271,9 @@ object OperatorQueries {
           dim = 64, carry = Seq("vec_id"), iters = 12)
         val labels = Clustering.gridDbscan(scores, "vec_id", "pc1", "pc2",
           eps = 0.03, minPts = 5)
-        val out = Clustering.clusterCap(labels, "id", "cluster", cap = 10)
+        Clustering.clusterCap(labels, "id", "cluster", cap = 10)
           .withColumnRenamed("id", "vec_id")
           .orderBy("vec_id")
-        val materialized = out.cache()
-        materialized.count()
-        Clustering.releaseCaches()
-        materialized
       },
       s"""WITH RECURSIVE $pcaFitCtes,
         |pts AS MATERIALIZED (
@@ -6580,14 +6388,10 @@ object OperatorQueries {
     // order, so the TakeOrdered cut replays exactly.
     "x163_skipgram_pairs" -> sql(
       (s, dir) => {
-        val out = Vocabulary.skipgramPairs(Tables.documents(s, dir),
+        Vocabulary.skipgramPairs(Tables.documents(s, dir),
           "text", "doc_id", window = 2)
           .orderBy(desc("n"), col("center"), col("context"))
           .limit(500)
-        val materialized = out.cache()
-        materialized.count()
-        Vocabulary.releaseCaches()
-        materialized
       },
       """WITH t AS (
         |  SELECT list_filter(string_split_regex(lower(trim(text)), '\s+'), x -> x <> '') AS toks
@@ -6625,11 +6429,7 @@ object OperatorQueries {
               "0L, (acc, x) -> acc + x) * 1000000L) div h").as("a_ppm"),
             expr("(aggregate(transform(slice(tk, h + 1, nt - h), x -> length(x)), " +
               "0L, (acc, x) -> acc + x) * 1000000L) div (nt - h)").as("b_ppm"))
-        val out = Evaluation.wilcoxonSignedRank(paired, col("a_ppm"), col("b_ppm"))
-        val materialized = out.cache()
-        materialized.count()
-        Evaluation.releaseCaches()
-        materialized
+        Evaluation.wilcoxonSignedRank(paired, col("a_ppm"), col("b_ppm"))
       },
       """WITH t AS (
         |  SELECT list_filter(string_split_regex(lower(trim(text)), '\s+'), x -> x <> '') AS toks
@@ -6676,11 +6476,7 @@ object OperatorQueries {
         val pairs = o.join(l, o("o_orderkey") === l("l_orderkey"))
           .select((col("o_custkey") * 2).as("src"),
             (col("l_suppkey") * 2 + 1).as("dst"))
-        val out = Graph.degreeAssortativity(pairs, "src", "dst")
-        val materialized = out.cache()
-        materialized.count()
-        Graph.releaseCaches()
-        materialized
+        Graph.degreeAssortativity(pairs, "src", "dst")
       },
       """WITH p AS (
         |  SELECT o.o_custkey * 2 AS src, l.l_suppkey * 2 + 1 AS dst
@@ -6740,11 +6536,7 @@ object OperatorQueries {
           .select(col("n_chars").cast("long").as("x"),
             expr("regexp_count(text, '\\\\S+')")
               .cast("long").as("y"))
-        val out = Evaluation.spearmanRho(t, col("x"), col("y"))
-        val materialized = out.cache()
-        materialized.count()
-        Evaluation.releaseCaches()
-        materialized
+        Evaluation.spearmanRho(t, col("x"), col("y"))
       },
       """WITH t AS (
         |  SELECT n_chars::BIGINT AS x,
@@ -6793,11 +6585,7 @@ object OperatorQueries {
           .select(expr("n_chars div 200").cast("long").as("xb"),
             expr("regexp_count(text, '\\\\S+') div 40")
               .cast("long").as("yb"))
-        val out = Evaluation.kendallTauB(t, col("xb"), col("yb"))
-        val materialized = out.cache()
-        materialized.count()
-        Evaluation.releaseCaches()
-        materialized
+        Evaluation.kendallTauB(t, col("xb"), col("yb"))
       },
       """WITH t AS (
         |  SELECT (n_chars // 200)::BIGINT AS xb,
@@ -6922,11 +6710,7 @@ object OperatorQueries {
           .where(col("lang").isNotNull && col("n_chars").isNotNull)
           .select(col("n_chars").cast("long").as("v"),
             (col("lang") === "en").as("a"))
-        val out = Evaluation.ksTest(t, col("v"), col("a"))
-        val materialized = out.cache()
-        materialized.count()
-        Evaluation.releaseCaches()
-        materialized
+        Evaluation.ksTest(t, col("v"), col("a"))
       },
       """WITH t AS (
         |  SELECT n_chars::BIGINT AS v, (lang = 'en') AS a
@@ -7055,15 +6839,11 @@ object OperatorQueries {
         val edges = strong
           .select((col("c") * 2).as("src"), (col("p") * 2 + 1).as("dst"))
         val lp = Graph.labelPropagation(edges, "src", "dst", iters = 4)
-        val out = lp.groupBy(col("community"))
+        lp.groupBy(col("community"))
           .agg(count(lit(1)).as("size"),
             sum(when(col("node") % 2 === 0, 1L).otherwise(0L)).as("n_customers"),
             sum(when(col("node") % 2 === 1, 1L).otherwise(0L)).as("n_suppliers"))
           .orderBy(desc("size"), col("community"))
-        val materialized = out.cache()
-        materialized.count()
-        Graph.releaseCaches()
-        materialized
       },
       lpaOracle(4)),
 
@@ -7098,11 +6878,7 @@ object OperatorQueries {
           .where(col("lang").isNotNull && col("n_chars").isNotNull)
           .select(col("n_chars").cast("long").as("v"),
             (col("lang") === "en").as("a"))
-        val out = Evaluation.wasserstein1(t, col("v"), col("a"))
-        val materialized = out.cache()
-        materialized.count()
-        Evaluation.releaseCaches()
-        materialized
+        Evaluation.wasserstein1(t, col("v"), col("a"))
       },
       """WITH t AS (
         |  SELECT n_chars::BIGINT AS v, (lang = 'en') AS a
@@ -7135,12 +6911,8 @@ object OperatorQueries {
     "x177_chi2_cramers_v" -> sql(
       (s, dir) => {
         val t = Tables.documents(s, dir)
-        val out = Evaluation.chiSquareIndependence(
+        Evaluation.chiSquareIndependence(
           t, col("source"), col("lang"))
-        val materialized = out.cache()
-        materialized.count()
-        Evaluation.releaseCaches()
-        materialized
       },
       """WITH t AS (
         |  SELECT source::VARCHAR AS x, lang::VARCHAR AS y FROM documents
@@ -7181,15 +6953,11 @@ object OperatorQueries {
         val docs = Tables.documents(s, dir)
           .withColumn("n_tokens",
             size(TextAnalysis.tokens(col("text"))).cast("long"))
-        val out = Evaluation.giniGainScreen(docs, col("lang") === "en", Seq(
+        Evaluation.giniGainScreen(docs, col("lang") === "en", Seq(
           "len_bucket" -> expr("n_chars div 200"),
           "tok_bucket" -> expr("n_tokens div 40"),
           "avg_tok_len_x10" ->
             when(col("n_tokens") > 0, expr("(n_chars * 10) div n_tokens"))))
-        val materialized = out.cache()
-        materialized.count()
-        Evaluation.releaseCaches()
-        materialized
       },
       """WITH base AS (
         |  SELECT (lang = 'en') AS yy, n_chars::BIGINT AS n_chars,
@@ -7303,12 +7071,8 @@ object OperatorQueries {
     // oracle replays the identical 2×2 cell terms.
     "x181_llr_collocations" -> sql(
       (s, dir) => {
-        val out = Vocabulary.bigramLlr(Tables.documents(s, dir), "text",
+        Vocabulary.bigramLlr(Tables.documents(s, dir), "text",
           minCount = 5, topK = 50)
-        val materialized = out.cache()
-        materialized.count()
-        Vocabulary.releaseCaches()
-        materialized
       },
       """WITH t AS (
         |  SELECT list_filter(string_split_regex(lower(trim(text)), '\s+'),
@@ -7390,14 +7154,11 @@ object OperatorQueries {
     // in the closing ratios.
     "x183_correlation_matrix" -> sql(
       (s, dir) => {
-        val out = Evaluation.correlationMatrix(Tables.lineitem(s, dir), Seq(
+        Evaluation.correlationMatrix(Tables.lineitem(s, dir), Seq(
           "disc_c" -> floor(col("l_discount") * 100),
           "price_fl" -> floor(col("l_extendedprice")),
           "qty" -> floor(col("l_quantity")),
-          "tax_c" -> floor(col("l_tax") * 100))).cache()
-        out.count()
-        Evaluation.releaseCaches()
-        out
+          "tax_c" -> floor(col("l_tax") * 100)))
       },
       corrMatrixOracle),
 
@@ -7507,15 +7268,11 @@ object OperatorQueries {
         val docs = Tables.documents(s, dir)
           .withColumn("n_tokens",
             size(TextAnalysis.tokens(col("text"))).cast("long"))
-        val out = Evaluation.miScreen(docs, col("lang") === "en", Seq(
+        Evaluation.miScreen(docs, col("lang") === "en", Seq(
           "len_bucket" -> expr("n_chars div 200"),
           "tok_bucket" -> expr("n_tokens div 40"),
           "avg_tok_len_x10" ->
             when(col("n_tokens") > 0, expr("(n_chars * 10) div n_tokens"))))
-        val materialized = out.cache()
-        materialized.count()
-        Evaluation.releaseCaches()
-        materialized
       },
       """WITH base AS (
         |  SELECT (lang = 'en') AS yy, n_chars::BIGINT AS n_chars,
@@ -7605,12 +7362,9 @@ object OperatorQueries {
     // quantization, stats, scores) replays in SQL.
     "x189_silhouette" -> sql(
       (s, dir) => {
-        val out = Clustering.silhouetteReport(
+        Clustering.silhouetteReport(
           Tables.embeddings(s, dir), "vec_id", "embedding",
-          nCells = 8, seed = "v1").cache()
-        out.count()
-        Clustering.releaseCaches()
-        out
+          nCells = 8, seed = "v1")
       },
       """WITH emb AS (SELECT vec_id, embedding FROM embeddings),
         |pv AS (
@@ -7765,15 +7519,11 @@ object OperatorQueries {
     // relevance.
     "x193_retrieval_eval" -> sql(
       (s, dir) => {
-        val out = Vocabulary.retrievalEvalBm25(
+        Vocabulary.retrievalEvalBm25(
           Tables.documents(s, dir), "text", "doc_id",
           Seq("q1" -> "merge sort", "q2" -> "hash join",
             "q3" -> "window scan", "q4" -> "slow query"),
           k = 10, minTf = 4)
-          .cache()
-        out.count()
-        Vocabulary.releaseCaches()
-        out
       },
       """WITH dl AS (
         |  SELECT doc_id AS doc,
@@ -7918,12 +7668,8 @@ object OperatorQueries {
     // an order-pinned fold (list_reduce replay).
     "x195_kruskal_wallis" -> sql(
       (s, dir) => {
-        val out = Evaluation.kruskalWallis(
+        Evaluation.kruskalWallis(
           Tables.documents(s, dir), expr("n_chars div 50"), col("source"))
-        val materialized = out.cache()
-        materialized.count()
-        Evaluation.releaseCaches()
-        materialized
       },
       """WITH cells AS (
         |  SELECT (n_chars // 50)::BIGINT AS v, source AS g,
@@ -8040,13 +7786,9 @@ object OperatorQueries {
     // of the exact rational PAV fit. All joins on the bounded bin frame.
     "x198_pav_calibration" -> sql(
       (s, dir) => {
-        val out = Evaluation.pavCalibrate(
+        Evaluation.pavCalibrate(
           Tables.documents(s, dir),
           (col("n_chars") % 1000L) / lit(1000.0d), col("lang") === "en")
-          .cache()
-        out.count()
-        Evaluation.releaseCaches()
-        out
       },
       """WITH sc AS (
         |  SELECT CAST(round(((n_chars % 1000) / 1000.0) * 10000) AS BIGINT)
@@ -8088,12 +7830,9 @@ object OperatorQueries {
     // oracle replays the whole assignment (the x189 CTEs) + the algebra.
     "x199_cluster_agreement" -> sql(
       (s, dir) => {
-        val out = Clustering.clusterAgreement(
+        Clustering.clusterAgreement(
           Tables.embeddings(s, dir), "vec_id", "embedding", "label",
-          nCells = 8, seed = "v1").cache()
-        out.count()
-        Clustering.releaseCaches()
-        out
+          nCells = 8, seed = "v1")
       },
       """WITH emb AS (SELECT vec_id, label, embedding FROM embeddings
         |  WHERE label IS NOT NULL),
@@ -8171,11 +7910,8 @@ object OperatorQueries {
     // midranks keep every term an exact decimal; fp only in the close.
     "x201_friedman" -> sql(
       (s, dir) => {
-        val out = Seasonal.friedmanTest(
-          Tables.events(s, dir), col("event_type"), col("ts")).cache()
-        out.count()
-        Seasonal.releaseCaches()
-        out
+        Seasonal.friedmanTest(
+          Tables.events(s, dir), col("event_type"), col("ts"))
       },
       """WITH daily AS (
         |  SELECT event_type::VARCHAR AS series, ts::DATE AS day,
@@ -8216,13 +7952,10 @@ object OperatorQueries {
     // tokenization feeds both ranking variants.
     "x202_rbo_rankings" -> sql(
       (s, dir) => {
-        val out = Vocabulary.rboCompare(
+        Vocabulary.rboCompare(
           Tables.documents(s, dir), "text", "doc_id",
           Seq("q1" -> "merge sort", "q2" -> "hash join",
-            "q3" -> "window scan", "q4" -> "slow query"), k = 10).cache()
-        out.count()
-        Vocabulary.releaseCaches()
-        out
+            "q3" -> "window scan", "q4" -> "slow query"), k = 10)
       },
       rboOracle(k = 10, p = 0.9)),
 
@@ -8365,11 +8098,8 @@ object OperatorQueries {
         val scored = Linalg.ridgeProbe(Tables.embeddings(s, dir), "embedding",
           col("label") < 5, dim = 64, carry = Seq("vec_id"),
           lambda = 0.1, iters = 48)
-        val out = Evaluation.recalibrationLift(
-          scored, col("score"), col("y") === 1.0).cache()
-        out.count()
-        Evaluation.releaseCaches()
-        out
+        Evaluation.recalibrationLift(
+          scored, col("score"), col("y") === 1.0)
       },
       s"""WITH ${ridgeFitCtes},
         |sc AS MATERIALIZED (
@@ -8620,12 +8350,8 @@ object OperatorQueries {
     // pivoted 12-dp ACF values — the AR-order readout ACF smears.
     "x211_pacf" -> sql(
       (s, dir) => {
-        val out = Seasonal.pacf(
+        Seasonal.pacf(
           Tables.events(s, dir), col("event_type"), col("ts"), maxLag = 5)
-          .cache()
-        out.count()
-        Seasonal.releaseCaches()
-        out
       },
       pacfOracle(maxLag = 5)),
 
@@ -8634,12 +8360,8 @@ object OperatorQueries {
     // its own (n − k) weight; order-pinned fold.
     "x212_ljung_box" -> sql(
       (s, dir) => {
-        val out = Seasonal.ljungBox(
+        Seasonal.ljungBox(
           Tables.events(s, dir), col("event_type"), col("ts"), maxLag = 7)
-          .cache()
-        out.count()
-        Seasonal.releaseCaches()
-        out
       },
       """WITH d AS (
         |  SELECT event_type::VARCHAR AS series, ts::DATE AS day,
@@ -8919,11 +8641,8 @@ object OperatorQueries {
     // Distinct draws, two-phase range-exchange rank, one maxima agg.
     "x218_draw_uniformity" -> sql(
       (s, dir) => {
-        val out = DataQuality.drawUniformityAudit(
-          Tables.documents(s, dir), col("doc_id")).cache()
-        out.count()
-        Sharding.releaseShardCaches()
-        out
+        DataQuality.drawUniformityAudit(
+          Tables.documents(s, dir), col("doc_id"))
       },
       """WITH u AS (
         |  SELECT DISTINCT CAST(list_reduce(list_transform(range(1, 16), i ->
@@ -8954,12 +8673,9 @@ object OperatorQueries {
     // (count DESC, term) rankings — one tokenization, TakeOrdered cuts.
     "x217_vocab_overlap" -> sql(
       (s, dir) => {
-        val out = Vocabulary.vocabOverlapTopK(
+        Vocabulary.vocabOverlapTopK(
           Tables.documents(s, dir), "text", col("source") === "src0",
-          k = 50).cache()
-        out.count()
-        Vocabulary.releaseCaches()
-        out
+          k = 50)
       },
       vocabOverlapOracle(k = 50, p = 0.9)),
 
@@ -9606,13 +9322,9 @@ object OperatorQueries {
           expr("concat(substr(substr(text, 1, 40), 1, CAST(doc_id % 31 AS INT)), " +
             "substr(substr(text, 1, 40), CAST(doc_id % 31 AS INT) + 2))")
             .as("dirty_title"))
-        val out = FuzzyLinkage.qgramJoinPreflight(clean, dirty, "doc_id", "title",
+        FuzzyLinkage.qgramJoinPreflight(clean, dirty, "doc_id", "title",
           "doc_id", "dirty_title", maxDist = 1, q = 3)
           .orderBy("n_long_left")
-        val materialized = out.cache()
-        materialized.count()
-        FuzzyLinkage.releaseCaches()
-        materialized
       },
       """WITH l AS (
         |  SELECT doc_id AS id, substr(text, 1, 40) AS v,
@@ -10102,14 +9814,10 @@ object OperatorQueries {
           expr("concat(substr(substr(text, 1, 40), 1, CAST(doc_id % 31 AS INT)), " +
             "substr(substr(text, 1, 40), CAST(doc_id % 31 AS INT) + 2))")
             .as("dirty_title"))
-        val out = FuzzyLinkage.similarityJoinAuto(clean, dirty, "doc_id", "title",
+        FuzzyLinkage.similarityJoinAuto(clean, dirty, "doc_id", "title",
           "doc_id", "dirty_title", maxDist = 1, q = 3)
           .withColumnsRenamed(Map("left_id" -> "clean_id", "right_id" -> "dirty_id"))
           .orderBy("clean_id", "dirty_id")
-        val materialized = out.cache()
-        materialized.count()
-        FuzzyLinkage.releaseCaches()
-        materialized
       },
       """WITH clean AS (
         |  SELECT doc_id AS clean_id, substr(text, 1, 40) AS val FROM documents),
@@ -10152,15 +9860,11 @@ object OperatorQueries {
           expr("concat(substr(substr(text, 1, 40), 1, CAST(doc_id % 31 AS INT)), " +
             "substr(substr(text, 1, 40), CAST(doc_id % 31 AS INT) + 2))")
             .as("dirty_title"))
-        val out = FuzzyLinkage.similarityJoinAuto(clean, dirty, "doc_id", "title",
+        FuzzyLinkage.similarityJoinAuto(clean, dirty, "doc_id", "title",
           "doc_id", "dirty_title", maxDist = 1, q = 3,
           budgetPairs = 1L, numPerms = 64, targetRecallPpm = 999999L)
           .withColumnsRenamed(Map("left_id" -> "clean_id", "right_id" -> "dirty_id"))
           .orderBy("clean_id", "dirty_id")
-        val materialized = out.cache()
-        materialized.count()
-        FuzzyLinkage.releaseCaches()
-        materialized
       },
       """WITH clean AS (
         |  SELECT doc_id AS clean_id, substr(text, 1, 40) AS val FROM documents),
@@ -10209,12 +9913,8 @@ object OperatorQueries {
           struct(lit(null).cast("string").as("format"),
             lit(null).cast("int").as("width"), lit(null).cast("int").as("height"),
             lit(null).cast("long").as("duration_ms")).as("meta"))
-        val out = Multimodal.perceptualNearDuplicates(media, maxDist = 3)
+        Multimodal.perceptualNearDuplicates(media, maxDist = 3)
           .orderBy("id_a", "id_b")
-        val materialized = out.cache()
-        materialized.count()
-        Multimodal.releaseCaches()
-        materialized
       },
       """WITH src AS (
         |  SELECT doc_id, text FROM documents
@@ -10281,13 +9981,9 @@ object OperatorQueries {
           struct(lit(null).cast("string").as("format"),
             lit(null).cast("int").as("width"), lit(null).cast("int").as("height"),
             lit(null).cast("long").as("duration_ms")).as("meta"))
-        val out = Multimodal.perceptualClusters(media)
+        Multimodal.perceptualClusters(media)
           .select(col("media_id"), col("cluster_rep"), col("cluster_size"))
           .orderBy("media_id")
-        val materialized = out.cache()
-        materialized.count()
-        Multimodal.releaseCaches()
-        materialized
       },
       """WITH src AS (
         |  SELECT doc_id, text FROM documents
@@ -10347,17 +10043,12 @@ object OperatorQueries {
           expr("concat(substr(substr(text, 1, 40), 1, CAST(doc_id % 31 AS INT)), " +
             "substr(substr(text, 1, 40), CAST(doc_id % 31 AS INT) + 2))")
             .as("dirty_title"))
-        val idx = FuzzyLinkage.buildQgramIndex(clean, "doc_id", "title",
-          maxDist = 1, q = 3)
-        val out = FuzzyLinkage.incrementalSimilarityJoin(dirty, idx,
+        val idx = scoped(FuzzyLinkage.buildQgramIndex(clean, "doc_id", "title",
+          maxDist = 1, q = 3))
+        FuzzyLinkage.incrementalSimilarityJoin(dirty, idx,
           "doc_id", "dirty_title")
           .withColumnsRenamed(Map("left_id" -> "dirty_id", "right_id" -> "clean_id"))
           .orderBy("dirty_id", "clean_id")
-        val materialized = out.cache()
-        materialized.count()
-        FuzzyLinkage.releaseCaches()
-        idx.release()
-        materialized
       },
       """WITH clean AS (
         |  SELECT doc_id AS clean_id, substr(text, 1, 40) AS val FROM documents),
@@ -10391,17 +10082,12 @@ object OperatorQueries {
           expr("concat(substr(substr(text, 1, 40), 1, CAST(doc_id % 31 AS INT)), " +
             "substr(substr(text, 1, 40), CAST(doc_id % 31 AS INT) + 2))")
             .as("dirty_title"))
-        val idx = FuzzyLinkage.buildQgramIndex(clean, "doc_id", "title",
-          maxDist = 1, q = 3, targetRecallPpm = 999999L)
-        val out = FuzzyLinkage.incrementalSimilarityJoin(dirty, idx,
+        val idx = scoped(FuzzyLinkage.buildQgramIndex(clean, "doc_id", "title",
+          maxDist = 1, q = 3, targetRecallPpm = 999999L))
+        FuzzyLinkage.incrementalSimilarityJoin(dirty, idx,
           "doc_id", "dirty_title", budgetPairs = 1L)
           .withColumnsRenamed(Map("left_id" -> "dirty_id", "right_id" -> "clean_id"))
           .orderBy("dirty_id", "clean_id")
-        val materialized = out.cache()
-        materialized.count()
-        FuzzyLinkage.releaseCaches()
-        idx.release()
-        materialized
       },
       """WITH clean AS (
         |  SELECT doc_id AS clean_id, substr(text, 1, 40) AS val FROM documents),

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
-import graft.operators.Graph
+import graft.operators.{Graph, Scope}
 
 /** Streaming leg of the x135 incremental connected components: the entity
   * graph's labeling as a LIVE asset, folded one edge micro-batch at a time
@@ -38,11 +38,12 @@ object StreamingComponents {
     /** Fold one batch of edges into the labeling. */
     def merge(batchEdges: DataFrame, srcCol: String, dstCol: String): Unit =
       synchronized {
-        val next = Graph
-          .componentsIncremental(current, batchEdges, srcCol, dstCol)
-          .localCheckpoint(true) // eager: materialize before releasing
-        Graph.releaseCaches()
-        Graph.releaseCheckpoint(current)
+        // eager: materialize before the Scope releases the merge's caches
+        val next = Scope {
+          Graph.componentsIncremental(current, batchEdges, srcCol, dstCol)
+            .localCheckpoint(true)
+        }
+        Scope.release(current)
         current = next
       }
   }

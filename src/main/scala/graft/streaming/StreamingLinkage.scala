@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 
-import graft.operators.FuzzyLinkage
+import graft.operators.{FuzzyLinkage, Scope}
 
 /** Streaming leg of the budget-gated routed similarity join — the
   * [[graft.operators.FuzzyLinkage.similarityJoinAuto]] guard rail made
@@ -28,10 +28,8 @@ object StreamingLinkage {
 
   /** One micro-batch through the routed matcher — also the batch-fold
     * parity surface the specs pin. Output: (left_id, right_id, dist,
-    * route), lazy: the caller materializes, then calls
-    * `FuzzyLinkage.releaseCaches()` on the same thread (the standard
-    * epilogue; `intoParquet` does both). The index's frames stay pinned
-    * across batches by design. */
+    * route), lazy: the caller consumes it inside a Scope (`intoParquet`
+    * does). The index's frames stay pinned across batches by design. */
   def matchBatch(
       batch: DataFrame,
       index: FuzzyLinkage.QgramIndex,
@@ -59,13 +57,12 @@ object StreamingLinkage {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        try
+        Scope {
           matchBatch(batch, index, leftId, leftCol, budgetPairs)
             .write
             .mode(org.apache.spark.sql.SaveMode.Overwrite)
             .parquet(s"$outDir/batch=$batchId")
-        finally FuzzyLinkage.releaseCaches()
-        ()
+        }
       }
       .start()
 }

@@ -1,13 +1,18 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
+import org.scalatest.{BeforeAndAfterAll, Outcome}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for specs (small shuffle count for test speed). */
+import graft.operators.Scope
+
+/** Shared local SparkSession for specs (small shuffle count for test speed).
+  * Each test runs inside a Scope, so the caches and checkpoints its
+  * operators make are gone before the next test plans anything. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   override def afterAll(): Unit = () // session shared across suites
+  override def withFixture(test: NoArgTest): Outcome = Scope(super.withFixture(test))
 }
 
 object SparkSpec {

@@ -3,6 +3,8 @@ package graft.ingest
 import java.nio.file.Files
 import java.util.zip.{GZIPOutputStream, ZipEntry, ZipOutputStream}
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
 import graft.pipeline.HeaderUtils
 
@@ -61,6 +63,42 @@ class GzipIngestSpec extends SparkSpec {
     val vals = spark.read.parquet(res.outputPath)
       .select("val").collect().map(_.getDouble(0)).sorted
     assert(vals.sameElements(Array(2.5, 3.5, 1020.2)))
+  }
+
+  test("the temporary .csv.gz copy is gone after analyseCsv returns and after it throws") {
+    val f = Files.createTempFile("graft", ".data")
+    val out = new GZIPOutputStream(Files.newOutputStream(f))
+    out.write("id,val\n1,2\n2,3\n".getBytes("UTF-8"))
+    out.close()
+    val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    def copies(): Set[java.nio.file.Path] = {
+      val ls = Files.list(tmp)
+      try ls.iterator().asScala.filter { p =>
+        val n = p.getFileName.toString
+        n.startsWith("graft") && n.endsWith(".csv.gz")
+      }.toSet
+      finally ls.close()
+    }
+    val before = copies()
+    // onPhase runs between the Spark actions, while the copy is in use
+    var made = Set.empty[java.nio.file.Path]
+    CsvIngest.analyseCsv(spark, f.toString, "gz-tmp-ok",
+      Files.createTempDirectory("gz").toString, profile = false,
+      onPhase = _ => made ++= copies() -- before)
+    assert(made.nonEmpty)
+    assert(made.forall(p => !Files.exists(p)), s"left behind: $made")
+
+    var madeFailing = Set.empty[java.nio.file.Path]
+    intercept[IllegalStateException] {
+      CsvIngest.analyseCsv(spark, f.toString, "gz-tmp-fail",
+        Files.createTempDirectory("gz").toString, profile = false,
+        onPhase = _ => {
+          madeFailing ++= copies() -- before
+          throw new IllegalStateException("stop mid-analysis")
+        })
+    }
+    assert(madeFailing.nonEmpty)
+    assert(madeFailing.forall(p => !Files.exists(p)), s"left behind: $madeFailing")
   }
 }
 

@@ -50,6 +50,13 @@ class CsvIngestSpec extends SparkSpec {
     assert(out.columns.toSet == Set("xmin__hydra_renamed", "ok"))
   }
 
+  test("analyseCsv runs on a session where graft's functions were never registered") {
+    val csv = writeCsv("id,seen\n1,2022-12-31\n2,2023-01-15\n")
+    val res = CsvIngest.analyseCsv(spark.newSession(), csv, "u-fresh", tmpDir, profile = false)
+    assert(res.rowCount == 2)
+    assert(res.inspection.columns("seen").pythonType == "date")
+  }
+
   test("preamble rows before the header are skipped") {
     val csv = writeCsv("exported on 2024\ncol_a,col_b\n1,x\n2,y\n")
     val res = CsvIngest.analyseCsv(spark, csv, "u2", tmpDir, profile = false)

@@ -25,7 +25,6 @@ class AssortativitySpec extends SparkSpec {
   private def run(und: Set[(Long, Long)]): (Long, Option[Double]) = {
     val df = und.toSeq.toDF("src", "dst")
     val r = Graph.degreeAssortativity(df, "src", "dst").collect().head
-    Graph.releaseCaches()
     (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getDouble(1)))
   }
 

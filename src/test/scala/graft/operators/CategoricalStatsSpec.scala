@@ -36,7 +36,6 @@ class CategoricalStatsSpec extends SparkSpec {
     for (c <- cases) {
       val r = Evaluation.chiSquareIndependence(
         c.toDF("x", "y"), col("x"), col("y"), roundTo = 6).collect().head
-      Evaluation.releaseCaches()
       val (n, chi2) = refChi2(c)
       assert(r.getLong(0) == n)
       assert(math.abs(r.getDouble(4) - chi2) < 1e-5, s"chi2 ${r.getDouble(4)} vs $chi2")
@@ -48,7 +47,6 @@ class CategoricalStatsSpec extends SparkSpec {
     val perfect = Seq.fill(25)(("a", "u")) ++ Seq.fill(25)(("b", "v"))
     val r = Evaluation.chiSquareIndependence(
       perfect.toDF("x", "y"), col("x"), col("y")).collect().head
-    Evaluation.releaseCaches()
     assert(r.getDouble(5) == 1.0)
   }
 
@@ -56,7 +54,6 @@ class CategoricalStatsSpec extends SparkSpec {
     val c = Seq(("a", "u"), ("a", "v"), ("a", "u"))
     val r = Evaluation.chiSquareIndependence(
       c.toDF("x", "y"), col("x"), col("y")).collect().head
-    Evaluation.releaseCaches()
     assert(r.getLong(3) == 0L && r.isNullAt(5))
   }
 
@@ -78,14 +75,12 @@ class CategoricalStatsSpec extends SparkSpec {
     val rows = (1 to 40).map(i => (i % 3 == 0, (i % 5).toLong))
     val r = Evaluation.giniGainScreen(
       rows.toDF("y", "f"), col("y"), Seq("f" -> col("f"))).collect().head
-    Evaluation.releaseCaches()
     val (pg, cg, gain) = refGini(rows)
     assert((r.getLong(2), r.getLong(3), r.getLong(4)) == ((pg, cg, gain)))
     // feature == label → children pure, gain = parent gini
     val perfect = (1 to 30).map(i => (i % 2 == 0, (i % 2).toLong))
     val r2 = Evaluation.giniGainScreen(
       perfect.toDF("y", "f"), col("y"), Seq("f" -> col("f"))).collect().head
-    Evaluation.releaseCaches()
     assert(r2.getLong(3) == 0L && r2.getLong(4) == r2.getLong(2))
   }
 

@@ -65,7 +65,6 @@ class NgramLmSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     val out = NgramLm.bigramLmScore(df, "text", "doc_id")
       .collect().map(r => r.getLong(0) -> ((r.getDouble(1), r.getLong(2)))).toMap
-    NgramLm.releaseCaches()
     assert(out.keySet == Set(1L, 2L, 3L, 4L))
     assert(out.values.forall(_._2 == 5L)) // 6 tokens → 5 bigrams each
     // every doc-1 bigram occurs ≥3× in the corpus; every doc-4 bigram once
@@ -88,7 +87,6 @@ class NgramLmSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     val scored = NgramLm.score(incoming, "text", "doc_id", model)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    NgramLm.releaseCaches()
     // in-distribution text outranks out-of-vocabulary text; the backoff
     // (count-0 left join + Laplace) keeps unseen docs finite, not null
     assert(scored(10L) > scored(11L), scored.toString)
@@ -107,7 +105,6 @@ class NgramLmSpec extends SparkSpec {
     def run() = {
       val r = NgramLm.bigramLmScore(df, "text", "doc_id")
         .collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toSet
-      NgramLm.releaseCaches()
       r
     }
     val a = run()

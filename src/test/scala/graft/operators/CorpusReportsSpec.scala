@@ -149,13 +149,11 @@ class CorpusReportsSpec extends SparkSpec {
     val inc2 = Dedup.incrementalNearDuplicates(batch2, idx1, "text", "doc_id",
       threshold = 0.5).select("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    Dedup.releaseCaches()
 
     val full = Dedup.minhashNearDuplicates(
       corpus.unionByName(batch1).unionByName(batch2), "text", "doc_id",
       threshold = 0.5).select("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    Dedup.releaseCaches()
     // full recompute = corpus-internal pairs (already deduped, not
     // re-reported) + the two incremental deltas, up to pair orientation
     val corpusInternal = full.filter { case (a, b) => a <= 3 && b <= 3 }

@@ -14,7 +14,6 @@ class CorrelationMatrixSpec extends SparkSpec {
   /** Materialize + release the operator's tracked cache (house contract). */
   private def run(df: DataFrame, fs: Seq[(String, Column)]): Seq[Row] = {
     val out = Evaluation.correlationMatrix(df, fs).collect().toSeq
-    Evaluation.releaseCaches()
     out
   }
 

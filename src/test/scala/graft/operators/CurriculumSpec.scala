@@ -20,7 +20,6 @@ class CurriculumSpec extends SparkSpec {
       val got = Curriculum.difficultyBuckets(d, "difficulty", "doc_id", k)
         .select("doc_id", "bucket")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      Sharding.releaseShardCaches()
       val ref = d.withColumn("bucket",
         ntile(k).over(Window.orderBy(col("difficulty"), col("doc_id"))).cast("long"))
         .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
@@ -32,7 +31,6 @@ class CurriculumSpec extends SparkSpec {
     val d = Seq((1L, 5L), (2L, 3L), (3L, 9L)).toDF("doc_id", "difficulty")
     val got = Curriculum.difficultyBuckets(d, "difficulty", "doc_id", 10)
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
-    Sharding.releaseShardCaches()
     assert(got == Map(2L -> 1L, 1L -> 2L, 3L -> 3L), got.toString)
   }
 
@@ -40,7 +38,6 @@ class CurriculumSpec extends SparkSpec {
     val sums = Curriculum.bucketSummary(docs(103), "difficulty", "doc_id", 10)
       .orderBy("bucket")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    Sharding.releaseShardCaches()
     assert(sums.map(_._1).toSeq == (1L to 10L))
     assert(sums.map(_._2).sum == 103L)
     assert(sums.map(_._2).max - sums.map(_._2).min <= 1)

@@ -47,7 +47,6 @@ class DbscanSpec extends SparkSpec {
     val out = Clustering.gridDbscan(df, "id", "x", "y", eps, minPts)
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getBoolean(2), r.getLong(3))))
       .toMap
-    Clustering.releaseCaches()
     out
   }
 
@@ -86,10 +85,8 @@ class DbscanSpec extends SparkSpec {
     val df = pts.toDF("id", "x", "y")
     val a = Clustering.gridDbscan(df.repartition(13), "id", "x", "y", 0.15, 4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-    Clustering.releaseCaches()
     val b = Clustering.gridDbscan(df.coalesce(1), "id", "x", "y", 0.15, 4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-    Clustering.releaseCaches()
     assert(a == b)
     assert(run(pts, 0.15, 4) == reference(pts, 0.15, 4))
   }

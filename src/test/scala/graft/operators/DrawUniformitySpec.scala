@@ -24,7 +24,6 @@ class DrawUniformitySpec extends SparkSpec {
       .distinct().collect().map(_.getDouble(0)).toSeq
     val (dp, dm) = ksRef(us)
     val r = DataQuality.drawUniformityAudit(df, col("id")).collect().head
-    Sharding.releaseShardCaches()
     assert(r.getLong(0) == us.length.toLong)
     assert(r.getDouble(1) == math.rint(dp * 1e6) / 1e6)
     assert(r.getDouble(2) == math.rint(dm * 1e6) / 1e6)
@@ -35,7 +34,6 @@ class DrawUniformitySpec extends SparkSpec {
     "clumped key population fails it") {
     val good = DataQuality.drawUniformityAudit(
       (1L to 2000L).toDF("id"), col("id")).collect().head
-    Sharding.releaseShardCaches()
     assert(good.getDouble(4) < 1.36,
       s"house draw should pass uniformity, d_scaled=${good.getDouble(4)}")
     // 50 distinct keys replicated 40x: after dedup only 50 draws — the
@@ -45,14 +43,12 @@ class DrawUniformitySpec extends SparkSpec {
     // dedup contract: replication leaves n at the distinct count
     val rep = DataQuality.drawUniformityAudit(
       (1L to 2000L).map(i => i % 50).toDF("id"), col("id")).collect().head
-    Sharding.releaseShardCaches()
     assert(rep.getLong(0) == 50L)
   }
 
   test("empty and null-only inputs report a zero row") {
     val r = DataQuality.drawUniformityAudit(
       Seq.empty[Long].toDF("id"), col("id")).collect().head
-    Sharding.releaseShardCaches()
     assert(r.getLong(0) == 0L && r.isNullAt(3))
   }
 }

@@ -24,8 +24,6 @@ class EmbeddingCurationSpec extends SparkSpec {
       minCosCentroid = 0.0, dupThreshold = 0.9, nCells = 1, passes = 1)
       .orderBy("label").collect().toSeq
     assert(out == Seq(Row(1, 4L, 3L, 1L), Row(2, 1L, 1L, 0L)), out.toString)
-    Dedup.releaseCaches()
-    TrainingDataPipeline.releaseFlagshipCaches()
   }
 
   test("funnel is monotone per label on the real fixture") {
@@ -37,7 +35,5 @@ class EmbeddingCurationSpec extends SparkSpec {
       val (t, a, b) = (r.getLong(1), r.getLong(2), r.getLong(3))
       assert(t >= a && a >= b && b >= 0, r.toString)
     }
-    Dedup.releaseCaches()
-    TrainingDataPipeline.releaseFlagshipCaches()
   }
 }

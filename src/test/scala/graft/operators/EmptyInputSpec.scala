@@ -31,7 +31,6 @@ class EmptyInputSpec extends SparkSpec {
     val noPairs = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
     val clusters = Dedup.duplicateClusters(noPairs)
     assert(clusters.isEmpty && clusters.columns.toSeq == Seq("id", "cluster"))
-    Dedup.releaseCaches()
   }
 
   test("text/vocab family: empty corpus → empty stats") {
@@ -68,7 +67,6 @@ class EmptyInputSpec extends SparkSpec {
     assert(Sharding.shufflePositions(noTokens.select("doc_id"), "doc_id", "s").isEmpty)
     assert(SequencePacking.packGreedy(noTokens, "doc_id", "n_tokens",
       contextLen = 100L).isEmpty)
-    Sharding.releaseShardCaches()
     val noCats = Seq.empty[(Long, String)].toDF("doc_id", "cat")
     assert(MixtureSampling.sampleByRates(noCats, "cat", "doc_id",
       rates = Map("x" -> 0.5)).isEmpty)
@@ -87,7 +85,6 @@ class EmptyInputSpec extends SparkSpec {
       "vec_id", "embedding", "qid", "qvec", k = 5).isEmpty)
     assert(Similarity.cosineNearDuplicates(noVecs, "vec_id", "embedding",
       threshold = 0.5, nBits = 8, dim = 4, probeHamming = 1, nTables = 2).isEmpty)
-    Dedup.releaseCaches()
   }
 
   test("null-text rows are skipped, never fatal (nullable kernels end to end)") {
@@ -102,7 +99,6 @@ class EmptyInputSpec extends SparkSpec {
     val weights = ImportanceWeights.weightsAgainstSubset(
       withNulls, lit(true), "text", "doc_id")
       .collect().map(_.getLong(0)).toSet
-    ImportanceWeights.releaseCaches()
     assert(weights == Set(1L, 3L))
   }
 
@@ -117,14 +113,12 @@ class EmptyInputSpec extends SparkSpec {
     assert(Curriculum.bucketSummary(noTokens, "n_tokens", "doc_id", 10).isEmpty)
     val noSourced = Seq.empty[(Long, String)].toDF("doc_id", "source")
     assert(Sharding.interleavePositions(noSourced, "source", "doc_id").isEmpty)
-    Sharding.releaseShardCaches()
     val noVecsL = Seq.empty[(Long, Array[Float], Int)].toDF("vec_id", "embedding", "label")
     assert(Similarity.labelCohesion(noVecsL, "vec_id", "embedding", "label").isEmpty)
     val noRatios = ImportanceWeights.fitLogRatios(noDocs, noDocs, "text", "doc_id")
     assert(noRatios.isEmpty)
     assert(ImportanceWeights.score(noDocs, "text", "doc_id", noRatios).isEmpty)
     assert(ImportanceWeights.weightsAgainstSubset(noDocs, lit(true), "text", "doc_id").isEmpty)
-    ImportanceWeights.releaseCaches()
   }
 
   test("corpus-report additions: empty inputs → empty reports") {
@@ -143,7 +137,6 @@ class EmptyInputSpec extends SparkSpec {
     val emptyIndex = Dedup.buildMinhashIndex(noDocs, "text", "doc_id")
     assert(emptyIndex.sets.isEmpty && emptyIndex.bands.isEmpty)
     assert(Dedup.incrementalNearDuplicates(noDocs, emptyIndex, "text", "doc_id").isEmpty)
-    Dedup.releaseCaches()
   }
 
   test("round-7 additions: empty inputs → empty samples/shards/pairs/sketches") {
@@ -152,7 +145,6 @@ class EmptyInputSpec extends SparkSpec {
       noCatted, "cat", "id", "w", k = 5).isEmpty)
     assert(Sharding.hrwShard(noDocs, "doc_id", nShards = 8).isEmpty)
     assert(Dedup.prefixJaccardPairs(noDocs, "text", "doc_id", 0.5).isEmpty)
-    Dedup.releaseCaches()
     val noKeyed = Seq.empty[(String, Long)].toDF("grp", "key")
     assert(Sketches.kmvDistinct(noKeyed, "key", "grp").isEmpty)
     assert(Sketches.kmvEstimate(noKeyed, "key", "grp").isEmpty)
@@ -183,8 +175,6 @@ class EmptyInputSpec extends SparkSpec {
       "vec_id", "embedding", "label")
     assert(funnel.isEmpty && funnel.columns.toSeq ==
       Seq("label", "n_total", "n_after_trim", "n_after_dedup"))
-    Dedup.releaseCaches()
-    TrainingDataPipeline.releaseFlagshipCaches()
   }
 
   test("round-9 reports: empty inputs → empty reports, right schemas") {
@@ -192,7 +182,6 @@ class EmptyInputSpec extends SparkSpec {
     val kappa = Evaluation.agreementReport(noRated, col("a"), col("b"))
     // empty corpus: n=0, every ratio NULL (0-division guarded), one row
     val kr = kappa.collect()
-    Evaluation.releaseCaches()
     assert(kr.length == 1 && kr.head.getLong(0) == 0L && kr.head.isNullAt(3))
     val drift = Evaluation.driftReport(noRated, col("a"), col("b") === "x")
     assert(drift.isEmpty &&
@@ -212,31 +201,25 @@ class EmptyInputSpec extends SparkSpec {
       col("b"), k = 3, l = 2).isEmpty)
     val noEdges = Seq.empty[(Long, Long)].toDF("src", "dst")
     assert(Graph.triangleCounts(noEdges, "src", "dst").isEmpty)
-    Graph.releaseCaches()
     assert(Graph.kCore(noEdges, "src", "dst", k = 2).isEmpty)
   }
 
   test("late round-9 additions: empty inputs → empty reports or loud refusal") {
     val noEdges = Seq.empty[(Long, Long)].toDF("src", "dst")
     assert(Graph.deterministicWalks(noEdges, "src", "dst").isEmpty)
-    Graph.releaseCaches()
     assert(Graph.butterflyCounts(noEdges, "src", "dst").isEmpty)
-    Graph.releaseCaches()
     // HITS on an empty graph has no meaningful normalization — refuse
     assertThrows[IllegalArgumentException] {
       Graph.hitsBipartite(noEdges, "src", "dst")
     }
-    Graph.releaseCaches()
     val noTs = Seq.empty[(String, Timestamp)].toDF("t", "ts")
     assert(Seasonal.cusumChangepoints(noTs, col("t"), col("ts"), h = 5).isEmpty)
     assert(Seasonal.seasonalNaiveMase(noTs, col("t"), col("ts")).isEmpty)
     val health = Seasonal.seriesHealthReport(noTs, col("t"), col("ts"))
     assert(health.isEmpty)
-    Seasonal.releaseCaches()
     val noScored = Seq.empty[(String, Long, Long)].toDF("g", "s", "id")
     assert(SignalFusion.quantileNormalize(noScored, col("g"), col("s"),
       col("id")).isEmpty)
-    Sharding.releaseShardCaches()
   }
 
   test("final round-9 additions: empty graphs → identity / seeds-only / empty") {
@@ -245,22 +228,17 @@ class EmptyInputSpec extends SparkSpec {
     val labels = Seq((1L, 1L), (2L, 1L)).toDF("node", "comp")
     val unchanged = Graph.componentsIncremental(labels, noEdges, "src", "dst")
       .orderBy("node").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    Graph.releaseCaches()
     assert(unchanged == Seq((1L, 1L), (2L, 1L)))
     // BFS on an empty graph: the seeds still self-report at distance 0
     val seedsOnly = Graph.bfsLevels(noEdges, "src", "dst", Seq(7L))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    Graph.releaseCaches()
     assert(seedsOnly == Seq((7L, 0L, 7L)))
     assert(Graph.sharedNeighborScores(noEdges, "src", "dst").isEmpty)
-    Graph.releaseCaches()
     assert(Graph.recommendations(noEdges, "src", "dst", k = 3).isEmpty)
-    Graph.releaseCaches()
     val noRated = Seq.empty[(String, String)].toDF("g", "v")
     val tc = TextAnalysis.tClosenessAudit(noRated,
       Seq("g" -> col("g")), col("v"), tPpm = 100000)
     assert(tc.isEmpty && tc.columns.toSeq == Seq("g", "n", "tvd_ppm", "t_risk"))
-    TextAnalysis.releaseCaches()
   }
 
   test("x140-x145 additions: empty inputs → empty reports or loud refusal") {
@@ -268,7 +246,6 @@ class EmptyInputSpec extends SparkSpec {
     assertThrows[IllegalArgumentException] {
       Vocabulary.negativeSamples(noDocs, "text", "doc_id", k = 2).count()
     }
-    Vocabulary.releaseCaches()
     assertThrows[IllegalArgumentException] {
       RadixSelect.quantiles(Seq.empty[Long].toDF("v"), col("v"), Seq(500000L))
     }

@@ -122,7 +122,6 @@ class EvaluationSpec extends SparkSpec {
         Seq.fill(10)(("n", "y")) ++ Seq.fill(15)(("n", "n"))
     val out = Evaluation.agreementReport(
       rows.toDF("a", "b").repartition(7), col("a"), col("b")).head()
-    Evaluation.releaseCaches()
     assert(out.getLong(0) == 50L && out.getLong(1) == 2L &&
       out.getLong(2) == 35L)
     assert(out.getLong(3) == 700000L, "po_ppm")
@@ -134,7 +133,6 @@ class EvaluationSpec extends SparkSpec {
     val withNulls = Seq(("y", "y"), ("y", null), (null, "y"), ("y", "y"))
     val out = Evaluation.agreementReport(
       withNulls.toDF("a", "b"), col("a"), col("b")).head()
-    Evaluation.releaseCaches()
     assert(out.getLong(0) == 2L && out.getLong(2) == 2L)
     // single observed class: n² = Σrow·col → chance-perfect, kappa NULL
     assert(out.getLong(3) == 1000000L && out.isNullAt(5))

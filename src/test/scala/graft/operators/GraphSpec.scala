@@ -38,7 +38,6 @@ class GraphSpec extends SparkSpec {
     val out = Graph.pageRankFixedPoint(diamond.toDF("src", "dst"), "src", "dst",
       iters = 7)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    Graph.releaseCaches()
     val ref = referencePr(diamond, iters = 7)
     assert(out.keySet == ref.keySet)
     ref.foreach { case (node, rank) =>
@@ -51,7 +50,6 @@ class GraphSpec extends SparkSpec {
     val out = Graph.pageRankFixedPoint(diamond.toDF("src", "dst"), "src", "dst",
       iters = 5)
       .agg(sum("rank_fp")).head().getLong(0)
-    Graph.releaseCaches()
     val scale = 1000000000000L
     // each superstep loses < 1 unit per share/div plus the div-100 floors
     assert(out <= scale && out > (scale * 999L) / 1000L,
@@ -61,11 +59,9 @@ class GraphSpec extends SparkSpec {
   test("result is partitioning-independent (exact integer arithmetic)") {
     val a = Graph.pageRankFixedPoint(diamond.toDF("src", "dst"), "src", "dst",
       iters = 4).orderBy("node").collect().toSeq
-    Graph.releaseCaches()
     val b = Graph.pageRankFixedPoint(
       diamond.toDF("src", "dst").repartition(7), "src", "dst",
       iters = 4).orderBy("node").collect().toSeq
-    Graph.releaseCaches()
     assert(a == b)
   }
 
@@ -73,12 +69,10 @@ class GraphSpec extends SparkSpec {
     val single = Graph.pageRankFixedPoint(
       Seq((1L, 2L), (1L, 3L), (2L, 1L), (3L, 1L)).toDF("src", "dst"),
       "src", "dst", iters = 3).orderBy("node").collect()
-    Graph.releaseCaches()
     val doubled = Graph.pageRankFixedPoint(
       Seq((1L, 2L), (1L, 2L), (1L, 3L), (2L, 1L), (3L, 1L)).toDF("src", "dst"),
       "src", "dst", iters = 3)
       .where(col("node") === 2L).head()
-    Graph.releaseCaches()
     val singleTwo = single.find(_.getLong(0) == 2L).get.getLong(2)
     assert(doubled.getLong(2) > singleTwo,
       "node 2 must gain rank when its in-edge is repeated")
@@ -89,7 +83,6 @@ class GraphSpec extends SparkSpec {
     assertThrows[IllegalArgumentException] {
       Graph.pageRankFixedPoint(empty, "src", "dst")
     }
-    Graph.releaseCaches()
     val one = Seq((1L, 2L)).toDF("src", "dst")
     assertThrows[IllegalArgumentException] {
       Graph.pageRankFixedPoint(one, "src", "dst", iters = 0)
@@ -103,10 +96,8 @@ class GraphSpec extends SparkSpec {
     val allNodes = Seq(10L, 20L, 30L, 40L)
     val classic = Graph.pageRankFixedPoint(diamond.toDF("src", "dst"),
       "src", "dst", iters = 4).orderBy("node").collect().toSeq
-    Graph.releaseCaches()
     val seededAll = Graph.personalizedPageRank(diamond.toDF("src", "dst"),
       "src", "dst", seeds = allNodes, iters = 4).orderBy("node").collect().toSeq
-    Graph.releaseCaches()
     assert(classic == seededAll)
   }
 
@@ -117,7 +108,6 @@ class GraphSpec extends SparkSpec {
     val out = Graph.personalizedPageRank(twoComponents.toDF("src", "dst"),
       "src", "dst", seeds = Seq(1L), iters = 6)
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
-    Graph.releaseCaches()
     assert(out(3L) == 0L && out(4L) == 0L,
       "unreachable component must hold zero stationary mass")
     assert(out(1L) > out(2L), "the seed holds more mass than its neighbor")
@@ -130,7 +120,6 @@ class GraphSpec extends SparkSpec {
     val g = Seq((2L, 1L), (2L, 3L), (7L, 8L), (9L, 9L))
     val out = Graph.connectedComponents(g.toDF("src", "dst"), "src", "dst")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    Graph.releaseCaches()
     assert(out == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 8L -> 7L, 9L -> 9L))
   }
 
@@ -140,10 +129,8 @@ class GraphSpec extends SparkSpec {
     val path = (1L to 5L).map(i => (i, i + 1))
     val a = Graph.connectedComponents(path.toDF("src", "dst"), "src", "dst",
       maxIters = 10).orderBy("node").collect().toSeq
-    Graph.releaseCaches()
     val b = Graph.connectedComponents(path.toDF("src", "dst"), "src", "dst",
       maxIters = 50).orderBy("node").collect().toSeq
-    Graph.releaseCaches()
     assert(a == b)
     assert(a.forall(_.getLong(1) == 1L), "path collapses to min label 1")
   }
@@ -155,7 +142,6 @@ class GraphSpec extends SparkSpec {
       Graph.connectedComponents(path.toDF("src", "dst"), "src", "dst",
         maxIters = 1)
     }
-    Graph.releaseCaches()
   }
 
   test("triangleCounts: K4, pendant, and star agree with hand counts") {
@@ -165,7 +151,6 @@ class GraphSpec extends SparkSpec {
     val g = k4 ++ Seq((1L, 5L), (10L, 11L), (10L, 12L), (10L, 13L))
     val out = Graph.triangleCounts(g.toDF("src", "dst"), "src", "dst")
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    Graph.releaseCaches()
     assert(out(1L) == (4L, 3L) && out(2L) == (3L, 3L) &&
       out(3L) == (3L, 3L) && out(4L) == (3L, 3L))
     assert(out(5L) == (1L, 0L))
@@ -177,7 +162,6 @@ class GraphSpec extends SparkSpec {
     val g = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 1L), (1L, 3L), (2L, 2L))
     val out = Graph.triangleCounts(g.toDF("src", "dst"), "src", "dst")
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    Graph.releaseCaches()
     assert(out == Map(1L -> (2L, 1L), 2L -> (2L, 1L), 3L -> (2L, 1L)))
   }
 
@@ -185,10 +169,8 @@ class GraphSpec extends SparkSpec {
     val g = (for (i <- 1L to 8L; j <- (i + 1) to 8L if (i + j) % 3 != 0)
       yield (i, j)).toDF("src", "dst")
     val a = Graph.triangleCounts(g, "src", "dst").orderBy("node").collect().toSeq
-    Graph.releaseCaches()
     val b = Graph.triangleCounts(g.repartition(13), "src", "dst")
       .orderBy("node").collect().toSeq
-    Graph.releaseCaches()
     assert(a == b)
     assert(a.map(_.getLong(2)).sum % 3 == 0, "each triangle is counted at 3 nodes")
   }
@@ -232,7 +214,6 @@ class GraphSpec extends SparkSpec {
     val g = Seq((1L, 7L), (1L, 8L), (2L, 7L)).toDF("c", "s")
     val out = Graph.hitsBipartite(g, "c", "s", iters = 2)
       .collect().map(r => (r.getString(1), r.getLong(0)) -> r.getLong(2)).toMap
-    Graph.releaseCaches()
     assert(out(("auth", 7L)) == 1000000000000L)
     assert(out(("auth", 8L)) == 600000000000L)
     assert(out(("hub", 1L)) == 1000000000000L)
@@ -244,10 +225,8 @@ class GraphSpec extends SparkSpec {
       yield (c, s)).toDF("c", "s")
     val a = Graph.hitsBipartite(g, "c", "s", iters = 3)
       .orderBy("side", "node").collect().toSeq
-    Graph.releaseCaches()
     val b = Graph.hitsBipartite(g.repartition(11), "c", "s", iters = 3)
       .orderBy("side", "node").collect().toSeq
-    Graph.releaseCaches()
     assert(a == b)
     val bySide = a.groupBy(_.getString(1))
     assert(bySide("hub").map(_.getLong(2)).max == 1000000000000L)
@@ -258,7 +237,6 @@ class GraphSpec extends SparkSpec {
     assertThrows[IllegalArgumentException] {
       Graph.hitsBipartite(Seq.empty[(Long, Long)].toDF("c", "s"), "c", "s")
     }
-    Graph.releaseCaches()
     assertThrows[IllegalArgumentException] {
       Graph.hitsBipartite(Seq((1L, 2L)).toDF("c", "s"), "c", "s", iters = 0)
     }
@@ -272,7 +250,6 @@ class GraphSpec extends SparkSpec {
       (5L, 20L), (5L, 21L), (5L, 22L), (6L, 20L), (6L, 21L), (6L, 22L))
     val out = Graph.butterflyCounts(g.toDF("l", "r"), "l", "r")
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    Graph.releaseCaches()
     assert(out(10L) == (2L, 1L) && out(11L) == (2L, 1L))
     assert(out(20L) == (2L, 2L) && out(21L) == (2L, 2L) && out(22L) == (2L, 2L))
   }
@@ -282,15 +259,12 @@ class GraphSpec extends SparkSpec {
     val star = Seq((1L, 10L), (1L, 11L), (1L, 12L), (1L, 10L))
     val s = Graph.butterflyCounts(star.toDF("l", "r"), "l", "r")
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
-    Graph.releaseCaches()
     assert(s.values.forall(_ == 0L), "one left node cannot close a 4-cycle")
     val g = (for (l <- 1L to 5L; r <- 10L to 15L if (l + r) % 3 != 0)
       yield (l, r)).toDF("l", "r")
     val a = Graph.butterflyCounts(g, "l", "r").orderBy("node").collect().toSeq
-    Graph.releaseCaches()
     val b = Graph.butterflyCounts(g.repartition(13), "l", "r")
       .orderBy("node").collect().toSeq
-    Graph.releaseCaches()
     assert(a == b)
   }
 
@@ -299,7 +273,6 @@ class GraphSpec extends SparkSpec {
     val g = Seq((1L, 2L), (1L, 3L), (2L, 3L)).toDF("src", "dst")
     val out = Graph.deterministicWalks(g, "src", "dst",
       steps = 3, walksPerNode = 2).collect()
-    Graph.releaseCaches()
     val byWalk = out.groupBy(r => (r.getLong(0), r.getLong(1)))
     assert(byWalk.keySet == Set((1L, 0L), (1L, 1L), (2L, 0L), (2L, 1L)))
     val edges = Set((1L, 2L), (1L, 3L), (2L, 3L))
@@ -320,10 +293,8 @@ class GraphSpec extends SparkSpec {
       .toDF("src", "dst")
     val a = Graph.deterministicWalks(g, "src", "dst", steps = 4,
       walksPerNode = 4).orderBy("start", "widx", "step").collect().toSeq
-    Graph.releaseCaches()
     val b = Graph.deterministicWalks(g.repartition(13), "src", "dst", steps = 4,
       walksPerNode = 4).orderBy("start", "widx", "step").collect().toSeq
-    Graph.releaseCaches()
     assert(a == b)
     // on a complete digraph no walk terminates early and the md5 draws
     // separate at least some widx pairs into different paths
@@ -349,10 +320,8 @@ class GraphSpec extends SparkSpec {
     val inc = Graph.componentsIncremental(baseLabels,
       batch.toDF("src", "dst"), "src", "dst")
       .orderBy("node").collect().toSeq
-    Graph.releaseCaches()
     val full = Graph.connectedComponents(all.toDF("src", "dst"), "src", "dst")
       .orderBy("node").collect().toSeq
-    Graph.releaseCaches()
     assert(inc == full, "incremental fixpoint must equal the from-scratch fixpoint")
   }
 
@@ -365,7 +334,6 @@ class GraphSpec extends SparkSpec {
     val out = Graph.componentsIncremental(base,
       Seq((2L, 5L), (8L, 9L)).toDF("src", "dst"), "src", "dst")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    Graph.releaseCaches()
     assert(out == Map(1L -> 1L, 2L -> 1L, 5L -> 1L, 6L -> 1L, 8L -> 8L, 9L -> 8L))
   }
 
@@ -376,14 +344,12 @@ class GraphSpec extends SparkSpec {
     val noBatch = Graph.componentsIncremental(base,
       Seq.empty[(Long, Long)].toDF("src", "dst"), "src", "dst")
       .orderBy("node").collect().toSeq
-    Graph.releaseCaches()
     assert(noBatch.map(r => (r.getLong(0), r.getLong(1))) ==
       Seq((1L, 1L), (2L, 1L), (3L, 1L)))
     // an edge both of whose endpoints already share a component
     val sameComp = Graph.componentsIncremental(base,
       Seq((1L, 3L)).toDF("src", "dst"), "src", "dst")
       .orderBy("node").collect().toSeq
-    Graph.releaseCaches()
     assert(sameComp.map(r => (r.getLong(0), r.getLong(1))) ==
       Seq((1L, 1L), (2L, 1L), (3L, 1L)))
   }
@@ -394,13 +360,11 @@ class GraphSpec extends SparkSpec {
     val lab = Graph.connectedComponents(base.toDF("src", "dst"), "src", "dst")
     val a = Graph.componentsIncremental(lab, batch.toDF("src", "dst"),
       "src", "dst").orderBy("node").collect().toSeq
-    Graph.releaseCaches()
     val lab2 = Graph.connectedComponents(
       base.toDF("src", "dst").repartition(11), "src", "dst")
     val b = Graph.componentsIncremental(lab2,
       batch.toDF("src", "dst").repartition(13), "src", "dst")
       .orderBy("node").collect().toSeq
-    Graph.releaseCaches()
     assert(a == b)
   }
 
@@ -413,7 +377,6 @@ class GraphSpec extends SparkSpec {
     val out = Graph.bfsLevels(g.toDF("src", "dst"), "src", "dst",
       seeds = Seq(1L, 5L))
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    Graph.releaseCaches()
     assert(out == Map(1L -> (0L, 1L), 2L -> (1L, 1L), 3L -> (2L, 1L),
       4L -> (1L, 5L), 5L -> (0L, 5L), 6L -> (3L, 1L)))
   }
@@ -425,16 +388,13 @@ class GraphSpec extends SparkSpec {
     val out = Graph.bfsLevels(g.toDF("src", "dst"), "src", "dst",
       seeds = Seq(1L, 20L))
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    Graph.releaseCaches()
     assert(out == Map(1L -> (0L, 1L), 2L -> (1L, 1L), 20L -> (0L, 20L)),
       "8/9 unreachable → absent; the off-graph seed still reports itself")
     val big = (1L to 30L).map(i => (i, (i * 7) % 30 + 1)).toDF("src", "dst")
     val a = Graph.bfsLevels(big, "src", "dst", Seq(1L, 13L))
       .orderBy("node").collect().toSeq
-    Graph.releaseCaches()
     val b = Graph.bfsLevels(big.repartition(13), "src", "dst", Seq(1L, 13L))
       .orderBy("node").collect().toSeq
-    Graph.releaseCaches()
     assert(a == b)
   }
 
@@ -452,7 +412,6 @@ class GraphSpec extends SparkSpec {
       Graph.bfsLevels(path.toDF("src", "dst"), "src", "dst",
         seeds = Seq(1L), maxIters = 3)
     }
-    Graph.releaseCaches()
   }
 
   test("sharedNeighborScores: RA weights match hand arithmetic") {
@@ -466,7 +425,6 @@ class GraphSpec extends SparkSpec {
       scale = 1000L)
       .collect().map(r => (r.getLong(0), r.getLong(1)) ->
         (r.getLong(2), r.getLong(3))).toMap
-    Graph.releaseCaches()
     assert(out == Map((1L, 2L) -> (2L, 833L), (1L, 3L) -> (1L, 333L),
       (2L, 3L) -> (1L, 333L)))
   }
@@ -476,16 +434,13 @@ class GraphSpec extends SparkSpec {
     val dup = Seq((1L, 10L), (1L, 10L), (2L, 10L), (3L, 11L))
     val out = Graph.sharedNeighborScores(dup.toDF("c", "s"), "c", "s")
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    Graph.releaseCaches()
     assert(out == Map((1L, 2L) -> 1L), "3 shares nothing — pair absent")
     val g = (for (c <- 1L to 9L; s <- 10L to 15L if (c * s) % 4 != 1)
       yield (c, s)).toDF("c", "s")
     val a = Graph.sharedNeighborScores(g, "c", "s")
       .orderBy("a", "b").collect().toSeq
-    Graph.releaseCaches()
     val b = Graph.sharedNeighborScores(g.repartition(11), "c", "s")
       .orderBy("a", "b").collect().toSeq
-    Graph.releaseCaches()
     assert(a == b)
   }
 
@@ -501,7 +456,6 @@ class GraphSpec extends SparkSpec {
       scale = 1000L)
       .collect().map(r => (r.getLong(0), r.getLong(1)) ->
         (r.getLong(2), r.getLong(3), r.getLong(4))).toMap
-    Graph.releaseCaches()
     assert(out == Map(
       (1L, 1L) -> (12L, 1000L, 1L),
       (2L, 1L) -> (13L, 500L, 1L),
@@ -514,15 +468,12 @@ class GraphSpec extends SparkSpec {
     val lonely = Seq((1L, 10L), (2L, 11L)) // no shared supplier, no pairs
     assert(Graph.recommendations(lonely.toDF("c", "s"), "c", "s", k = 3)
       .collect().isEmpty)
-    Graph.releaseCaches()
     val g = (for (c <- 1L to 8L; s <- 10L to 16L if (c + s) % 3 != 0)
       yield (c, s)).toDF("c", "s")
     val a = Graph.recommendations(g, "c", "s", k = 2)
       .orderBy("l", "rank").collect().toSeq
-    Graph.releaseCaches()
     val b = Graph.recommendations(g.repartition(11), "c", "s", k = 2)
       .orderBy("l", "rank").collect().toSeq
-    Graph.releaseCaches()
     assert(a == b)
     assert(a.groupBy(_.getLong(0)).values.forall(_.size <= 2))
     assertThrows[IllegalArgumentException] {
@@ -536,7 +487,6 @@ class GraphSpec extends SparkSpec {
     try {
       Graph.pageRankFixedPoint(diamond.toDF("src", "dst"), "src", "dst", iters = 3)
         .collect()
-      Graph.releaseCaches()
       assert(Graph.lastStepPlans.size == 3)
       Graph.lastStepPlans.foreach { p =>
         assert(p.contains("InMemoryTableScan"),

@@ -64,7 +64,6 @@ class GroupTestsSpec extends SparkSpec {
     val df = (Seq(1L, 2L, 3L).map((_, "a")) ++ Seq(4L, 5L, 6L).map((_, "b")) ++
       Seq(7L, 8L, 9L).map((_, "c"))).toDF("v", "g")
     val r = Evaluation.kruskalWallis(df, col("v"), col("g")).collect().head
-    Evaluation.releaseCaches()
     assert(r.getLong(0) == 9L && r.getLong(1) == 3L)
     // R = {6, 15, 24}; H = 12/(9·10)·(36+225+576)/3 − 3·10 = 7.2
     assert(r.getDouble(2) == 7.2d)
@@ -75,7 +74,6 @@ class GroupTestsSpec extends SparkSpec {
     val df = (Seq(1L, 1L, 2L).map((_, "a")) ++ Seq(2L, 3L, 3L).map((_, "b")))
       .toDF("v", "g")
     val r = Evaluation.kruskalWallis(df, col("v"), col("g")).collect().head
-    Evaluation.releaseCaches()
     // midranks: v=1→1.5, v=2→3.5, v=3→5.5; R_a=6.5, R_b=14.5
     // H = 12/(6·7)·(42.25/3 + 210.25/3) − 21 = 12/42·84.1666… − 21 = 3.0476
     assert(math.abs(r.getDouble(2) - 3.0476) < 1e-4)
@@ -86,11 +84,9 @@ class GroupTestsSpec extends SparkSpec {
   test("kruskal–wallis: single group or all-tied → NULL") {
     val one = Seq((1L, "a"), (2L, "a")).toDF("v", "g")
     val r1 = Evaluation.kruskalWallis(one, col("v"), col("g")).collect().head
-    Evaluation.releaseCaches()
     assert(r1.isNullAt(2) && r1.isNullAt(3))
     val tied = Seq((5L, "a"), (5L, "b"), (5L, "a")).toDF("v", "g")
     val r2 = Evaluation.kruskalWallis(tied, col("v"), col("g")).collect().head
-    Evaluation.releaseCaches()
     assert(r2.isNullAt(3)) // correction denominator 0
   }
 

@@ -32,7 +32,6 @@ class HypothesisTestsSpec extends SparkSpec {
     for (c <- cases) {
       val r = Evaluation.ksTest(c.toDF("v", "a"), col("v"), col("a"),
         roundTo = 8).collect().head
-      Evaluation.releaseCaches()
       val Some((dPpm, stat)) = refKsD(c)
       assert(r.getLong(2) == dPpm, s"$c: d_ppm ${r.getLong(2)} vs $dPpm")
       assert(math.abs(r.getDouble(3) - stat) < 1e-7, s"$c")
@@ -43,12 +42,10 @@ class HypothesisTestsSpec extends SparkSpec {
     val same = (1L to 10L).flatMap(i => Seq((i, true), (i, false)))
     val r = Evaluation.ksTest(same.toDF("v", "a"), col("v"), col("a"))
       .collect().head
-    Evaluation.releaseCaches()
     assert(r.getLong(2) == 0L && r.getDouble(3) == 0.0)
     val solo = (1L to 5L).map(i => (i, true))
     val r2 = Evaluation.ksTest(solo.toDF("v", "a"), col("v"), col("a"))
       .collect().head
-    Evaluation.releaseCaches()
     assert(r2.isNullAt(2) && r2.isNullAt(3))
   }
 
@@ -74,7 +71,6 @@ class HypothesisTestsSpec extends SparkSpec {
     for (c <- cases) {
       val r = Evaluation.wasserstein1(c.toDF("v", "a"), col("v"), col("a"))
         .collect().head
-      Evaluation.releaseCaches()
       assert(r.getLong(2) == refW1Ppm(c).get, s"$c: got ${r.getLong(2)}")
     }
   }
@@ -83,14 +79,12 @@ class HypothesisTestsSpec extends SparkSpec {
     val same = (1L to 10L).flatMap(i => Seq((i, true), (i, false)))
     val r = Evaluation.wasserstein1(same.toDF("v", "a"), col("v"), col("a"))
       .collect().head
-    Evaluation.releaseCaches()
     assert(r.getLong(2) == 0L)
     // cohort B = cohort A + 7 exactly → W1 = 7
     val shifted = (1L to 10L).map(i => (i, true)) ++
       (1L to 10L).map(i => (i + 7L, false))
     val r2 = Evaluation.wasserstein1(shifted.toDF("v", "a"), col("v"), col("a"))
       .collect().head
-    Evaluation.releaseCaches()
     assert(r2.getLong(2) == 7000000L)
   }
 
@@ -102,7 +96,6 @@ class HypothesisTestsSpec extends SparkSpec {
     }
     val r = Evaluation.twoProportionZ(rows.toDF("a", "s"), col("a"), col("s"),
       roundTo = 8).collect().head
-    Evaluation.releaseCaches()
     assert((r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)) ==
       ((100L, 30L, 100L, 20L)))
     assert(r.getLong(4) == 300000L && r.getLong(5) == 200000L)

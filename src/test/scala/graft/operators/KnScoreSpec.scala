@@ -48,7 +48,6 @@ class KnScoreSpec extends SparkSpec {
     val df = docs.toDF("doc_id", "text")
     val got = NgramLm.knBigramScore(df, "text", "doc_id")
       .collect().map(r => (r.getLong(0), (r.getDouble(1), r.getLong(2)))).toMap
-    NgramLm.releaseCaches()
     val exp = reference(docs)
     assert(got.keySet == exp.keySet, "single-token docs carry no bigrams")
     for ((id, (score, n)) <- exp) {
@@ -77,7 +76,6 @@ class KnScoreSpec extends SparkSpec {
     val df = corpus.toDF("doc_id", "text")
     val got = NgramLm.knBigramScore(df, "text", "doc_id")
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
-    NgramLm.releaseCaches()
     assert(got(21L) > got(20L),
       s"river (3 left contexts) must outscore francisco (1): $got")
   }

@@ -26,7 +26,6 @@ class LabelPropagationSpec extends SparkSpec {
     val out = Graph.labelPropagation(
       edges.toDF("src", "dst"), "src", "dst", iters)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    Graph.releaseCaches()
     out
   }
 

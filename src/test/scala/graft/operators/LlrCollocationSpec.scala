@@ -31,7 +31,6 @@ class LlrCollocationSpec extends SparkSpec {
       }
     val rows = Vocabulary.bigramLlr(docs, "text", minCount = 2, topK = 20)
       .collect()
-    Vocabulary.releaseCaches()
     assert(rows.nonEmpty)
     for (r <- rows) {
       val exp = refLlr(adjacent, r.getString(0), r.getString(1))
@@ -46,7 +45,6 @@ class LlrCollocationSpec extends SparkSpec {
     val docs = Seq.tabulate(8)(i => s"alpha beta gamma$i").toDF("text")
     val rows = Vocabulary.bigramLlr(docs, "text", minCount = 2, topK = 1)
       .collect()
-    Vocabulary.releaseCaches()
     assert(rows.length == 1)
     assert((rows.head.getString(0), rows.head.getString(1)) == (("alpha", "beta")))
   }

@@ -18,7 +18,6 @@ class MarketBasketSpec extends SparkSpec {
     val out = MarketBasket.associationRules(rows.toDF("b", "i"), "b", "i",
       minPairCount = 2L, topK = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r).toMap
-    MarketBasket.releaseCaches()
     // n=5 baskets; c1=4, c2=4, c3=3; pairs: (1,2)=3, (1,3)=2, (2,3)=2
     val p12 = out((1L, 2L))
     assert(p12.getLong(2) == 3)
@@ -34,10 +33,8 @@ class MarketBasketSpec extends SparkSpec {
     val dup = rows ++ Seq((100L, 1L), (100L, 1L))
     val a = MarketBasket.associationRules(dup.toDF("b", "i"), "b", "i",
       minPairCount = 2L, topK = 10).orderBy("rank").collect().toSeq
-    MarketBasket.releaseCaches()
     val b = MarketBasket.associationRules(rows.toDF("b", "i").repartition(7),
       "b", "i", minPairCount = 2L, topK = 10).orderBy("rank").collect().toSeq
-    MarketBasket.releaseCaches()
     assert(a == b)
   }
 
@@ -46,7 +43,6 @@ class MarketBasketSpec extends SparkSpec {
     assertThrows[IllegalArgumentException] {
       MarketBasket.associationRules(empty, "b", "i")
     }
-    MarketBasket.releaseCaches()
     val one = Seq((1L, 1L)).toDF("b", "i")
     assertThrows[IllegalArgumentException] {
       MarketBasket.associationRules(one, "b", "i", minPairCount = 0L)

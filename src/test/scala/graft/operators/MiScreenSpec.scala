@@ -14,7 +14,6 @@ class MiScreenSpec extends SparkSpec {
   private def run(df: DataFrame, label: Column,
       fs: Seq[(String, Column)]): Seq[Row] = {
     val out = Evaluation.miScreen(df, label, fs).collect().toSeq
-    Evaluation.releaseCaches()
     out
   }
 

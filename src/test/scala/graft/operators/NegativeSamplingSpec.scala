@@ -18,7 +18,6 @@ class NegativeSamplingSpec extends SparkSpec {
   test("k draws per document, every draw maps into its cumulative range") {
     val out = Vocabulary.negativeSamples(docs, "text", "doc_id", k = 7)
       .collect()
-    Vocabulary.releaseCaches()
     assert(out.length == 5 * 7)
 
     // replay the mapping on the driver: vocab ordered by (cnt DESC, token)
@@ -43,7 +42,6 @@ class NegativeSamplingSpec extends SparkSpec {
     def run(df: org.apache.spark.sql.DataFrame): Seq[String] = {
       val r = Vocabulary.negativeSamples(df, "text", "doc_id", k = 3)
         .orderBy("doc_id", "neg_idx").collect().map(_.toString).toSeq
-      Vocabulary.releaseCaches()
       r
     }
     val a = run(docs)
@@ -58,7 +56,6 @@ class NegativeSamplingSpec extends SparkSpec {
       "text", "doc_id", k = 1)
       .groupBy("token").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    Vocabulary.releaseCaches()
     // 'the' holds 8/24 of the cumulative space; 1000 deterministic draws
     // should land hundreds there and dwarf any singleton token
     assert(out("the") > 200, s"'the' drew only ${out("the")} of 1000")
@@ -70,6 +67,5 @@ class NegativeSamplingSpec extends SparkSpec {
       Vocabulary.negativeSamples(
         docs.where(lit(false)), "text", "doc_id", k = 2).count()
     }
-    Vocabulary.releaseCaches()
   }
 }

@@ -47,7 +47,6 @@ class DedupSpec extends SparkSpec {
     val pairs = Dedup.minhashNearDuplicatesAcross(train, eval_, "text", "doc_id",
       threshold = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    Dedup.releaseCaches()
     assert(pairs == Set((1L, 100L)), pairs.toString)
   }
 
@@ -88,7 +87,6 @@ class DedupSpec extends SparkSpec {
     // localEdgeThreshold=0 forces the distributed loop — identical answer
     val dist = Dedup.duplicateClusters(pairs, localEdgeThreshold = 0)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    Dedup.releaseCaches()
     assert(dist == expected, dist.toString)
   }
 
@@ -100,7 +98,6 @@ class DedupSpec extends SparkSpec {
     val pairs = (1L until 60L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val clusters = Dedup.duplicateClusters(pairs, maxIter = 10, localEdgeThreshold = 0)
       .collect().map(r => r.getLong(0) -> r.getLong(1))
-    Dedup.releaseCaches()
     assert(clusters.length == 60)
     assert(clusters.forall(_._2 == 1L), clusters.filter(_._2 != 1L).mkString(","))
   }
@@ -117,7 +114,6 @@ class DedupSpec extends SparkSpec {
     }.toDF("id_a", "id_b")
     val clusters = Dedup.duplicateClusters(pairs, maxIter = 13, localEdgeThreshold = 0)
       .collect().map(r => r.getLong(0) -> r.getLong(1))
-    Dedup.releaseCaches()
     assert(clusters.length == 10000)
     assert(clusters.forall { case (id, cl) => cl == (id / 1000L) * 1000L },
       clusters.filter { case (id, cl) => cl != (id / 1000L) * 1000L }.take(5).mkString(","))
@@ -131,7 +127,6 @@ class DedupSpec extends SparkSpec {
     val e = intercept[IllegalStateException] {
       Dedup.duplicateClusters(pairs, maxIter = 2, localEdgeThreshold = 0).collect()
     }
-    Dedup.releaseCaches()
     assert(e.getMessage.contains("did not converge"), e.getMessage)
   }
 
@@ -421,7 +416,6 @@ class TextAnalysisSpec extends SparkSpec {
       quasi = Seq("grp" -> col("grp")), sensitive = col("v"), tPpm = 200000)
       .collect().map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(2), r.getBoolean(3))).toMap
-    TextAnalysis.releaseCaches()
     assert(out == Map("a" -> (4L, 166666L, false), "b" -> (2L, 333333L, true)))
   }
 
@@ -434,7 +428,6 @@ class TextAnalysisSpec extends SparkSpec {
     val out = TextAnalysis.tClosenessAudit(mirror,
       Seq("grp" -> col("grp")), col("v"), tPpm = 100000)
       .collect().map(r => r.getString(0) -> r.getLong(2)).toMap
-    TextAnalysis.releaseCaches()
     assert(out == Map("a" -> 0L, "b" -> 0L), "null-sensitive rows drop; " +
       "corpus-mirroring groups disclose nothing")
     assertThrows[IllegalArgumentException] {
@@ -450,11 +443,9 @@ class TextAnalysisSpec extends SparkSpec {
     val a = TextAnalysis.tClosenessAudit(rows.toDF("grp", "v"),
       Seq("grp" -> col("grp")), col("v"), 100000)
       .orderBy("grp").collect().toSeq
-    TextAnalysis.releaseCaches()
     val b = TextAnalysis.tClosenessAudit(rows.toDF("grp", "v").repartition(13),
       Seq("grp" -> col("grp")), col("v"), 100000)
       .orderBy("grp").collect().toSeq
-    TextAnalysis.releaseCaches()
     assert(a == b)
   }
 }

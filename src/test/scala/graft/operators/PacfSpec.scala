@@ -42,7 +42,6 @@ class PacfSpec extends SparkSpec {
       .collect().groupBy(_.getString(0))
       .view.mapValues(_.sortBy(_.getLong(1)).map(_.getDouble(3)).toSeq).toMap
     val got = Seasonal.pacf(df, col("s"), col("ts"), maxLag = 5).collect()
-    Seasonal.releaseCaches()
     got.foreach { row =>
       val series = row.getString(0)
       val expected = dlReference(acf(series))
@@ -61,7 +60,6 @@ class PacfSpec extends SparkSpec {
     val df = eventsDf((1 to 3).flatMap(d =>
       (1 to d + 1).map(i => ("a", f"2024-02-0$d%01d 0$i%01d:00:00"))))
     val r = Seasonal.pacf(df, col("s"), col("ts"), maxLag = 5).collect().head
-    Seasonal.releaseCaches()
     assert(!r.isNullAt(1))
     assert(r.isNullAt(4) && r.isNullAt(5))
   }
@@ -72,7 +70,6 @@ class PacfSpec extends SparkSpec {
       .collect().groupBy(_.getString(0))
       .view.mapValues(_.map(r => (r.getLong(1), r.getDouble(3))).toSeq).toMap
     val got = Seasonal.ljungBox(df, col("s"), col("ts"), maxLag = 7).collect()
-    Seasonal.releaseCaches()
     got.foreach { row =>
       val (series, n) = (row.getString(0), row.getLong(1).toDouble)
       assert(n == 21.0d)

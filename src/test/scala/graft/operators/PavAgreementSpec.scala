@@ -38,7 +38,6 @@ class PavAgreementSpec extends SparkSpec {
     val df = rows.map { case (s, y, bin) => (bin / 10.0 + 0.05, y) }
       .toDF("s", "y")
     val out = Evaluation.pavCalibrate(df, col("s"), col("y")).collect()
-    Evaluation.releaseCaches()
     val expected = pavRef(perBin.map { case (_, n, pos) => (pos, n) })
     assert(out.map(_.getLong(5)).toSeq == expected)
     // fitted is non-decreasing
@@ -54,7 +53,6 @@ class PavAgreementSpec extends SparkSpec {
       Seq.fill(2)((0.55, true)) ++ Seq((0.55, false)) ++
       Seq.fill(3)((0.95, true))).toDF("s", "y")
     val out = Evaluation.pavCalibrate(df, col("s"), col("y")).collect()
-    Evaluation.releaseCaches()
     assert(out.map(_.getLong(5)).toSeq ==
       Seq(1000000L / 5, 2000000L / 3, 1000000L))
     assert(out.map(r => r.getLong(4)).toSeq == out.map(_.getLong(5)).toSeq)
@@ -65,7 +63,6 @@ class PavAgreementSpec extends SparkSpec {
     val df = (Seq.fill(2)((0.05, true)) ++ Seq.fill(2)((0.95, false)))
       .toDF("s", "y")
     val out = Evaluation.pavCalibrate(df, col("s"), col("y")).collect()
-    Evaluation.releaseCaches()
     assert(out.map(_.getLong(5)).toSeq == Seq(500000L, 500000L))
   }
 
@@ -75,7 +72,6 @@ class PavAgreementSpec extends SparkSpec {
     val df = Seq((0.25, true), (0.25, false), (0.75, true)).toDF("s", "y")
     val r = Evaluation.recalibrationLift(df, col("s"), col("y"))
       .collect().head
-    Evaluation.releaseCaches()
     val brier = Evaluation.brierReport(df, col("s"), col("y")).collect().head
     assert(r.getLong(2) == brier.getLong(2))       // brier_raw matches x194
     assert(r.getLong(4) == brier.getLong(3))       // lift == reliability_ppm
@@ -90,7 +86,6 @@ class PavAgreementSpec extends SparkSpec {
       .toDF("s", "y")
     val r = Evaluation.recalibrationLift(df, col("s"), col("y"))
       .collect().head
-    Evaluation.releaseCaches()
     assert(r.getLong(3) == 187500L)
     assert(r.getLong(6) == 250000L) // pooled fit ≠ per-bin rates
   }
@@ -104,7 +99,6 @@ class PavAgreementSpec extends SparkSpec {
     }.toDF("vec_id", "embedding", "label")
     val r = Clustering.clusterAgreement(emb, "vec_id", "embedding", "label",
       nCells = 2, seed = "v1").collect().head
-    Clustering.releaseCaches()
     assert(r.getLong(0) == 12L && r.getLong(1) == 2L)
     // the blob geometry guarantees the md5-seeded pivots separate the two
     // blobs for this seed — n_cells MUST be 2 (a 1-cell outcome would have
@@ -122,7 +116,6 @@ class PavAgreementSpec extends SparkSpec {
       .toDF("vec_id", "embedding", "label")
     val r = Clustering.clusterAgreement(emb, "vec_id", "embedding", "label",
       nCells = 2, seed = "v1").collect().head
-    Clustering.releaseCaches()
     assert(r.getLong(2) == 1L)
     assert(r.getLong(3) == 0L) // T·Σij = Σa·Σb exactly at independence
     assert(r.isNullAt(4)) // H_cell = 0
@@ -139,7 +132,6 @@ class PavAgreementSpec extends SparkSpec {
       .toDF("vec_id", "embedding", "label")
     val r = Clustering.clusterAgreement(emb, "vec_id", "embedding", "label",
       nCells = 2, seed = "v1").collect().head
-    Clustering.releaseCaches()
     if (r.getLong(2) == 2L) {
       // Σij = C(3,2)+C(1,2)+C(2,2) = 3+0+1 = 4; a: C(3,2)+C(3,2) = 6;
       // b: C(4,2)+C(2,2) = 7; T = 15

@@ -45,7 +45,6 @@ class PerceptualHashSpec extends SparkSpec {
     val media = mediaFrame(Seq(1L -> blobA, 2L -> blobA, 3L -> blobB))
     val out = Multimodal.perceptualNearDuplicates(media, maxDist = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    Multimodal.releaseCaches()
     val hs = Multimodal.perceptualHashes(media)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(out.contains((1L, 2L, 0L)))
@@ -62,7 +61,6 @@ class PerceptualHashSpec extends SparkSpec {
     for (k <- Seq(0, 3, 5)) {
       val got = Multimodal.perceptualNearDuplicates(media, maxDist = k)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      Multimodal.releaseCaches()
       val hashes = Multimodal.perceptualHashes(media)
         .collect().map(r => (r.getLong(0), r.getLong(1)))
       val want = (for {
@@ -100,7 +98,6 @@ class PerceptualHashSpec extends SparkSpec {
       .mapPartitions(it => Iterator(it.size.toLong)).collect()
     val histogram = out.groupBy("dist").count()
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    Multimodal.releaseCaches()
 
     // local truth: the codec on the driver + exact cluster arithmetic
     val clusterSizes = rows.groupBy { case (_, b) => Multimodal.MediaCodec.aHash64(b) }
@@ -135,7 +132,6 @@ class PerceptualHashSpec extends SparkSpec {
     val media = mediaFrame(Seq(5L -> blobA, 2L -> blobA, 9L -> blobB, 7L -> blobA))
     val got = Multimodal.perceptualClusters(media)
       .collect().map(r => (r.getLong(0), r.getLong(2), r.getLong(3))).toSet
-    Multimodal.releaseCaches()
     assert(got == Set((2L, 2L, 3L), (5L, 2L, 3L), (7L, 2L, 3L), (9L, 9L, 1L)))
   }
 
@@ -148,7 +144,6 @@ class PerceptualHashSpec extends SparkSpec {
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6))).toSet
-    Multimodal.releaseCaches()
     val hashes = Multimodal.perceptualHashes(media)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val byHash = hashes.groupBy(_._2).view
@@ -170,7 +165,6 @@ class PerceptualHashSpec extends SparkSpec {
     val out = Multimodal.perceptualNearDuplicates(
       mediaFrame(Seq(10L -> base, 11L -> tweaked)), maxDist = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
-    Multimodal.releaseCaches()
     assert(out.contains((10L, 11L)),
       "single-byte perturbation should stay within Hamming 3")
   }

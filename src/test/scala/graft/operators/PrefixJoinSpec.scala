@@ -44,7 +44,6 @@ class PrefixJoinSpec extends SparkSpec {
         shingleSize = 1)
         .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("j"))
         .collect().map(_.toString).sorted.toSeq
-      Dedup.releaseCaches()
       val expect = bruteForce(df, t)
       assert(got == expect, s"t=$t: ${got.size} vs ${expect.size} pairs")
       assert(expect.nonEmpty || t > 0.8, s"fixture produced no pairs at t=$t")
@@ -56,10 +55,8 @@ class PrefixJoinSpec extends SparkSpec {
       (4L, "x y"), (5L, "a b c d e f h")).toDF("id", "text")
     val a = Dedup.prefixJaccardPairs(df.repartition(1), "text", "id", 0.5, 3)
       .collect().map(_.toString).sorted.toSeq
-    Dedup.releaseCaches()
     val b = Dedup.prefixJaccardPairs(df.repartition(7), "text", "id", 0.5, 3)
       .collect().map(_.toString).sorted.toSeq
-    Dedup.releaseCaches()
     assert(a == b)
     // docs 1 and 2 are identical (jaccard 1.0); doc 5 shares 4 of 6
     // distinct shingles with them (4/(5+5-4) = 0.666... ≥ 0.5)
@@ -98,7 +95,6 @@ class PrefixJoinSpec extends SparkSpec {
         shingleSize = 1)
         .select(col("id_a"), col("id_b"), col("containment_ppm").as("ppm"))
         .collect().map(_.toString).sorted.toSeq
-      Dedup.releaseCaches()
       val expect = bruteContainment(df, t)
       assert(got == expect, s"t=$t: ${got.size} vs ${expect.size} pairs")
       assert(expect.nonEmpty, s"fixture produced no pairs at t=$t")
@@ -113,12 +109,10 @@ class PrefixJoinSpec extends SparkSpec {
       .toDF("id", "text")
     val cont = Dedup.containmentPairs(df, "text", "id", 0.9, 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    Dedup.releaseCaches()
     assert(cont.contains((1L, 2L)), s"quote→long containment missing: $cont")
     assert(!cont.contains((2L, 1L)), "long doc is NOT contained in the quote")
     val jac = Dedup.prefixJaccardPairs(df, "text", "id", 0.5, 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    Dedup.releaseCaches()
     assert(!jac.contains((1L, 2L)),
       "fixture broken: symmetric Jaccard should miss the quote pair")
   }

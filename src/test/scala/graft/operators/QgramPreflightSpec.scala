@@ -22,7 +22,6 @@ class QgramPreflightSpec extends SparkSpec {
     val r = dirty.toDF("id", "v")
     val out = FuzzyLinkage.qgramJoinPreflight(l, r, "id", "v", "id", "v",
       maxDist = maxDist, q = q, budgetPairs = budget).collect().head
-    FuzzyLinkage.releaseCaches()
     out
   }
 
@@ -76,7 +75,6 @@ class QgramPreflightSpec extends SparkSpec {
         .as("dirty_title"))
     val r = FuzzyLinkage.qgramJoinPreflight(clean, dirty, "doc_id", "title",
       "doc_id", "dirty_title", maxDist = 1, q = 3).collect().head
-    FuzzyLinkage.releaseCaches()
     val longPairs = r.getAs[Long]("long_pairs")
     val total = r.getAs[Long]("total_pairs")
     // every long string contributes candidates (it shares at least its own
@@ -90,7 +88,6 @@ class QgramPreflightSpec extends SparkSpec {
     // the pre-dedup candidate volume bounds the join's true output
     val matches = FuzzyLinkage.qgramJoin(clean, dirty, "doc_id", "title",
       "doc_id", "dirty_title", maxDist = 1, q = 3).count()
-    FuzzyLinkage.releaseCaches()
     assert(matches <= total)
   }
 }

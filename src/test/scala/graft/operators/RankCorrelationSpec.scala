@@ -50,14 +50,12 @@ class RankCorrelationSpec extends SparkSpec {
   private def runSpearman(pairs: Seq[(Long, Long)]): (Long, Option[Double]) = {
     val r = Evaluation.spearmanRho(pairs.toDF("x", "y"), col("x"), col("y"),
       roundTo = 8).collect().head
-    Evaluation.releaseCaches()
     (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getDouble(1)))
   }
 
   private def runKendall(pairs: Seq[(Long, Long)]): (Long, Option[Double]) = {
     val r = Evaluation.kendallTauB(pairs.toDF("x", "y"), col("x"), col("y"),
       roundTo = 8).collect().head
-    Evaluation.releaseCaches()
     (r.getLong(0), if (r.isNullAt(3)) None else Some(r.getDouble(3)))
   }
 

@@ -22,7 +22,6 @@ class RankDiversitySpec extends SparkSpec {
     } yield (s, s"$d 00:0${i % 6}:0${i % 10}")
     val r = Seasonal.friedmanTest(eventsDf(rows), col("s"), col("ts"))
       .collect().head
-    Seasonal.releaseCaches()
     assert(r.getLong(0) == 3L && r.getLong(1) == 3L)
     assert(r.getDouble(2) == 6.0d)
   }
@@ -35,7 +34,6 @@ class RankDiversitySpec extends SparkSpec {
       ("b", "2024-01-02 00:00:00"))
     val r = Seasonal.friedmanTest(eventsDf(rows), col("s"), col("ts"))
       .collect().head
-    Seasonal.releaseCaches()
     assert(r.getLong(0) == 2L && r.getLong(1) == 2L)
     // ranks: day1 a=2,b=1; day2 a=1,b=2 → R2 = {6,6}; num = 0 → chi2 = 0
     assert(r.getDouble(2) == 0.0d)
@@ -45,14 +43,12 @@ class RankDiversitySpec extends SparkSpec {
     val one = Seq(("a", "2024-01-01 00:00:00"), ("a", "2024-01-02 00:00:00"))
     val r1 = Seasonal.friedmanTest(eventsDf(one), col("s"), col("ts"))
       .collect().head
-    Seasonal.releaseCaches()
     assert(r1.isNullAt(2))
     val tied = Seq(
       ("a", "2024-01-01 00:00:00"), ("b", "2024-01-01 00:01:00"),
       ("a", "2024-01-02 00:00:00"), ("b", "2024-01-02 00:01:00"))
     val r2 = Seasonal.friedmanTest(eventsDf(tied), col("s"), col("ts"))
       .collect().head
-    Seasonal.releaseCaches()
     assert(r2.isNullAt(2)) // every block fully tied → denominator 0
   }
 
@@ -62,14 +58,12 @@ class RankDiversitySpec extends SparkSpec {
       (1L, "a a"), (2L, "a b"), (3L, "b b"), (4L, "c c")).toDF("doc_id", "text")
     val out = Vocabulary.rboCompare(docs, "text", "doc_id",
       Seq("q1" -> "a b"), k = 3).collect().head
-    Vocabulary.releaseCaches()
     assert(out.getLong(1) == 3L && out.getLong(2) == 3L)
     assert(out.getLong(3) == 3L) // full overlap
     // X_d = d at every depth: rbo = (1−p)·Σ p^{d−1} = 1 − p^k = 1 − 0.729
     assert(math.abs(out.getDouble(4) - (1.0 - math.pow(0.9, 3))) < 1e-6)
     val out2 = Vocabulary.rboCompare(docs, "text", "doc_id",
       Seq("q1" -> "zz"), k = 3).collect().head
-    Vocabulary.releaseCaches()
     assert(out2.getLong(3) == 0L && out2.getDouble(4) == 0.0d)
   }
 

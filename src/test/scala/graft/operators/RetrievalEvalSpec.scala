@@ -21,11 +21,9 @@ class RetrievalEvalSpec extends SparkSpec {
   test("metrics agree with the separately computed ranking and relevance") {
     val out = Vocabulary.retrievalEvalBm25(
       docs, "text", "doc_id", Seq("q1" -> "a b"), k = 3).collect()
-    Vocabulary.releaseCaches()
     val ranked = Vocabulary.bm25TopK(
       docs, "text", "doc_id", Seq("q1" -> "a b"), k = 3)
       .orderBy("rank").collect().map(r => (r.getLong(1), r.getLong(3)))
-    Vocabulary.releaseCaches()
     val relevant = Set(2L, 5L) // docs containing BOTH a and b
     val hits = ranked.filter { case (doc, _) => relevant(doc) }
     val r = out.head
@@ -46,7 +44,6 @@ class RetrievalEvalSpec extends SparkSpec {
   test("no relevant documents → zero hits, NULL recall and ndcg, mrr 0") {
     val out = Vocabulary.retrievalEvalBm25(
       docs, "text", "doc_id", Seq("q1" -> "a e"), k = 2).collect()
-    Vocabulary.releaseCaches()
     val r = out.head
     assert(r.getLong(2) == 0L && r.getLong(3) == 0L)
     assert(r.getLong(4) == 0L)
@@ -58,7 +55,6 @@ class RetrievalEvalSpec extends SparkSpec {
   test("a query with no matching postings still reports a zero row") {
     val out = Vocabulary.retrievalEvalBm25(
       docs, "text", "doc_id", Seq("q1" -> "zz yy"), k = 2).collect()
-    Vocabulary.releaseCaches()
     val r = out.head
     assert(r.getLong(1) == 0L && r.getLong(2) == 0L && r.getLong(3) == 0L)
   }
@@ -66,7 +62,6 @@ class RetrievalEvalSpec extends SparkSpec {
   test("minTf tightens relevance: only the double-b document survives tf>=2") {
     val out = Vocabulary.retrievalEvalBm25(
       docs, "text", "doc_id", Seq("q1" -> "b"), k = 5, minTf = 2).collect()
-    Vocabulary.releaseCaches()
     val r = out.head
     assert(r.getLong(2) == 1L) // only doc 5 has b twice
   }

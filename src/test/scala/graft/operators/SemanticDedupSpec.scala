@@ -33,7 +33,6 @@ class SemanticDedupSpec extends SparkSpec {
 
     val got = clusters(Similarity.semanticDupClusters(df, "vec_id", "embedding",
       threshold = 0.9, nCentroids = 8).collect())
-    Dedup.releaseCaches()
 
     // ground truth: exact all-pairs → same component collapse
     val a = df.select(col("vec_id").as("id_a"), col("embedding").as("va"))
@@ -43,7 +42,6 @@ class SemanticDedupSpec extends SparkSpec {
       .where(col("sim") >= 0.9)
       .select("id_a", "id_b")
     val expected = clusters(Dedup.duplicateClusters(truthPairs).collect())
-    Dedup.releaseCaches()
 
     assert(got == expected, s"got $got expected $expected")
     // sanity on the fixture itself: three groups, min-id representatives,
@@ -65,7 +63,6 @@ class SemanticDedupSpec extends SparkSpec {
     val got = Similarity.semanticDupClusters(emb, "vec_id", "embedding",
       threshold = 0.35, nCentroids = 16, passes = 4)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
-    Dedup.releaseCaches()
     assert(got.nonEmpty, "x42 at shipped params must find clusters, not run the empty path")
 
     val a = emb.select(col("vec_id").as("id_a"), col("embedding").as("va"))
@@ -76,7 +73,6 @@ class SemanticDedupSpec extends SparkSpec {
       .select("id_a", "id_b")
     val truthIds = Dedup.duplicateClusters(truthPairs)
       .collect().map(_.getLong(0)).toSet
-    Dedup.releaseCaches()
 
     // every id the cell-blocked path marks is a true duplicate (exact
     // cosine verify inside the cell) — id precision is 1 by construction
@@ -95,7 +91,6 @@ class SemanticDedupSpec extends SparkSpec {
     val onePassIds = Similarity.semanticDupClusters(emb, "vec_id", "embedding",
       threshold = 0.35, nCentroids = 16, passes = 1)
       .collect().map(_.getLong(0)).toSet
-    Dedup.releaseCaches()
     info(f"single-pass id recall = ${onePassIds.size.toDouble / truthIds.size}%.3f")
     assert(onePassIds.subsetOf(gotIds),
       "rotated-seed passes lost ids a single pass found")
@@ -110,7 +105,6 @@ class SemanticDedupSpec extends SparkSpec {
     val got = Similarity.semanticDupClustersPivots(emb, "vec_id", "embedding",
       threshold = 0.35, nCells = 16, seed = "v1", passes = 4)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
-    Dedup.releaseCaches()
     assert(got.nonEmpty, "x42 pivot path must find clusters, not run the empty path")
 
     val a = emb.select(col("vec_id").as("id_a"), col("embedding").as("va"))
@@ -121,7 +115,6 @@ class SemanticDedupSpec extends SparkSpec {
       .select("id_a", "id_b")
     val truthIds = Dedup.duplicateClusters(truthPairs)
       .collect().map(_.getLong(0)).toSet
-    Dedup.releaseCaches()
 
     val gotIds = got.map(_._1)
     assert(gotIds.subsetOf(truthIds),
@@ -135,7 +128,6 @@ class SemanticDedupSpec extends SparkSpec {
       "vec_id", "embedding", threshold = 0.35, nCells = 16, seed = "v1",
       passes = 4)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
-    Dedup.releaseCaches()
     assert(again == got, "pivot clustering must be independent of partition layout")
   }
 
@@ -146,6 +138,5 @@ class SemanticDedupSpec extends SparkSpec {
     val out = Similarity.semanticDupClusters(noise, "vec_id", "embedding",
       threshold = 0.9, nCentroids = 4)
     assert(out.isEmpty)
-    Dedup.releaseCaches()
   }
 }

@@ -14,7 +14,6 @@ class ShardingSpec extends SparkSpec {
       .select("doc_id", "n_tokens", "shard")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
     val out = run()
-    Sharding.releaseShardCaches()
 
     // reference: driver-side exclusive prefix sum over id order
     var acc = 0L
@@ -35,15 +34,13 @@ class ShardingSpec extends SparkSpec {
       numPartitions = 1)
       .select("doc_id", "n_tokens", "shard")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
-    Sharding.releaseShardCaches()
     assert(single == out)
   }
 
-  test("releaseShardCaches drops the ranged layout") {
+  test("the caller's Scope drops the ranged layout") {
     val docs = (1L to 50L).map(i => (i, 10L)).toDF("doc_id", "n_tokens")
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    Sharding.assignShards(docs, "doc_id", "n_tokens", budget = 100L).count()
-    Sharding.releaseShardCaches()
+    Scope { Sharding.assignShards(docs, "doc_id", "n_tokens", budget = 100L).count() }
     // unpersist is async; poll briefly
     val deadline = System.nanoTime() + 10e9.toLong
     while (System.nanoTime() < deadline &&
@@ -58,7 +55,6 @@ class ShardingSpec extends SparkSpec {
     val out = Sharding.interleavePositions(docs, "source", "doc_id")
       .select("pos", "source")
       .collect().map(r => r.getLong(0) -> r.getString(1)).sortBy(_._1)
-    Sharding.releaseShardCaches()
     assert(out.map(_._1).toSeq == (0L until 120L))
     out.grouped(3).foreach { cycle =>
       assert(cycle.map(_._2).toSet == Set("src0", "src1", "src2"),
@@ -72,7 +68,6 @@ class ShardingSpec extends SparkSpec {
     val out = Sharding.interleavePositions(docs, "source", "doc_id")
       .select("pos", "doc_id", "source")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).sortBy(_._1)
-    Sharding.releaseShardCaches()
     // rank-1 rows come first (big's doc 0, then tiny's only doc), then big runs out the tail
     assert(out.take(2).map(_._3).toSeq == Seq("big", "tiny"), out.mkString(","))
     assert(out.drop(2).forall(_._3 == "big"))
@@ -92,7 +87,6 @@ class SequencePackingSpec extends SparkSpec {
       contextLen = 2000L, shardBudget = 100000L)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .sortBy(_._1)
-    Sharding.releaseShardCaches()
 
     assert(out.map(x => x._1 -> x._4).toMap ==
       Map(1L -> 0L, 2L -> 0L, 3L -> 1L, 4L -> 2L, 5L -> 3L, 6L -> 3L, 7L -> 4L),
@@ -111,7 +105,6 @@ class SequencePackingSpec extends SparkSpec {
         docs.repartition(parts), "doc_id", "n_tokens",
         contextLen = 1000L, shardBudget = 8000L)
         .collect().map(x => (x.getLong(0), x.getLong(2), x.getLong(3))).sortBy(_._1).toSeq
-      Sharding.releaseShardCaches()
       r
     }
     assert(run(1) == run(7))
@@ -158,7 +151,6 @@ class CorpusEndToEndSpec extends SparkSpec {
     assert(packed.count() == sampled.count())
 
     cleaned.unpersist()
-    Sharding.releaseShardCaches()
   }
 }
 

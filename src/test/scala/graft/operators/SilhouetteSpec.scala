@@ -76,7 +76,6 @@ class SilhouetteSpec extends SparkSpec {
       : Map[Long, (Long, Long, Option[Long])] = {
     val out = Clustering.silhouetteReport(df(rows), "vec_id", "embedding",
       nCells = nCells).collect()
-    Clustering.releaseCaches()
     out.map(r => r.getLong(0) ->
       (r.getLong(1), r.getLong(2),
         if (r.isNullAt(3)) None else Some(r.getLong(3)))).toMap
@@ -128,10 +127,8 @@ class SilhouetteSpec extends SparkSpec {
       (id, Array((id % 7).toFloat * 3, (id % 5).toFloat * 2, id.toFloat / 4)))
     val a = Clustering.silhouetteReport(df(rows), "vec_id", "embedding",
       nCells = 4).collect().map(_.toString).toSeq
-    Clustering.releaseCaches()
     val b = Clustering.silhouetteReport(df(rows).repartition(9), "vec_id",
       "embedding", nCells = 4).collect().map(_.toString).toSeq
-    Clustering.releaseCaches()
     assert(a == b)
   }
 

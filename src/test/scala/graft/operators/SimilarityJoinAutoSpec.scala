@@ -37,7 +37,6 @@ class SimilarityJoinAutoSpec extends SparkSpec {
       .orderBy("left_id", "right_id")
     val materialized = out.cache()
     materialized.count()
-    FuzzyLinkage.releaseCaches()
     val rows = materialized.collect().toSeq
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
     materialized.unpersist(blocking = false)
@@ -51,7 +50,6 @@ class SimilarityJoinAutoSpec extends SparkSpec {
       .orderBy("left_id", "right_id")
     val materialized = out.cache()
     materialized.count()
-    FuzzyLinkage.releaseCaches()
     val rows = materialized.collect().toSeq
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     materialized.unpersist(blocking = false)
@@ -109,13 +107,11 @@ class SimilarityJoinAutoSpec extends SparkSpec {
     FuzzyLinkage.qgramJoin(clean, dirty, "doc_id", "title",
       "doc_id", "dirty_title", maxDist = 1, q = 3).count()
     val directCached = spark.sparkContext.getPersistentRDDs.size
-    FuzzyLinkage.releaseCaches()
     reset()
     FuzzyLinkage.similarityJoinAuto(clean, dirty, "doc_id", "title",
       "doc_id", "dirty_title", maxDist = 1, q = 3,
       budgetPairs = 100000000L).count()
     val autoCached = spark.sparkContext.getPersistentRDDs.size
-    FuzzyLinkage.releaseCaches()
     reset()
     assert(autoCached <= directCached,
       s"$autoCached RDDs cached after auto vs $directCached after direct " +

@@ -76,7 +76,6 @@ class SkewStressSpec extends SparkSpec {
       val linked = FuzzyLinkage.bestMatch(clean, dirty, "cid", "name",
         "did", "dname", neighborhood = 8, maxDist = 2)
       val rows = linked.count()
-      Sharding.releaseShardCaches()
       rows
     }
     info(f"SNM linkage on 100k+100k rows (hot value 10%%): $t%.2f s, $out links")

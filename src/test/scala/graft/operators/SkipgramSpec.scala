@@ -33,7 +33,6 @@ class SkipgramSpec extends SparkSpec {
           .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text"),
         "text", "doc_id", window = w)
         .collect().map(r => ((r.getString(0), r.getString(1)), r.getLong(2))).toMap
-      Vocabulary.releaseCaches()
       assert(got == reference(docs, w), s"window $w")
     }
   }
@@ -43,7 +42,6 @@ class SkipgramSpec extends SparkSpec {
         .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text"),
       "text", "doc_id", window = 2)
       .collect().map(r => ((r.getString(0), r.getString(1)), r.getLong(2))).toMap
-    Vocabulary.releaseCaches()
     for (((a, b), n) <- got) {
       assert(got((b, a)) == n, s"asymmetric pair ($a,$b)")
       if (a == b) assert(n % 2 == 0, s"self-pair ($a,$a) must count both directions")

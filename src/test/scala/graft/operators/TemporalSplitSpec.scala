@@ -18,7 +18,6 @@ class TemporalSplitSpec extends SparkSpec {
     val out = TemporalSplit.walkForwardFolds(events, "ts", "event_id",
       nFolds = 4, embargoMicros = 60L * 1000000)
       .orderBy("fold").collect()
-    Sharding.releaseShardCaches()
     assert(out.length == 4)
     val byFold = out.map(r => r.getAs[Long]("fold") ->
       (r.getAs[Long]("boundary_us"),
@@ -39,7 +38,6 @@ class TemporalSplitSpec extends SparkSpec {
     val embargo = 5000L * 60 * 1000000
     val out = TemporalSplit.walkForwardFolds(events, "ts", "event_id",
       nFolds = 4, embargoMicros = embargo).collect()
-    Sharding.releaseShardCaches()
     // replay driver-side from the raw minutes
     val us = (1L to 500L).map { i => i }.zip(
       events.collect().map(_.getAs[Timestamp]("ts").getTime * 1000L)).map(_._2)
@@ -61,7 +59,6 @@ class TemporalSplitSpec extends SparkSpec {
     val out = TemporalSplit.walkForwardFolds(events, "ts", "event_id",
       nFolds = 4, embargoMicros = 0L)
     assert(out.collect().isEmpty)
-    Sharding.releaseShardCaches()
   }
 
   test("deterministic across partition layouts") {
@@ -70,7 +67,6 @@ class TemporalSplitSpec extends SparkSpec {
       val rows = TemporalSplit.walkForwardFolds(events.repartition(parts),
         "ts", "event_id", nFolds = 3, embargoMicros = 60000000L)
         .orderBy("fold").collect().map(_.toString).toSeq
-      Sharding.releaseShardCaches()
       rows
     }
     assert(run(1) == run(13))

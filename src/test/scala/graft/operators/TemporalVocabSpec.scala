@@ -335,7 +335,6 @@ class ShufflePositionsSpec extends SparkSpec {
     def run(parts: Int) = {
       val r = Sharding.shufflePositions(docs.repartition(parts), "doc_id", "s1")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1).toSeq
-      Sharding.releaseShardCaches()
       r
     }
     val out = run(1)
@@ -344,7 +343,6 @@ class ShufflePositionsSpec extends SparkSpec {
     // a different seed is a different permutation (300 ids: collision odds ~0)
     val other = Sharding.shufflePositions(docs, "doc_id", "s2")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1).toSeq
-    Sharding.releaseShardCaches()
     assert(other != out)
     assert(other.map(_._2).sorted == (0L until 300L))
   }

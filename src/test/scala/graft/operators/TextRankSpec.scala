@@ -64,7 +64,6 @@ class TextRankSpec extends SparkSpec {
     val got = Vocabulary.textrankKeywords(df, "text", "doc_id",
       iters = 5, topK = 1000)
       .collect().map(r => (r.getString(0), (r.getLong(1), r.getLong(2)))).toMap
-    Vocabulary.releaseCaches(); Graph.releaseCaches()
     val exp = refRanks(undirected(docs), iters = 5)
     assert(got == exp, s"got $got\nexpected $exp")
   }
@@ -74,7 +73,6 @@ class TextRankSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val top = Vocabulary.textrankKeywords(df, "text", "doc_id",
       iters = 5, topK = 3).collect()
-    Vocabulary.releaseCaches(); Graph.releaseCaches()
     val exp = refRanks(undirected(docs), iters = 5).toSeq
       .sortBy { case (w, (r, _)) => (-r, w) }.take(3)
     assert(top.map(_.getString(0)).toSeq == exp.map(_._1))
@@ -89,11 +87,9 @@ class TextRankSpec extends SparkSpec {
     val a = Vocabulary.textrankKeywords(df.repartition(7), "text", "doc_id",
       iters = 4, topK = 1000).collect().map(r =>
       (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    Vocabulary.releaseCaches(); Graph.releaseCaches()
     val b = Vocabulary.textrankKeywords(df.coalesce(1), "text", "doc_id",
       iters = 4, topK = 1000).collect().map(r =>
       (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    Vocabulary.releaseCaches(); Graph.releaseCaches()
     assert(a == b)
   }
 }

@@ -73,7 +73,6 @@ class TrainingDataPipelineSpec extends SparkSpec {
     // measure the self-scored spread, then gate between the two groups
     val scores = NgramLm.bigramLmScore(docs, "text", "doc_id")
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    NgramLm.releaseCaches()
     assert(scores(4L) < scores(1L), scores.toString)
     val cut = (scores(4L) + Seq(1L, 2L, 3L).map(scores).min) / 2
 

@@ -61,7 +61,6 @@ class WaterfillSpec extends SparkSpec {
       ("b", 100L, 5L), ("b", 200L, 6L)).toDF("g", "s", "id")
     val out = SignalFusion.quantileNormalize(df, col("g"), col("s"), col("id"))
       .collect().map(r => r.getLong(0) -> r.getLong(3)).toMap
-    Sharding.releaseShardCaches()
     assert(out == Map(1L -> 2L, 2L -> 3L, 3L -> 100L, 4L -> 200L,
       5L -> 3L, 6L -> 200L))
   }
@@ -71,12 +70,10 @@ class WaterfillSpec extends SparkSpec {
     val df = (1L to 40L).map(i => ("only", i * 7 % 41, i)).toDF("g", "s", "id")
     val a = SignalFusion.quantileNormalize(df, col("g"), col("s"), col("id"))
       .orderBy("id").collect().toSeq
-    Sharding.releaseShardCaches()
     assert(a.forall(r => r.getLong(2) == r.getLong(3)),
       "single-group normalization is the identity")
     val b = SignalFusion.quantileNormalize(df.repartition(13),
       col("g"), col("s"), col("id")).orderBy("id").collect().toSeq
-    Sharding.releaseShardCaches()
     assert(a == b)
   }
 

@@ -36,7 +36,6 @@ class WelchVocabSpec extends SparkSpec {
       (3L, "a a b", true), (4L, "a a b", false)).toDF("id", "text", "ina")
     val r = Vocabulary.vocabOverlapTopK(docs, "text", col("ina"), k = 3)
       .collect().head
-    Vocabulary.releaseCaches()
     assert(r.getLong(1) == 3L && r.getLong(2) == 3L)
     assert(r.getLong(3) == 3L)
     assert(r.getLong(4) == 1000000L)
@@ -48,7 +47,6 @@ class WelchVocabSpec extends SparkSpec {
       (1L, "a b c", true), (2L, "x y z", false)).toDF("id", "text", "ina")
     val r = Vocabulary.vocabOverlapTopK(docs, "text", col("ina"), k = 3)
       .collect().head
-    Vocabulary.releaseCaches()
     assert(r.getLong(3) == 0L && r.getLong(4) == 0L)
     assert(r.getDouble(5) == 0.0d)
   }
@@ -62,7 +60,6 @@ class WelchVocabSpec extends SparkSpec {
       (2L, "c c c b b a", false)).toDF("id", "text", "ina")
     val r = Vocabulary.vocabOverlapTopK(docs, "text", col("ina"), k = 2)
       .collect().head
-    Vocabulary.releaseCaches()
     assert(r.getLong(3) == 1L)
     // jaccard = 1/(2+2−1)
     assert(r.getLong(4) == 1000000L / 3L)

@@ -34,7 +34,6 @@ class WilcoxonSpec extends SparkSpec {
   private def run(pairs: Seq[(Long, Long)]): (Long, Long, Long, Option[Double]) = {
     val r = Evaluation.wilcoxonSignedRank(pairs.toDF("a", "b"), col("a"), col("b"))
       .collect().head
-    Evaluation.releaseCaches()
     (r.getLong(0), r.getLong(1), r.getLong(2),
       if (r.isNullAt(3)) None else Some(r.getDouble(3)))
   }

@@ -7,9 +7,10 @@ import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.execution.WholeStageCodegenExec
 
 import graft.SparkSpec
+import graft.operators.Scope
 
 /** THE blanket sweep over every declared query — one execution pass,
-  * three audits on the same collected output (consolidating the former
+  * four audits on the same collected output (consolidating the former
   * GlobalWindowSweepSpec, SignedZeroSweepSpec and
   * PartitioningInvarianceSpec, which each re-executed the whole surface;
   * the assertions are unchanged, the executions collapse ~3x):
@@ -33,6 +34,8 @@ import graft.SparkSpec
   *      splits) and must match the base pass row-for-row; every query
   *      declares a total ORDER BY, so ordered equality is the right
   *      comparison.
+  *   4. RELEASE — each query is built and collected inside a Scope, and
+  *      no cached plan or persisted RDD of it may outlive that Scope.
   *
   * The base pass runs under the mid-parallel layout (8 shuffle
   * partitions, default scan splits) — the middle layout of the old
@@ -89,7 +92,20 @@ class DeclaredSurfaceSweepSpec extends SparkSpec {
         "of integer features — the x191 class, one bounded frame per feature")),
     "x231_msprt_monitor" -> (2 ->
       ("cumulative-sums + running-max windows over the calendar-day look " +
-        "frame (raw events collapse to |days| rows in the first aggregation)")))
+        "frame (raw events collapse to |days| rows in the first aggregation)")),
+    // the five below were cached outputs (an InMemoryTableScan hid their
+    // plans from this audit) until the builders became lazy
+    "x139_tcloseness" -> (1 ->
+      ("global total over the <= |quasi groups x sensitive values| cell frame " +
+        "(the x123 finishDrift discipline; the view must stay self-join-free " +
+        "for its streaming twin)")),
+    "x195_kruskal_wallis" -> (1 ->
+      "midrank prefix sum over the distinct-value frame (callers bucket the value)"),
+    "x198_pav_calibration" -> (2 -> "PAV prefix sums over the <= nBins+2 bin frame"),
+    "x201_friedman" -> (1 -> "treatment count over the |series|-row rank-sum frame"),
+    "x206_recalibration_lift" -> (5 ->
+      ("x194's Murphy close (3) + x198's PAV prefix sums (2), all on the " +
+        "<= nBins+2 bin frame")))
 
   // ---- audit 2 machinery -------------------------------------------------
 
@@ -163,19 +179,43 @@ class DeclaredSurfaceSweepSpec extends SparkSpec {
   private case class Audit(
       windowOffenders: Seq[String],
       zeroOffenders: Seq[String],
-      invarianceOffenders: Seq[String])
+      invarianceOffenders: Seq[String],
+      leakOffenders: Seq[String])
 
+  /** (cached-plan entries, persisted RDD ids) the session holds. The
+    * suite shares its session with the other suites of its JVM, so each
+    * query is held to the state it started from: its Scope must close
+    * with no entry added to either store. */
+  private def held(): (Seq[AnyRef], Set[Int]) = {
+    val cm = spark.sharedState.cacheManager
+    val f = cm.getClass.getDeclaredFields.find(_.getName.endsWith("cachedData")).get
+    f.setAccessible(true)
+    val plans = f.get(cm).asInstanceOf[scala.collection.Seq[AnyRef]].toSeq
+    (plans, spark.sparkContext.getPersistentRDDs.keySet.toSet)
+  }
+
+  /** Rows, executed plan nodes and what the query left held after its
+    * Scope closed (None when nothing). */
   private def runUnder(
       fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame,
-      layout: (String, String)): (Seq[Row], Seq[SparkPlan]) = {
+      layout: (String, String)): (Seq[Row], Seq[SparkPlan], Option[String]) = {
     spark.conf.set("spark.sql.shuffle.partitions", layout._1)
     spark.conf.set("spark.sql.files.maxPartitionBytes", layout._2)
     try {
-      val df = fn(spark, dir)
-      val rows = df.collect().toSeq // finalizes AQE so re-planned stages are visible
-      val nodes = flatten(df.queryExecution.executedPlan)
-      spark.sharedState.cacheManager.clearCache()
-      (rows, nodes)
+      val before = held()
+      val (rows, nodes) = Scope {
+        val df = fn(spark, dir)
+        val rows = df.collect().toSeq // finalizes AQE so re-planned stages are visible
+        (rows, flatten(df.queryExecution.executedPlan))
+      }
+      val after = held()
+      val plans = after._1.filterNot(p => before._1.exists(_ eq p))
+      val rdds = after._2 -- before._2
+      val leak =
+        if (plans.isEmpty && rdds.isEmpty) None
+        else Some(s"${plans.size} cached plan(s), persisted RDDs " +
+          rdds.toSeq.sorted.mkString(","))
+      (rows, nodes, leak)
     } finally {
       spark.conf.unset("spark.sql.shuffle.partitions")
       spark.conf.unset("spark.sql.files.maxPartitionBytes")
@@ -186,13 +226,15 @@ class DeclaredSurfaceSweepSpec extends SparkSpec {
     val windowOff = scala.collection.mutable.ArrayBuffer.empty[String]
     val zeroOff = scala.collection.mutable.ArrayBuffer.empty[String]
     val invOff = scala.collection.mutable.ArrayBuffer.empty[String]
+    val leakOff = scala.collection.mutable.ArrayBuffer.empty[String]
     val invariant = invarianceMembers.toSet ++ rotatingSubset
     info(s"rotating seed=${sys.env.getOrElse("SPARK_GRAFT_INVARIANCE_SEED", rotationSeed.toString)} " +
       s"subset=${rotatingSubset.mkString(",")}")
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val (rows, nodes) =
+      val (rows, nodes, leak) =
         try runUnder(fn, baseLayout)
         catch { case e: Throwable => fail(s"$name failed to run: ${e.getMessage}") }
+      leak.foreach(l => leakOff += s"$name: $l")
 
       // audit 1: partition-less windows over unbounded frames
       val globals = nodes.collect { case w: WindowExec if w.partitionSpec.isEmpty => w }
@@ -214,7 +256,7 @@ class DeclaredSurfaceSweepSpec extends SparkSpec {
       // the base pass's rows (ordered equality — total ORDER BY everywhere)
       if (invariant(name)) {
         extraLayouts.foreach { layout =>
-          val (other, _) =
+          val (other, _, _) =
             try runUnder(fn, layout)
             catch { case e: Throwable =>
               fail(s"$name failed to run under layout $layout: ${e.getMessage}")
@@ -227,7 +269,7 @@ class DeclaredSurfaceSweepSpec extends SparkSpec {
         }
       }
     }
-    Audit(windowOff.toSeq, zeroOff.toSeq, invOff.toSeq)
+    Audit(windowOff.toSeq, zeroOff.toSeq, invOff.toSeq, leakOff.toSeq)
   }
 
   test("every partition-less Window ranks a frame bounded by construction") {
@@ -240,6 +282,12 @@ class DeclaredSurfaceSweepSpec extends SparkSpec {
     assert(sweep.zeroOffenders.isEmpty,
       s"${sweep.zeroOffenders.size} signed-zero offender(s):\n" +
         sweep.zeroOffenders.mkString("\n"))
+  }
+
+  test("every declared query releases its caches and checkpoints with its Scope") {
+    assert(sweep.leakOffenders.isEmpty,
+      s"${sweep.leakOffenders.size} query(ies) left cached state behind:\n" +
+        sweep.leakOffenders.mkString("\n"))
   }
 
   test("evaluation pack + rotating subset are partition-layout invariant") {

@@ -299,9 +299,19 @@ class PlanAuditSpec extends SparkSpec {
 
   test("x48: the NTILE rank never funnels through a single partition") {
     import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    val single = flatten(planOf("x48_curriculum_buckets"))
-      .collect { case s: ShuffleExchangeLike if s.outputPartitioning == SinglePartition => s }
+    // the corpus count's final exchange carries one partial-count row per
+    // input partition — a keyless aggregate, not a row funnel
+    def keylessPartial(p: SparkPlan): Boolean =
+      flatten(p).find(!_.isInstanceOf[WholeStageCodegenExec]).exists {
+        case h: HashAggregateExec => h.groupingExpressions.isEmpty
+        case _ => false
+      }
+    val single = flatten(planOf("x48_curriculum_buckets")).collect {
+      case s: ShuffleExchangeLike
+          if s.outputPartitioning == SinglePartition && !keylessPartial(s.child) => s
+    }
     assert(single.isEmpty,
       "bucket assignment must use the two-phase rank, not a global window")
   }
@@ -448,7 +458,6 @@ class PlanAuditSpec extends SparkSpec {
     val out = graft.operators.Dedup.incrementalNearDuplicates(
       docs.where(col("doc_id") % 2 === 1), index, "text", "doc_id", threshold = 0.5)
     val nodes = flatten(executedPlan(out))
-    graft.operators.Dedup.releaseCaches()
     assert(nodes.exists(_.isInstanceOf[BroadcastExchangeLike]),
       "batch bands must broadcast into the index join")
     assert(!nodes.exists(_.isInstanceOf[SortMergeJoinExec]),
@@ -484,7 +493,6 @@ class PlanAuditSpec extends SparkSpec {
 
   test("x86: prefix join moves longs through keyed joins, never shingle text") {
     val nodes = flatten(planOf("x86_prefix_jaccard"))
-    graft.operators.Dedup.releaseCaches()
     // every non-broadcast join is keyed (tok/id equi-joins) — a nested
     // loop anywhere would mean the prefix filter degenerated to all-pairs
     assert(!nodes.exists(
@@ -503,7 +511,6 @@ class PlanAuditSpec extends SparkSpec {
 
   test("x151: containment join stays an equi-join on hashed tokens; text dies at the scan") {
     val nodes = flatten(planOf("x151_containment_join"))
-    graft.operators.Dedup.releaseCaches()
     // a nested loop anywhere would mean the asymmetric prefix filter
     // degenerated to ordered all-pairs
     assert(!nodes.exists(
@@ -564,7 +571,6 @@ class PlanAuditSpec extends SparkSpec {
       graft.queries.Tables.documents(spark, dir), "text", "doc_id",
       queryDocId = 7L, nTerms = 6, k = 15)
     val nodes = flatten(executedPlan(out))
-    graft.operators.Vocabulary.releaseCaches()
     assert(nodes.exists(_.isInstanceOf[BroadcastExchangeLike]),
       "the metadata-sized term profile must broadcast into the postings")
     assert(!nodes.exists(_.isInstanceOf[SortMergeJoinExec]),
@@ -577,7 +583,6 @@ class PlanAuditSpec extends SparkSpec {
       graft.queries.Tables.documents(spark, dir), "text", "doc_id",
       queryDocId = 7L, nTerms = 6, k = 15)
     val plan = executedPlan(out)
-    graft.operators.Vocabulary.releaseCaches()
     // every corpus consumer must read the cache, not re-run the split
     // regex: flatten() does not descend through the cache boundary
     // (InMemoryTableScan has no children), so any FileSourceScan it finds
@@ -621,7 +626,6 @@ class PlanAuditSpec extends SparkSpec {
       mixRates = Map("src0" -> 0.5, "src1" -> 0.5, "src2" -> 0.25),
       nShards = 8)
     val nodes = this.flatten(executedPlan(out))
-    graft.operators.TrainingDataPipeline.releaseFlagshipCaches()
     assert(!nodes.exists(_.isInstanceOf[SortMergeJoinExec]),
       "the decontamination gram set and the HRW manifest must never sort-merge")
     assert(nodes.exists(_.isInstanceOf[BroadcastExchangeLike]),
@@ -760,13 +764,11 @@ class PlanAuditSpec extends SparkSpec {
         org.apache.spark.sql.functions.col("l_partkey"))
     val out = graft.operators.MarketBasket.associationRules(
       li, "l_orderkey", "l_partkey", minPairCount = 2L, topK = 10)
-    try {
-      val nodes = flatten(executedPlan(out))
-      val parquetScans = nodes.collect { case f: FileSourceScanExec => f }
-      assert(parquetScans.isEmpty,
-        s"self-join sides must read the cached projection, saw ${parquetScans.size} file scans")
-      assert(nodes.mkString.contains("InMemoryTableScan"))
-    } finally graft.operators.MarketBasket.releaseCaches()
+    val nodes = flatten(executedPlan(out))
+    val parquetScans = nodes.collect { case f: FileSourceScanExec => f }
+    assert(parquetScans.isEmpty,
+      s"self-join sides must read the cached projection, saw ${parquetScans.size} file scans")
+    assert(nodes.mkString.contains("InMemoryTableScan"))
   }
 
   test("x120: the kappa algebra reads only the cached contingency — zero file scans") {
@@ -778,12 +780,10 @@ class PlanAuditSpec extends SparkSpec {
     val out = graft.operators.Evaluation.agreementReport(d,
       when(col("n_chars") < 216, "s").otherwise("l"),
       when(col("n_chars") < 379, "s").otherwise("l"))
-    try {
-      val nodes = flatten(executedPlan(out))
-      assert(nodes.collect { case f: FileSourceScanExec => f }.isEmpty,
-        "report plan must read the cached contingency, not re-scan documents")
-      assert(nodes.mkString.contains("InMemoryTableScan"))
-    } finally graft.operators.Evaluation.releaseCaches()
+    val nodes = flatten(executedPlan(out))
+    assert(nodes.collect { case f: FileSourceScanExec => f }.isEmpty,
+      "report plan must read the cached contingency, not re-scan documents")
+    assert(nodes.mkString.contains("InMemoryTableScan"))
   }
 
   test("x121: raw events collapse to series×day in the FIRST (partial) aggregation; " +
@@ -843,15 +843,13 @@ class PlanAuditSpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     val out = graft.operators.Seasonal.seriesHealthReport(
       graft.queries.Tables.events(spark, dir), col("event_type"), col("ts"))
-    try {
-      val nodes = flatten(executedPlan(out))
-      assert(nodes.collect { case f: FileSourceScanExec => f }.isEmpty,
-        "every monitor must read the cached (series × day) frame, not re-scan events")
-      assert(nodes.mkString.contains("InMemoryTableScan"))
-      assert(nodes.exists(_.isInstanceOf[BroadcastExchangeLike]),
-        "the |series|-row MASE table must broadcast onto the daily grain")
-      assert(!nodes.exists(_.isInstanceOf[SortMergeJoinExec]))
-    } finally graft.operators.Seasonal.releaseCaches()
+    val nodes = flatten(executedPlan(out))
+    assert(nodes.collect { case f: FileSourceScanExec => f }.isEmpty,
+      "every monitor must read the cached (series × day) frame, not re-scan events")
+    assert(nodes.mkString.contains("InMemoryTableScan"))
+    assert(nodes.exists(_.isInstanceOf[BroadcastExchangeLike]),
+      "the |series|-row MASE table must broadcast onto the daily grain")
+    assert(!nodes.exists(_.isInstanceOf[SortMergeJoinExec]))
   }
 
   test("x135: the corpus labeling is scanned, never shuffled — broadcast " +
@@ -878,7 +876,6 @@ class PlanAuditSpec extends SparkSpec {
         "endpoint-hit and canonical-remap tables must broadcast")
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      graft.operators.Graph.releaseCaches()
     }
   }
 
@@ -921,18 +918,16 @@ class PlanAuditSpec extends SparkSpec {
   test("x140: draw→token lookup is a broadcast EQUI-join on the bucket id — " +
     "never a nested-loop range join over the vocabulary") {
     import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
-    try {
-      // audit the operator plan itself — the query entry caches its output,
-      // so planOf would only see the InMemoryTableScan
-      val out = graft.operators.Vocabulary.negativeSamples(
-        graft.queries.Tables.documents(spark, dir), "text", "doc_id", k = 5)
-      val nodes = flatten(executedPlan(out))
-      assert(nodes.exists(_.isInstanceOf[BroadcastExchangeLike]),
-        "the bucketed cumulative table must broadcast")
-      assert(!nodes.exists(_.isInstanceOf[BroadcastNestedLoopJoinExec]),
-        "a range-predicate-only join would evaluate draws × vocab")
-      assert(!nodes.mkString.contains("CartesianProduct"))
-    } finally graft.operators.Vocabulary.releaseCaches()
+    // audit the operator plan itself — the query entry caches its output,
+    // so planOf would only see the InMemoryTableScan
+    val out = graft.operators.Vocabulary.negativeSamples(
+      graft.queries.Tables.documents(spark, dir), "text", "doc_id", k = 5)
+    val nodes = flatten(executedPlan(out))
+    assert(nodes.exists(_.isInstanceOf[BroadcastExchangeLike]),
+      "the bucketed cumulative table must broadcast")
+    assert(!nodes.exists(_.isInstanceOf[BroadcastNestedLoopJoinExec]),
+      "a range-predicate-only join would evaluate draws × vocab")
+    assert(!nodes.mkString.contains("CartesianProduct"))
   }
 
   test("x141: the skew report reads ONLY the key column and ranks via a " +
@@ -973,76 +968,67 @@ class PlanAuditSpec extends SparkSpec {
 
   test("x155: KN statistics join on 8-byte hashes with the distinct-bigram " +
     "total broadcast — no token strings past the kernel, no cartesian") {
-    try {
-      val out = graft.operators.NgramLm.knBigramScore(
-        graft.queries.Tables.documents(spark, dir), "text", "doc_id")
-      val nodes = flatten(executedPlan(out))
-      assert(nodes.exists(_.isInstanceOf[BroadcastExchangeLike]),
-        "the 1-row distinct-bigram total must broadcast")
-      assert(!nodes.mkString.contains("CartesianProduct"),
-        "btot must ride a broadcast, never a cartesian")
-      val scans = nodes.collect { case f: FileSourceScanExec => f }
-      assert(scans.forall(_.requiredSchema.fieldNames.toSet ==
-        Set("doc_id", "text")),
-        "column pruning must reach the documents scan")
-      // every join key is a long hash: the string tokens die inside the
-      // codegen'd kernel, so no shuffle carries token text
-      val shuffles = nodes.collect {
-        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e
-      }
-      assert(shuffles.nonEmpty)
-      assert(!shuffles.exists(_.child.output.exists(_.dataType ==
-        org.apache.spark.sql.types.StringType)),
-        "no exchange may move token strings — hashes only")
-    } finally graft.operators.NgramLm.releaseCaches()
+    val out = graft.operators.NgramLm.knBigramScore(
+      graft.queries.Tables.documents(spark, dir), "text", "doc_id")
+    val nodes = flatten(executedPlan(out))
+    assert(nodes.exists(_.isInstanceOf[BroadcastExchangeLike]),
+      "the 1-row distinct-bigram total must broadcast")
+    assert(!nodes.mkString.contains("CartesianProduct"),
+      "btot must ride a broadcast, never a cartesian")
+    val scans = nodes.collect { case f: FileSourceScanExec => f }
+    assert(scans.forall(_.requiredSchema.fieldNames.toSet ==
+      Set("doc_id", "text")),
+      "column pruning must reach the documents scan")
+    // every join key is a long hash: the string tokens die inside the
+    // codegen'd kernel, so no shuffle carries token text
+    val shuffles = nodes.collect {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e
+    }
+    assert(shuffles.nonEmpty)
+    assert(!shuffles.exists(_.child.output.exists(_.dataType ==
+      org.apache.spark.sql.types.StringType)),
+      "no exchange may move token strings — hashes only")
   }
 
   test("x156: textrank takes top-k distributed (TakeOrdered), builds ids by " +
     "pure hash projection (no vocab-wide window/sort), one documents scan") {
     import org.apache.spark.sql.execution.window.WindowExec
-    try {
-      val out = graft.operators.Vocabulary.textrankKeywords(
-        graft.queries.Tables.documents(spark, dir), "text", "doc_id",
-        iters = 2, topK = 20)
-      val nodes = flatten(executedPlan(out))
-      assert(nodes.mkString.contains("TakeOrdered"),
-        "the keyword cut must be TakeOrderedAndProject, not a global sort")
-      assert(!nodes.exists(_.isInstanceOf[WindowExec]),
-        "node ids are xxhash64 projections — a window would mean a " +
-          "vocab-wide id sort crept back in")
-      val scans = nodes.collect { case f: FileSourceScanExec => f }
-      assert(scans.forall(_.requiredSchema.fieldNames.toSet == Set("text")),
-        s"only text is needed, got " +
-          scans.map(_.requiredSchema.fieldNames.mkString(",")).mkString(" | "))
-    } finally {
-      graft.operators.Vocabulary.releaseCaches()
-      graft.operators.Graph.releaseCaches()
-    }
+    val out = graft.operators.Vocabulary.textrankKeywords(
+      graft.queries.Tables.documents(spark, dir), "text", "doc_id",
+      iters = 2, topK = 20)
+    val nodes = flatten(executedPlan(out))
+    assert(nodes.mkString.contains("TakeOrdered"),
+      "the keyword cut must be TakeOrderedAndProject, not a global sort")
+    assert(!nodes.exists(_.isInstanceOf[WindowExec]),
+      "node ids are xxhash64 projections — a window would mean a " +
+        "vocab-wide id sort crept back in")
+    val scans = nodes.collect { case f: FileSourceScanExec => f }
+    assert(scans.forall(_.requiredSchema.fieldNames.toSet == Set("text")),
+      s"only text is needed, got " +
+        scans.map(_.requiredSchema.fieldNames.mkString(",")).mkString(" | "))
   }
 
   test("x157: both retriever lists are rank-bounded before fusion; the probe " +
     "and query terms broadcast; the fused cut is TakeOrdered") {
-    try {
-      val docs = graft.queries.Tables.documents(spark, dir)
-      val emb = graft.queries.Tables.embeddings(spark, dir)
-      import org.apache.spark.sql.functions.{col, desc}
-      val lex = graft.operators.Vocabulary.bm25TopK(docs, "text", "doc_id",
-        Seq("q" -> "merge sort"), k = 100)
-        .select(col("doc").as("doc_id"), col("rank"))
-      val probe = emb.orderBy("vec_id").limit(1)
-        .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      val sem = graft.operators.Similarity.bruteForceTopK(emb, probe,
-        "vec_id", "embedding", "qid", "qvec", k = 100)
-        .select(col("vec_id").as("doc_id"), col("rank"))
-      val out = graft.operators.SignalFusion.rrfFuse(Seq(lex, sem),
-        "doc_id", "rank", kRrf = 60, topK = 20)
-      val nodes = flatten(executedPlan(out))
-      assert(nodes.mkString.contains("TakeOrdered"),
-        "the fused top-20 must be TakeOrderedAndProject, not a global sort")
-      assert(nodes.exists(_.isInstanceOf[BroadcastExchangeLike]),
-        "query terms / probe vector must broadcast into the retrievers")
-      assert(!nodes.mkString.contains("CartesianProduct"))
-    } finally graft.operators.Vocabulary.releaseCaches()
+    val docs = graft.queries.Tables.documents(spark, dir)
+    val emb = graft.queries.Tables.embeddings(spark, dir)
+    import org.apache.spark.sql.functions.{col, desc}
+    val lex = graft.operators.Vocabulary.bm25TopK(docs, "text", "doc_id",
+      Seq("q" -> "merge sort"), k = 100)
+      .select(col("doc").as("doc_id"), col("rank"))
+    val probe = emb.orderBy("vec_id").limit(1)
+      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+    val sem = graft.operators.Similarity.bruteForceTopK(emb, probe,
+      "vec_id", "embedding", "qid", "qvec", k = 100)
+      .select(col("vec_id").as("doc_id"), col("rank"))
+    val out = graft.operators.SignalFusion.rrfFuse(Seq(lex, sem),
+      "doc_id", "rank", kRrf = 60, topK = 20)
+    val nodes = flatten(executedPlan(out))
+    assert(nodes.mkString.contains("TakeOrdered"),
+      "the fused top-20 must be TakeOrderedAndProject, not a global sort")
+    assert(nodes.exists(_.isInstanceOf[BroadcastExchangeLike]),
+      "query terms / probe vector must broadcast into the retrievers")
+    assert(!nodes.mkString.contains("CartesianProduct"))
   }
 
   test("x158: the JL projection is ONE shuffle-free codegen scan — matrix " +
@@ -1065,18 +1051,16 @@ class PlanAuditSpec extends SparkSpec {
   test("x159: the DBSCAN candidate generator is an EQUI-join on the cell " +
     "key — never a distance theta-join or cartesian") {
     import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
-    try {
-      val pts = graft.queries.Tables.embeddings(spark, dir)
-        .selectExpr("vec_id AS id", "CAST(embedding[0] AS DOUBLE) AS x",
-          "CAST(embedding[1] AS DOUBLE) AS y")
-      val out = graft.operators.Clustering.gridDbscan(pts, "id", "x", "y",
-        eps = 0.05, minPts = 3)
-      val nodes = flatten(executedPlan(out))
-      assert(!nodes.exists(_.isInstanceOf[BroadcastNestedLoopJoinExec]),
-        "a nested-loop join means the distance predicate leaked out of " +
-          "the equi-join stage")
-      assert(!nodes.mkString.contains("CartesianProduct"))
-    } finally graft.operators.Clustering.releaseCaches()
+    val pts = graft.queries.Tables.embeddings(spark, dir)
+      .selectExpr("vec_id AS id", "CAST(embedding[0] AS DOUBLE) AS x",
+        "CAST(embedding[1] AS DOUBLE) AS y")
+    val out = graft.operators.Clustering.gridDbscan(pts, "id", "x", "y",
+      eps = 0.05, minPts = 3)
+    val nodes = flatten(executedPlan(out))
+    assert(!nodes.exists(_.isInstanceOf[BroadcastNestedLoopJoinExec]),
+      "a nested-loop join means the distance predicate leaked out of " +
+        "the equi-join stage")
+    assert(!nodes.mkString.contains("CartesianProduct"))
   }
 
   test("x160: the cap window partitions by cluster — never a global window") {
@@ -1124,85 +1108,79 @@ class PlanAuditSpec extends SparkSpec {
 
   test("x163: skip-gram pairs tokenize the corpus once (cached projection), " +
     "read only text, and cut via TakeOrdered") {
-    try {
-      val out = graft.operators.Vocabulary.skipgramPairs(
-        graft.queries.Tables.documents(spark, dir), "text", "doc_id", window = 2)
-        .orderBy(org.apache.spark.sql.functions.desc("n"),
-          org.apache.spark.sql.functions.col("center"),
-          org.apache.spark.sql.functions.col("context"))
-        .limit(500)
-      val nodes = flatten(executedPlan(out))
-      val scans = nodes.collect { case f: FileSourceScanExec => f }
-      assert(scans.size <= 1,
-        s"the cached token projection must feed every offset branch, saw ${scans.size} scans")
-      assert(scans.forall(_.requiredSchema.fieldNames.toSet == Set("text")))
-      assert(nodes.mkString.contains("TakeOrdered"),
-        "the top-500 cut must be TakeOrderedAndProject")
-    } finally graft.operators.Vocabulary.releaseCaches()
+    val out = graft.operators.Vocabulary.skipgramPairs(
+      graft.queries.Tables.documents(spark, dir), "text", "doc_id", window = 2)
+      .orderBy(org.apache.spark.sql.functions.desc("n"),
+        org.apache.spark.sql.functions.col("center"),
+        org.apache.spark.sql.functions.col("context"))
+      .limit(500)
+    val nodes = flatten(executedPlan(out))
+    val scans = nodes.collect { case f: FileSourceScanExec => f }
+    assert(scans.size <= 1,
+      s"the cached token projection must feed every offset branch, saw ${scans.size} scans")
+    assert(scans.forall(_.requiredSchema.fieldNames.toSet == Set("text")))
+    assert(nodes.mkString.contains("TakeOrdered"),
+      "the top-500 cut must be TakeOrderedAndProject")
   }
 
   test("x164: the signed-rank prefix sum rides the two-phase range " +
     "exchange — no single-partition window anywhere") {
     import org.apache.spark.sql.execution.window.WindowExec
     import org.apache.spark.sql.functions.{col, expr}
-    try {
-      val paired = graft.queries.Tables.documents(spark, dir)
-        .select(expr(
-          "filter(split(lower(trim(text)), '\\\\s+'), x -> x != '')").as("tk"))
-        .where(org.apache.spark.sql.functions.size(col("tk")) >= 2)
-        .select(col("tk"), org.apache.spark.sql.functions.size(col("tk")).as("nt"),
-          expr("(size(tk) + 1) div 2").as("h"))
-        .select(
-          expr("(aggregate(transform(slice(tk, 1, h), x -> length(x)), " +
-            "0L, (acc, x) -> acc + x) * 1000000L) div h").as("a_ppm"),
-          expr("(aggregate(transform(slice(tk, h + 1, nt - h), x -> length(x)), " +
-            "0L, (acc, x) -> acc + x) * 1000000L) div (nt - h)").as("b_ppm"))
-      val out = graft.operators.Evaluation.wilcoxonSignedRank(
-        paired, col("a_ppm"), col("b_ppm"))
-      val nodes = flatten(executedPlan(out))
-      val windows = nodes.collect { case w: WindowExec => w }
-      assert(windows.forall(_.partitionSpec.nonEmpty),
-        "the below-count window must partition by the range-exchange pid")
-      val scans = nodes.collect { case f: FileSourceScanExec => f }
-      assert(scans.forall(_.requiredSchema.fieldNames.toSet == Set("text")))
-    } finally graft.operators.Evaluation.releaseCaches()
+    val paired = graft.queries.Tables.documents(spark, dir)
+      .select(expr(
+        "filter(split(lower(trim(text)), '\\\\s+'), x -> x != '')").as("tk"))
+      .where(org.apache.spark.sql.functions.size(col("tk")) >= 2)
+      .select(col("tk"), org.apache.spark.sql.functions.size(col("tk")).as("nt"),
+        expr("(size(tk) + 1) div 2").as("h"))
+      .select(
+        expr("(aggregate(transform(slice(tk, 1, h), x -> length(x)), " +
+          "0L, (acc, x) -> acc + x) * 1000000L) div h").as("a_ppm"),
+        expr("(aggregate(transform(slice(tk, h + 1, nt - h), x -> length(x)), " +
+          "0L, (acc, x) -> acc + x) * 1000000L) div (nt - h)").as("b_ppm"))
+    val out = graft.operators.Evaluation.wilcoxonSignedRank(
+      paired, col("a_ppm"), col("b_ppm"))
+    val nodes = flatten(executedPlan(out))
+    val windows = nodes.collect { case w: WindowExec => w }
+    assert(windows.forall(_.partitionSpec.nonEmpty),
+      "the below-count window must partition by the range-exchange pid")
+    val scans = nodes.collect { case f: FileSourceScanExec => f }
+    assert(scans.forall(_.requiredSchema.fieldNames.toSet == Set("text")))
   }
 
   test("x183: all k(k-1)/2 pair branches read ONE cached 1-row aggregate; " +
     "the corpus scan under the cache is pruned to the feature inputs") {
     import org.apache.spark.sql.functions.{col, floor}
-    try {
-      val out = graft.operators.Evaluation.correlationMatrix(
-        Tables.lineitem(spark, dir), Seq(
-          "disc_c" -> floor(col("l_discount") * 100),
-          "price_fl" -> floor(col("l_extendedprice")),
-          "qty" -> floor(col("l_quantity")),
-          "tax_c" -> floor(col("l_tax") * 100)))
-      val nodes = flatten(executedPlan(out))
-      // every union branch reads the cache, never the corpus: flatten()
-      // stops at the cache boundary, so any FileSourceScan it finds is a
-      // branch that bypassed the shared sufficient-statistics frame
-      assert(nodes.collect { case s: FileSourceScanExec => s }.isEmpty,
-        "a pair branch recomputed the corpus aggregation")
-      val cached = nodes.collect {
-        case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-          s
-      }
-      assert(cached.nonEmpty, "the wide aggregate must be cache-backed")
-      assert(cached.map(s =>
-        System.identityHashCode(s.relation.cacheBuilder)).toSet.size == 1,
-        "exactly ONE cached relation feeds all pair branches")
-      // inside the cache: one scan, pruned to exactly the feature inputs
-      val inner = flatten(cached.head.relation.cachedPlan)
-        .collect { case f: FileSourceScanExec => f }
-      assert(inner.size == 1)
-      assert(inner.head.requiredSchema.fieldNames.toSet ==
-        Set("l_discount", "l_extendedprice", "l_quantity", "l_tax"),
-        s"scan must read exactly the feature inputs, got " +
-          inner.head.requiredSchema.fieldNames.mkString(","))
-      assert(!nodes.mkString.contains("Join"),
-        "the matrix is plan-literal aggregation expressions — no join")
-    } finally graft.operators.Evaluation.releaseCaches()
+    val out = graft.operators.Evaluation.correlationMatrix(
+      Tables.lineitem(spark, dir), Seq(
+        "disc_c" -> floor(col("l_discount") * 100),
+        "price_fl" -> floor(col("l_extendedprice")),
+        "qty" -> floor(col("l_quantity")),
+        "tax_c" -> floor(col("l_tax") * 100)))
+    val nodes = flatten(executedPlan(out))
+    // every union branch reads the cache, never the corpus: flatten()
+    // stops at the cache boundary, so any FileSourceScan it finds is a
+    // branch that bypassed the shared sufficient-statistics frame
+    assert(nodes.collect { case s: FileSourceScanExec => s }.isEmpty,
+      "a pair branch recomputed the corpus aggregation")
+    val cached = nodes.collect {
+      case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
+        s
+    }
+    assert(cached.nonEmpty, "the wide aggregate must be cache-backed")
+    assert(cached.map(s =>
+      System.identityHashCode(s.relation.cacheBuilder)).toSet.size == 1,
+      "exactly ONE cached relation feeds all pair branches")
+    // inside the cache: one scan, pruned to exactly the feature inputs
+    val inner = flatten(cached.head.relation.cachedPlan)
+      .collect { case f: FileSourceScanExec => f }
+    assert(inner.size == 1)
+    assert(inner.head.requiredSchema.fieldNames.toSet ==
+      Set("l_discount", "l_extendedprice", "l_quantity", "l_tax"),
+      s"scan must read exactly the feature inputs, got " +
+        inner.head.requiredSchema.fieldNames.mkString(","))
+    assert(!nodes.mkString.contains("Join"),
+      "the matrix is plan-literal aggregation expressions — no join")
   }
 
   test("x184: the events scan is pruned to (event_type, ts) and the daily " +
@@ -1240,21 +1218,19 @@ class PlanAuditSpec extends SparkSpec {
 
   test("x189: all nCells distance arms are plan-literal folds over ONE " +
     "cached quantized scan — no join, no second corpus read") {
-    try {
-      val out = graft.operators.Clustering.silhouetteReport(
-        Tables.embeddings(spark, dir), "vec_id", "embedding", nCells = 4)
-      val nodes = flatten(executedPlan(out))
-      assert(nodes.collect { case s: FileSourceScanExec => s }.isEmpty,
-        "the score pass re-read the corpus instead of the quantized cache")
-      val cached = nodes.collect {
-        case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-          System.identityHashCode(s.relation.cacheBuilder)
-      }
-      assert(cached.nonEmpty && cached.toSet.size == 1,
-        "exactly ONE cached (id, cell, q) relation feeds scoring and report")
-      assert(!nodes.mkString.contains("Join"),
-        "centroid stats are plan literals — no join in the score pass")
-    } finally graft.operators.Clustering.releaseCaches()
+    val out = graft.operators.Clustering.silhouetteReport(
+      Tables.embeddings(spark, dir), "vec_id", "embedding", nCells = 4)
+    val nodes = flatten(executedPlan(out))
+    assert(nodes.collect { case s: FileSourceScanExec => s }.isEmpty,
+      "the score pass re-read the corpus instead of the quantized cache")
+    val cached = nodes.collect {
+      case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
+        System.identityHashCode(s.relation.cacheBuilder)
+    }
+    assert(cached.nonEmpty && cached.toSet.size == 1,
+      "exactly ONE cached (id, cell, q) relation feeds scoring and report")
+    assert(!nodes.mkString.contains("Join"),
+      "centroid stats are plan literals — no join in the score pass")
   }
 
   test("x194: the Brier decomposition is ONE pruned corpus scan — totals " +
@@ -1275,24 +1251,22 @@ class PlanAuditSpec extends SparkSpec {
   test("x195: kruskal–wallis scans the corpus once into a cached cell " +
     "frame; ranks and group sums both read the cache") {
     import org.apache.spark.sql.functions.{col, expr}
-    try {
-      val out = graft.operators.Evaluation.kruskalWallis(
-        Tables.documents(spark, dir), expr("n_chars div 50"), col("source"))
-      val nodes = flatten(executedPlan(out))
-      assert(nodes.collect { case s: FileSourceScanExec => s }.isEmpty,
-        "a branch bypassed the cached (value, group) cell frame")
-      val cached = nodes.collect {
-        case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-          System.identityHashCode(s.relation.cacheBuilder)
-      }
-      assert(cached.nonEmpty && cached.toSet.size == 1,
-        "exactly ONE cached cell relation feeds ranks and group sums")
-      val inner = flatten(nodes.collect {
-        case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec => s
-      }.head.relation.cachedPlan).collect { case f: FileSourceScanExec => f }
-      assert(inner.size == 1 &&
-        inner.head.requiredSchema.fieldNames.toSet == Set("n_chars", "source"))
-    } finally graft.operators.Evaluation.releaseCaches()
+    val out = graft.operators.Evaluation.kruskalWallis(
+      Tables.documents(spark, dir), expr("n_chars div 50"), col("source"))
+    val nodes = flatten(executedPlan(out))
+    assert(nodes.collect { case s: FileSourceScanExec => s }.isEmpty,
+      "a branch bypassed the cached (value, group) cell frame")
+    val cached = nodes.collect {
+      case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
+        System.identityHashCode(s.relation.cacheBuilder)
+    }
+    assert(cached.nonEmpty && cached.toSet.size == 1,
+      "exactly ONE cached cell relation feeds ranks and group sums")
+    val inner = flatten(nodes.collect {
+      case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec => s
+    }.head.relation.cachedPlan).collect { case f: FileSourceScanExec => f }
+    assert(inner.size == 1 &&
+      inner.head.requiredSchema.fieldNames.toSet == Set("n_chars", "source"))
   }
 
   test("x207: the Neyman draw joins a BROADCAST allocation onto the " +
@@ -1311,46 +1285,42 @@ class PlanAuditSpec extends SparkSpec {
   test("x217: one tokenization scan pruned to (text, source) feeds both " +
     "top-k lists through the cached term counts") {
     import org.apache.spark.sql.functions.col
-    try {
-      val out = graft.operators.Vocabulary.vocabOverlapTopK(
-        Tables.documents(spark, dir), "text", col("source") === "src0", k = 10)
-      val nodes = flatten(executedPlan(out))
-      val scans = nodes.collect { case f: FileSourceScanExec => f }
-      assert(scans.isEmpty, "a top-k branch bypassed the cached term counts")
-      val cached = nodes.collect {
-        case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-          System.identityHashCode(s.relation.cacheBuilder)
-      }
-      assert(cached.nonEmpty && cached.toSet.size == 1,
-        "exactly ONE cached (term, cnt_a, cnt_b) relation feeds both cuts")
-      val inner = flatten(nodes.collect {
-        case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec => s
-      }.head.relation.cachedPlan).collect { case f: FileSourceScanExec => f }
-      assert(inner.size == 1 &&
-        inner.head.requiredSchema.fieldNames.toSet == Set("text", "source"))
-    } finally graft.operators.Vocabulary.releaseCaches()
+    val out = graft.operators.Vocabulary.vocabOverlapTopK(
+      Tables.documents(spark, dir), "text", col("source") === "src0", k = 10)
+    val nodes = flatten(executedPlan(out))
+    val scans = nodes.collect { case f: FileSourceScanExec => f }
+    assert(scans.isEmpty, "a top-k branch bypassed the cached term counts")
+    val cached = nodes.collect {
+      case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
+        System.identityHashCode(s.relation.cacheBuilder)
+    }
+    assert(cached.nonEmpty && cached.toSet.size == 1,
+      "exactly ONE cached (term, cnt_a, cnt_b) relation feeds both cuts")
+    val inner = flatten(nodes.collect {
+      case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec => s
+    }.head.relation.cachedPlan).collect { case f: FileSourceScanExec => f }
+    assert(inner.size == 1 &&
+      inner.head.requiredSchema.fieldNames.toSet == Set("text", "source"))
   }
 
   test("x211/x212: the ACF-family scans stay pruned to (event_type, ts) " +
     "and read through the cached daily frame") {
     import org.apache.spark.sql.functions.col
-    try {
-      val out = graft.operators.Seasonal.pacf(
-        Tables.events(spark, dir), col("event_type"), col("ts"), maxLag = 3)
-      val nodes = flatten(executedPlan(out))
-      assert(nodes.collect { case s: FileSourceScanExec => s }.isEmpty,
-        "the lag self-join must read the cached daily frame, not the corpus")
-      val cached = nodes.collect {
-        case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-          System.identityHashCode(s.relation.cacheBuilder)
-      }
-      assert(cached.nonEmpty && cached.toSet.size == 1)
-      val inner = flatten(nodes.collect {
-        case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec => s
-      }.head.relation.cachedPlan).collect { case f: FileSourceScanExec => f }
-      assert(inner.size == 1 &&
-        inner.head.requiredSchema.fieldNames.toSet == Set("event_type", "ts"))
-    } finally graft.operators.Seasonal.releaseCaches()
+    val out = graft.operators.Seasonal.pacf(
+      Tables.events(spark, dir), col("event_type"), col("ts"), maxLag = 3)
+    val nodes = flatten(executedPlan(out))
+    assert(nodes.collect { case s: FileSourceScanExec => s }.isEmpty,
+      "the lag self-join must read the cached daily frame, not the corpus")
+    val cached = nodes.collect {
+      case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
+        System.identityHashCode(s.relation.cacheBuilder)
+    }
+    assert(cached.nonEmpty && cached.toSet.size == 1)
+    val inner = flatten(nodes.collect {
+      case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec => s
+    }.head.relation.cachedPlan).collect { case f: FileSourceScanExec => f }
+    assert(inner.size == 1 &&
+      inner.head.requiredSchema.fieldNames.toSet == Set("event_type", "ts"))
   }
 
   test("x196/x197: anova and mcnemar collapse the corpus in ONE pruned " +

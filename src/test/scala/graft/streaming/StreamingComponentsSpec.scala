@@ -41,7 +41,6 @@ class StreamingComponentsSpec extends SparkSpec {
       val batch = Graph.connectedComponents(
         prefix.toDF(), "src", "dst")
       val expected = snapshot(batch)
-      Graph.releaseCaches()
       assert(snapshot(store.labels) == expected,
         s"after ${prefix.size} edges")
     }

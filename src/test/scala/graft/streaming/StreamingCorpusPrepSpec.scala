@@ -57,7 +57,6 @@ class StreamingCorpusPrepSpec extends SparkSpec {
     // then gate with the same constant
     val lmScores = NgramLm.bigramLmScore(batchDf, "text", "doc_id")
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    NgramLm.releaseCaches()
     val goodMin = Seq(1L, 3L, 6L, 7L, 8L).map(lmScores).min
     assert(lmScores(5L) < goodMin, s"fixture broken: oov must score lowest ($lmScores)")
     val minLm = (lmScores(5L) + goodMin) / 2
@@ -112,7 +111,6 @@ class StreamingCorpusPrepSpec extends SparkSpec {
           // chunk alone is bigger than the context (not possible here:
           // chunks are <= 8 tokens < 16)
           binViolations += stats.count(_.getAs[Long]("fill") > 16L)
-          Sharding.releaseShardCaches()
           surv.unpersist()
           ()
         }
@@ -126,7 +124,6 @@ class StreamingCorpusPrepSpec extends SparkSpec {
       input.addData(events(7)) // 8 (dup of 3, cross-batch state)
       query.processAllAvailable()
     } finally query.stop()
-    NgramLm.releaseCaches()
 
     // funnel parity: same survivor set, same final counts, same tokens
     assert(survivors.keySet == batchIds,

@@ -66,7 +66,6 @@ class StreamingDedupSpec extends SparkSpec {
         .toDF("doc_id", "text"),
       "text", "doc_id", threshold = 0.5)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    graft.operators.Dedup.releaseCaches()
     assert(batch == Set((1L, 2L)))
   }
 

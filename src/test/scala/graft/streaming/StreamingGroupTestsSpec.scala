@@ -53,7 +53,6 @@ class StreamingGroupTestsSpec extends SparkSpec {
           rows(Evaluation.anovaF(df, col("v"), col("g"))),
           s"anova diverged after ${prefix.size} rows")
         val kwBatch = rows(Evaluation.kruskalWallis(df, col("v"), col("g")))
-        Evaluation.releaseCaches()
         assert(rows(Evaluation.finishKruskalWallis(
           spark.table(nameK).localCheckpoint())) == kwBatch,
           s"kruskal–wallis diverged after ${prefix.size} rows")

@@ -39,7 +39,6 @@ class StreamingLinkageSpec extends SparkSpec {
   private def collectPairs(df: DataFrame): Seq[(Long, Long, Long, String)] = {
     val materialized = df.orderBy("left_id", "right_id").cache()
     materialized.count()
-    FuzzyLinkage.releaseCaches()
     val rows = materialized.collect().toSeq
       .map(r => (r.getAs[Long]("left_id"), r.getAs[Long]("right_id"),
         r.getAs[Long]("dist"), r.getAs[String]("route")))
@@ -53,7 +52,6 @@ class StreamingLinkageSpec extends SparkSpec {
       "doc_id", "title", maxDist = 1, q = 3).orderBy("left_id", "right_id")
     val materialized = out.cache()
     materialized.count()
-    FuzzyLinkage.releaseCaches()
     val rows = materialized.collect().toSeq
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     materialized.unpersist(blocking = false)

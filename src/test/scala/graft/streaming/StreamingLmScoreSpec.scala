@@ -50,7 +50,6 @@ class StreamingLmScoreSpec extends SparkSpec {
         (12L, "solo")).toDF("doc_id", "text"),
       "text", "doc_id", model)
       .collect().map(r => r.getLong(0) -> ((r.getDouble(1), r.getLong(2)))).toMap
-    NgramLm.releaseCaches()
 
     assert(collected.toMap == batchScores, s"$collected vs $batchScores")
     assert(collected.contains(10L) && collected.contains(11L))

@@ -63,7 +63,6 @@ class StreamingSeasonalSpec extends SparkSpec {
       val batchHealth = Seasonal.seriesHealthReport(
         prefix.toDF(), col("series"), col("ts"), k = 3, h = 3, season = 7)
         .collect().map(_.toString).sorted.toSeq
-      Seasonal.releaseCaches()
       val streamedHealth = Seasonal.finishHealth(spark.table(name),
         k = 3, h = 3, season = 7)
         .collect().map(_.toString).sorted.toSeq

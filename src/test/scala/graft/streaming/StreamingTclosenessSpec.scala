@@ -45,7 +45,6 @@ class StreamingTclosenessSpec extends SparkSpec {
       val batch = TextAnalysis.tClosenessAudit(prefix.toDF(),
         Seq("grp" -> col("grp")), col("v"), tPpm = 250000)
         .collect().map(_.toString).sorted.toSeq
-      TextAnalysis.releaseCaches()
       val streamed = TextAnalysis.finishTcloseness(spark.table(name),
         Seq("grp"), tPpm = 250000)
         .collect().map(_.toString).sorted.toSeq

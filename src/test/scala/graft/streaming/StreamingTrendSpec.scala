@@ -70,7 +70,6 @@ class StreamingTrendSpec extends SparkSpec {
           "cross-correlation diverged")
         val friedmanBatch =
           rows(Seasonal.friedmanTest(batchDf, col("series"), col("ts")))
-        Seasonal.releaseCaches()
         assert(rows(Seasonal.finishFriedman(state)) == friedmanBatch,
           "friedman diverged")
         assert(rows(Seasonal.finishSeasonalStrength(state)) ==
@@ -81,7 +80,6 @@ class StreamingTrendSpec extends SparkSpec {
           "runs test diverged")
         val lbBatch = rows(Seasonal.ljungBox(
           batchDf, col("series"), col("ts"), maxLag = 5))
-        Seasonal.releaseCaches()
         assert(rows(Seasonal.finishLjungBox(state, maxLag = 5)) == lbBatch,
           "ljung–box diverged")
       }
