@@ -199,6 +199,7 @@ object FormatDetector {
     * Returns, per column, every candidate with its match rate over
     * non-blank values (rate 0 for empty columns). */
   def matchRates(df: DataFrame): Map[String, Map[String, Double]] = {
+    graft.functions.GraftFunctions.register(df.sparkSession) // date_fr calls smart_to_timestamp
     val cols = df.columns.toSeq
     if (cols.isEmpty) return Map.empty
     val aggs: Seq[Column] = cols.flatMap { name =>

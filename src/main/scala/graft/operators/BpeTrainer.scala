@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** BPE merge learning — tokenizer TRAINING over a distributed corpus (the
@@ -66,81 +66,78 @@ object BpeTrainer {
         return localMerges(head.toMap, numMerges)
     }
 
-    // corpus → (word, count) vocabulary, words as code-point symbol sequences
-    var vocab: Dataset[VocabWord] = wordCounts
-      .map { case (w, c) => VocabWord(codePointSymbols(w), c) }
-      .persist()
-    vocab.count()
+    // every round's frames live in this Scope, so a failing round releases
+    // them too
+    Scope {
+      // corpus → (word, count) vocabulary, words as code-point symbol sequences
+      var vocab: DataFrame = Scope.persist(wordCounts
+        .map { case (w, c) => VocabWord(codePointSymbols(w), c) }.toDF())
+      vocab.count()
 
-    // Pair counts are maintained INCREMENTALLY: built once from the full
-    // vocabulary, then per round only the words containing the merged pair
-    // contribute a delta (their old adjacent pairs negative, their rewritten
-    // pairs positive). A 32k-merge budget therefore never recounts the full
-    // vocabulary — each round's aggregation touches only the affected words,
-    // and the pair-table update is one keyed outer join against a
-    // vocabulary-pairs-sized table. The vocabulary rewrite stays a single
-    // narrow map that only transforms matching words (the adjacency check
-    // gates the rewrite row-by-row).
-    var pairCounts: DataFrame = vocab
-      .flatMap(v => v.syms.iterator.zip(v.syms.iterator.drop(1))
-        .map { case (x, y) => (x, y, v.cnt) })
-      .toDF("a", "b", "d")
-      .groupBy("a", "b").agg(sum("d").as("cnt"))
-      .persist()
-    pairCounts.count()
+      // Pair counts are maintained INCREMENTALLY: built once from the full
+      // vocabulary, then per round only the words containing the merged pair
+      // contribute a delta (their old adjacent pairs negative, their rewritten
+      // pairs positive). A 32k-merge budget therefore never recounts the full
+      // vocabulary — each round's aggregation touches only the affected words,
+      // and the pair-table update is one keyed outer join against a
+      // vocabulary-pairs-sized table. The vocabulary rewrite stays a single
+      // narrow map that only transforms matching words (the adjacency check
+      // gates the rewrite row-by-row).
+      var pairCounts: DataFrame = Scope.persist(vocab.as[VocabWord]
+        .flatMap(v => v.syms.iterator.zip(v.syms.iterator.drop(1))
+          .map { case (x, y) => (x, y, v.cnt) })
+        .toDF("a", "b", "d")
+        .groupBy("a", "b").agg(sum("d").as("cnt")))
+      pairCounts.count()
 
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    var round = 0
-    var exhausted = false
-    while (round < numMerges && !exhausted) {
-      val top = pairCounts.orderBy(desc("cnt"), asc("a"), asc("b")).take(1)
-      if (top.isEmpty) exhausted = true
-      else {
-        val a = top.head.getString(0)
-        val b = top.head.getString(1)
-        merges += ((a, b))
-        // re-root both iteratives each round (createDataFrame collapses the
-        // logical plan to a constant-size LogicalRDD — same pattern and
-        // rationale as Dedup.duplicateClusters) so plan analysis stays
-        // round-sized across thousands of merges
-        val vocabDf = vocab.toDF()
-        val vSnap = spark.createDataFrame(vocabDf.rdd, vocabDf.schema).as[VocabWord]
-        val pSnap = spark.createDataFrame(pairCounts.rdd, pairCounts.schema)
+      val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+      var round = 0
+      var exhausted = false
+      while (round < numMerges && !exhausted) {
+        val top = pairCounts.orderBy(desc("cnt"), asc("a"), asc("b")).take(1)
+        if (top.isEmpty) exhausted = true
+        else {
+          val a = top.head.getString(0)
+          val b = top.head.getString(1)
+          merges += ((a, b))
+          // re-root both iteratives each round (createDataFrame collapses the
+          // logical plan to a constant-size LogicalRDD — same pattern and
+          // rationale as Dedup.duplicateClusters) so plan analysis stays
+          // round-sized across thousands of merges
+          val vSnap = spark.createDataFrame(vocab.rdd, vocab.schema).as[VocabWord]
+          val pSnap = spark.createDataFrame(pairCounts.rdd, pairCounts.schema)
 
-        val deltas = vSnap
-          .filter(v => hasAdjacentPair(v.syms, a, b))
-          .flatMap { v =>
-            val rewritten = applyMerge(v.syms, a, b)
-            v.syms.iterator.zip(v.syms.iterator.drop(1))
-              .map { case (x, y) => (x, y, -v.cnt) } ++
-              rewritten.iterator.zip(rewritten.iterator.drop(1))
-                .map { case (x, y) => (x, y, v.cnt) }
-          }
-          .toDF("a", "b", "d")
-          .groupBy("a", "b").agg(sum("d").as("d"))
+          val deltas = vSnap
+            .filter(v => hasAdjacentPair(v.syms, a, b))
+            .flatMap { v =>
+              val rewritten = applyMerge(v.syms, a, b)
+              v.syms.iterator.zip(v.syms.iterator.drop(1))
+                .map { case (x, y) => (x, y, -v.cnt) } ++
+                rewritten.iterator.zip(rewritten.iterator.drop(1))
+                  .map { case (x, y) => (x, y, v.cnt) }
+            }
+            .toDF("a", "b", "d")
+            .groupBy("a", "b").agg(sum("d").as("d"))
 
-        val nextPairs = pSnap.join(deltas, Seq("a", "b"), "full_outer")
-          .select(col("a"), col("b"),
-            (coalesce(col("cnt"), lit(0L)) + coalesce(col("d"), lit(0L))).as("cnt"))
-          .where(col("cnt") > 0)
-          .persist()
+          val nextPairs = Scope.persist(pSnap.join(deltas, Seq("a", "b"), "full_outer")
+            .select(col("a"), col("b"),
+              (coalesce(col("cnt"), lit(0L)) + coalesce(col("d"), lit(0L))).as("cnt"))
+            .where(col("cnt") > 0))
 
-        val nextVocab = vSnap.map(v =>
-          if (hasAdjacentPair(v.syms, a, b)) VocabWord(applyMerge(v.syms, a, b), v.cnt)
-          else v)
-          .persist()
+          val nextVocab = Scope.persist(vSnap.map(v =>
+            if (hasAdjacentPair(v.syms, a, b)) VocabWord(applyMerge(v.syms, a, b), v.cnt)
+            else v).toDF())
 
-        nextPairs.count(); nextVocab.count() // materialize, then drop the previous round
-        pairCounts.unpersist(blocking = false)
-        vocab.unpersist(blocking = false)
-        pairCounts = nextPairs
-        vocab = nextVocab
+          nextPairs.count(); nextVocab.count() // materialize, then drop the previous round
+          Scope.release(pairCounts)
+          Scope.release(vocab)
+          pairCounts = nextPairs
+          vocab = nextVocab
+        }
+        round += 1
       }
-      round += 1
+      merges.toSeq
     }
-    vocab.unpersist(blocking = false)
-    pairCounts.unpersist(blocking = false)
-    merges.toSeq
   }
 
   /** Initial symbols = Unicode CODE POINTS, not UTF-16 chars. A char-level

@@ -932,25 +932,28 @@ object Similarity {
         typedlit(selected.head._2)))
       .where(col("vec_id") =!= selected.head._1)
     var prev: Option[DataFrame] = None
-    for (_ <- 1 until k) {
-      // capture the round's plan BEFORE persist: once this frame is
-      // cached, its own executedPlan re-resolves to an InMemoryTableScan
-      // of itself and the spec could no longer see the single new arm
-      if (capturePlans) lastRoundPlans += frame.queryExecution.executedPlan.toString()
-      val cur = frame.persist()
-      val next = cur.orderBy(desc("__d"), col("vec_id")).limit(1).collect()
-      prev.foreach(_.unpersist())
-      prev = Some(cur)
-      if (next.nonEmpty) {
-        val id = next.head.getLong(0)
-        val v = next.head.getSeq[Number](1).map(_.doubleValue())
-        selected += ((id, v, next.head.getDouble(2)))
-        frame = cur.where(col("vec_id") =!= id)
-          .withColumn("__d",
-            least(col("__d"), call_function("graft_l2sq", col("__v"), typedlit(v))))
+    // the last round's frame is released when this Scope closes, a failing
+    // round's too
+    Scope {
+      for (_ <- 1 until k) {
+        // capture the round's plan BEFORE persist: once this frame is
+        // cached, its own executedPlan re-resolves to an InMemoryTableScan
+        // of itself and the spec could no longer see the single new arm
+        if (capturePlans) lastRoundPlans += frame.queryExecution.executedPlan.toString()
+        val cur = Scope.persist(frame)
+        val next = cur.orderBy(desc("__d"), col("vec_id")).limit(1).collect()
+        prev.foreach(Scope.release)
+        prev = Some(cur)
+        if (next.nonEmpty) {
+          val id = next.head.getLong(0)
+          val v = next.head.getSeq[Number](1).map(_.doubleValue())
+          selected += ((id, v, next.head.getDouble(2)))
+          frame = cur.where(col("vec_id") =!= id)
+            .withColumn("__d",
+              least(col("__d"), call_function("graft_l2sq", col("__v"), typedlit(v))))
+        }
       }
     }
-    prev.foreach(_.unpersist())
     selected.zipWithIndex
       .map { case ((id, _, d), i) => (i + 1L, id, d) }
       .toSeq.toDF("rank", "vec_id", "dist_sq")
@@ -1007,23 +1010,26 @@ object Similarity {
     val selected = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
     var prev: Option[DataFrame] = None
     var done = false
-    for (_ <- 0 until k if !done) {
-      val cur = frame.persist()
-      val pick = cur.withColumn("__s", score)
-        .orderBy(desc("__s"), col("vec_id")).limit(1)
-        .select(col("vec_id"), col("__v"), col("__s")).collect()
-      prev.foreach(_.unpersist())
-      prev = Some(cur)
-      if (pick.isEmpty) done = true
-      else {
-        val id = pick.head.getLong(0)
-        val v = pick.head.getSeq[Number](1).map(_.doubleValue())
-        selected += ((id, pick.head.getDouble(2)))
-        frame = cur.where(col("vec_id") =!= id)
-          .withColumn("__m", greatest(col("__m"), cosTo(v)))
+    // the last round's frame is released when this Scope closes, a failing
+    // round's too
+    Scope {
+      for (_ <- 0 until k if !done) {
+        val cur = Scope.persist(frame)
+        val pick = cur.withColumn("__s", score)
+          .orderBy(desc("__s"), col("vec_id")).limit(1)
+          .select(col("vec_id"), col("__v"), col("__s")).collect()
+        prev.foreach(Scope.release)
+        prev = Some(cur)
+        if (pick.isEmpty) done = true
+        else {
+          val id = pick.head.getLong(0)
+          val v = pick.head.getSeq[Number](1).map(_.doubleValue())
+          selected += ((id, pick.head.getDouble(2)))
+          frame = cur.where(col("vec_id") =!= id)
+            .withColumn("__m", greatest(col("__m"), cosTo(v)))
+        }
       }
     }
-    prev.foreach(_.unpersist())
     selected.zipWithIndex
       .map { case ((id, s), i) => (i + 1L, id, s) }
       .toSeq.toDF("rank", "vec_id", "score")

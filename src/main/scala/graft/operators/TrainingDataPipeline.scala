@@ -375,22 +375,25 @@ object TrainingDataPipeline {
     val selected = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
     var prev: Option[DataFrame] = None
     var done = false
-    for (_ <- 0 until k if !done) {
-      val cur = remaining.persist()
-      val pick = cur.groupBy("id").agg(count(lit(1)).as("gain"))
-        .orderBy(desc("gain"), col("id")).limit(1).collect()
-      prev.foreach(_.unpersist())
-      prev = Some(cur)
-      if (pick.isEmpty) done = true
-      else {
-        val id = pick.head.getLong(0)
-        selected += ((id, pick.head.getLong(1)))
-        val covered = cur.where(col("id") === id).select("tok")
-        remaining = cur.where(col("id") =!= id)
-          .join(covered, Seq("tok"), "left_anti")
+    // the last round's frame is released when this Scope closes, a
+    // failing round's too
+    Scope {
+      for (_ <- 0 until k if !done) {
+        val cur = Scope.persist(remaining)
+        val pick = cur.groupBy("id").agg(count(lit(1)).as("gain"))
+          .orderBy(desc("gain"), col("id")).limit(1).collect()
+        prev.foreach(Scope.release)
+        prev = Some(cur)
+        if (pick.isEmpty) done = true
+        else {
+          val id = pick.head.getLong(0)
+          selected += ((id, pick.head.getLong(1)))
+          val covered = cur.where(col("id") === id).select("tok")
+          remaining = cur.where(col("id") =!= id)
+            .join(covered, Seq("tok"), "left_anti")
+        }
       }
     }
-    prev.foreach(_.unpersist())
     val cum = selected.scanLeft(0L)(_ + _._2).drop(1)
     selected.zip(cum).zipWithIndex
       .map { case (((id, g), c), i) => (i + 1L, id, g, c) }

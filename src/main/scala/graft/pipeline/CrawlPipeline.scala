@@ -194,8 +194,8 @@ object CrawlPipeline {
   /** E2 backoff decision per batch domain (crawl/helpers.py:66-139): one
     * windowed pass over the checks log computes request counts in the
     * backoff period and the latest check in the cool-off period; the pure
-    * Scheduling.isDomainBackoff makes the call. Partition pruning on
-    * created_date keeps this a tail scan. */
+    * Scheduling.isDomainBackoff makes the call. A created_date bound (a
+    * partition filter on the store's log) keeps this a tail scan. */
   def domainBackoffs(
       checks: Option[org.apache.spark.sql.DataFrame],
       domains: Seq[String],
@@ -206,7 +206,8 @@ object CrawlPipeline {
     val sinceBackoff = Timestamp.from(now.minusSeconds(Scheduling.BackoffPeriodSeconds))
     val sinceCool = Timestamp.from(now.minusSeconds(Scheduling.CoolOffPeriodSeconds))
     val hasHeaders = df.columns.contains("headers")
-    val recent = df
+    val coolStart = sinceCool.toInstant.atOffset(java.time.ZoneOffset.UTC).toLocalDate
+    val recent = graft.queries.ChecksQueries.nearDates(df, coolStart, None)
       .filter(col("domain").isin(domains: _*) && col("created_at") >= lit(sinceCool))
       .select(col("domain"), col("created_at"), col("id"), col("status"),
         (if (hasHeaders) col("headers").getItem("x-ratelimit-remaining")

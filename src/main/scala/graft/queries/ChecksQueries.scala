@@ -1,6 +1,7 @@
 package graft.queries
 
-import java.sql.Timestamp
+import java.sql.{Date, Timestamp}
+import java.time.LocalDate
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -29,14 +30,30 @@ object ChecksQueries {
     checks.filter(where).orderBy(desc("created_at"))
 
   /** D3 — GET /api/checks/aggregate (db/check.py:86-98): dynamic group-by
-    * column, one day's checks, top-20 by count. */
-  def aggregateByColumn(checks: DataFrame, groupCol: String, day: java.sql.Date): DataFrame =
-    checks
+    * column, one day's checks, top-20 by count. On the store's
+    * `created_date`-partitioned log the scan is pruned to the day and its
+    * neighbours (the writer's session time zone may differ from the
+    * reader's); the `created_at` equality decides which rows count. */
+  def aggregateByColumn(checks: DataFrame, groupCol: String, day: Date): DataFrame =
+    nearDates(checks, day.toLocalDate, Some(day.toLocalDate))
       .filter(to_date(col("created_at")) === lit(day))
       .groupBy(col(groupCol).as("value"))
       .agg(count(lit(1)).as("count"))
       .orderBy(desc("count"), asc("value"))
       .limit(20)
+
+  /** `checks` cut to the `created_date` partitions within a day of
+    * [from, to] (open-ended without `to`) — a partition filter, so the scan
+    * lists only those directories. A day of slack on each side covers a
+    * writer whose session time zone put a row's `created_date` on the
+    * neighbouring day; callers still filter on `created_at`. A frame
+    * without the column is returned as is. */
+  private[graft] def nearDates(checks: DataFrame, from: LocalDate, to: Option[LocalDate]): DataFrame =
+    if (!checks.columns.contains("created_date")) checks
+    else {
+      val lower = col("created_date") >= lit(Date.valueOf(from.minusDays(1)))
+      checks.filter(to.fold(lower)(d => lower && col("created_date") <= lit(Date.valueOf(d.plusDays(1)))))
+    }
 
   /** D4 — GET /api/status/crawler (routes/status.py:10-71): pending/fresh
     * split + per-status counts, one conditional-agg pass each. */

@@ -1,12 +1,21 @@
 package graft.store
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.attribute.BasicFileAttributes
+import java.util.Locale
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, StructType}
 
 /** Parquet-backed metadata store (SURVEY §1.1, §7.5): catalog, checks,
   * tables_index, resources_exceptions as keyed/append-only DataFrames.
+  * Local filesystem only.
   *
   * Write semantics (no Delta offline):
   *   - catalog (keyed by resource_id): upsert = full-outer merge rewrite.
@@ -18,6 +27,23 @@ import org.apache.spark.sql.functions._
   *   - writes go through a temp dir + atomic-ish swap so a failed job never
   *     leaves a half-written store (single-writer contract, like the
   *     reference's transaction-per-batch).
+  *
+  * Reads run no Spark job. Each table keeps its schema in a record file,
+  * `_schema.json`, inside its directory (Spark's listing skips `_` names),
+  * and `load` lists the table's files itself on the driver — the way
+  * Delta Lake keeps a table's schema and file list in the table, so readers
+  * infer neither from the data. Without the record every load ran a
+  * `mergeSchema` footer-merge job, and a table of more than 32 partition
+  * directories a parallel listing job too. `save` writes the record with
+  * the data in the staged directory; `append` widens it to the union of
+  * the old record and the frame's schema BEFORE it writes the data, so a
+  * crash between the two leaves a superset whose extra columns read as
+  * null. The union is `mergeSchema`'s (new columns join, a changed type
+  * fails), not a fixed per-table schema: the logs evolve forward, and a
+  * caller may save any subset of a table's columns. A table without a
+  * record (written before the record existed, or by a writer that bypasses
+  * the store, like CheckStream's `checks_stream`) is still read with
+  * `mergeSchema`, and gets its record at its next `append`.
   */
 final class MetaStore(spark: SparkSession, root: String) {
 
@@ -30,11 +56,14 @@ final class MetaStore(spark: SparkSession, root: String) {
   def exists(name: String): Boolean = Files.exists(Paths.get(path(name)))
 
   def load(name: String): Option[DataFrame] =
-    // mergeSchema: the append-only logs evolve forward (new check columns
-    // land over time); without it the read schema is whichever footer wins
-    // and newer columns silently vanish
-    if (exists(name)) Some(spark.read.option("mergeSchema", "true").parquet(path(name)))
-    else None
+    if (!exists(name)) None
+    else Some(schemaRecord(name) match {
+      case Some(schema) => scan(name, schema)
+      // mergeSchema: without a record the union of the footers is the only
+      // complete schema; the read schema would otherwise be whichever
+      // footer wins and newer columns would silently vanish
+      case None => spark.read.option("mergeSchema", "true").parquet(path(name))
+    })
 
   /** Overwrite via staging dir: read-modify-write on the same parquet path
     * would fail (Spark cannot overwrite its own input), so land in _staged
@@ -43,13 +72,108 @@ final class MetaStore(spark: SparkSession, root: String) {
     val target = Paths.get(path(name))
     val staged = Paths.get(path(s"_staged_$name"))
     df.write.mode(SaveMode.Overwrite).parquet(staged.toString)
+    writeRecord(staged, nullable(df.schema))
     if (Files.exists(target)) deleteRecursively(target)
     Files.move(staged, target)
   }
 
   def append(name: String, df: DataFrame, partitionBy: Seq[String] = Nil): Unit = {
+    val before = schemaRecord(name).orElse(load(name).map(_.schema))
+    val widened = before.fold(nullable(df.schema))(union(name, _, nullable(df.schema)))
+    if (!before.contains(widened)) writeRecord(Paths.get(path(name)), widened)
     val w = df.write.mode(SaveMode.Append)
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path(name))
+  }
+
+  private val RecordName = "_schema.json"
+
+  // what Spark writes and reads back: every column and element nullable
+  private def nullable(s: StructType): StructType = {
+    def go(t: DataType): DataType = t match {
+      case st: StructType => nullable(st)
+      case a: ArrayType => ArrayType(go(a.elementType), containsNull = true)
+      case m: MapType => MapType(go(m.keyType), go(m.valueType), valueContainsNull = true)
+      case o => o
+    }
+    StructType(s.map(f => f.copy(dataType = go(f.dataType), nullable = true)))
+  }
+
+  /** `mergeSchema`'s union: a new column joins at the end, a struct column
+    * merges field by field, and any other change of a column's type fails —
+    * here, before anything is written, instead of at the next read. */
+  private def union(table: String, old: StructType, add: StructType): StructType = {
+    val caseSensitive = spark.conf.get("spark.sql.caseSensitive").toBoolean
+    def key(f: StructField) = if (caseSensitive) f.name else f.name.toLowerCase(Locale.ROOT)
+    def merge(x: StructType, y: StructType): StructType = {
+      val ys = y.map(f => key(f) -> f).toMap
+      val xs = x.map(key).toSet
+      StructType(x.map(f => ys.get(key(f)).fold(f)(g => f.copy(dataType = (f.dataType, g.dataType) match {
+        case (s: StructType, t: StructType) => merge(s, t)
+        case (s, t) if s == t => s
+        case (s, t) => throw new IllegalArgumentException(
+          s"$table.${f.name} is ${s.simpleString} in the table, ${t.simpleString} in the new rows")
+      }))) ++ y.filterNot(g => xs(key(g))))
+    }
+    merge(old, add)
+  }
+
+  private def schemaRecord(name: String): Option[StructType] = {
+    val f = Paths.get(path(name), RecordName)
+    if (!Files.exists(f)) None
+    else Some(DataType.fromJson(Files.readString(f)).asInstanceOf[StructType])
+  }
+
+  // written to a sibling and renamed, so a reader never sees half a record
+  private def writeRecord(dir: java.nio.file.Path, schema: StructType): Unit = {
+    Files.createDirectories(dir)
+    val tmp = dir.resolve(s"$RecordName.tmp")
+    Files.writeString(tmp, schema.json)
+    Files.move(tmp, dir.resolve(RecordName),
+      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+  }
+
+  /** The table as a relation over the files listed here, typed by its
+    * record: the file index finds its root already listed in the status
+    * cache, and partition values are typed by the record's columns. */
+  private def scan(name: String, schema: StructType): DataFrame = {
+    // same form as the files' parents: a trailing `/` (from toUri) would
+    // match no leaf directory and a flat table would read as empty
+    val dir = Paths.get(path(name)).toAbsolutePath.normalize
+    val rootPath = new HPath("file", null, dir.toString)
+    val files = listLeafFiles(dir, rootPath)
+    val listed = new FileStatusCache {
+      override def getLeafFiles(p: HPath): Option[Array[FileStatus]] =
+        if (p == rootPath) Some(files) else None
+      override def putLeafFiles(p: HPath, leafFiles: Array[FileStatus]): Unit = ()
+      override def invalidateAll(): Unit = ()
+    }
+    val index = new InMemoryFileIndex(spark, Seq(rootPath), Map.empty, Some(schema), listed)
+    val partitionCols = index.partitionSchema.fieldNames.toSet
+    val dataSchema = StructType(schema.filterNot(f => partitionCols(f.name)))
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema, dataSchema,
+      bucketSpec = None, new ParquetFileFormat, Map.empty)(spark))
+  }
+
+  /** Every data file under `dir`, skipping what Spark's own listing skips:
+    * `_`/`.` names (the record, `_SUCCESS`, `.crc`, `_temporary`) except
+    * partition directories. */
+  private def listLeafFiles(dir: java.nio.file.Path, at: HPath): Array[FileStatus] = {
+    val out = Array.newBuilder[FileStatus]
+    def walk(d: java.nio.file.Path, dp: HPath): Unit = {
+      val s = Files.list(d)
+      try s.iterator().asScala.foreach { p =>
+        val n = p.getFileName.toString
+        if (!((n.startsWith("_") && !n.contains("=")) || n.startsWith("."))) {
+          val hp = new HPath(dp, n)
+          val a = Files.readAttributes(p, classOf[BasicFileAttributes])
+          if (a.isDirectory) walk(p, hp)
+          // block size: the local filesystem's default, 32 MB
+          else out += new FileStatus(a.size, false, 1, 32L << 20, a.lastModifiedTime.toMillis, hp)
+        }
+      } finally s.close()
+    }
+    walk(dir, at)
+    out.result()
   }
 
   /** Small-file compaction for an append-only log partition: every append
@@ -85,9 +209,14 @@ final class MetaStore(spark: SparkSession, root: String) {
     val nOut = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
     if (nOut >= before.size) return (before.size, before.size)
     // files inside a partition dir do not carry the partition column — a
-    // direct read+rewrite of the dir preserves the partitioned layout
+    // direct read+rewrite of the dir preserves the partitioned layout. The
+    // read takes the table's columns: a plain read would take the first
+    // footer's and drop the columns only later appends carry
+    val partitionCol = partition.takeWhile(_ != '=')
+    val reader = schemaRecord(name).fold(spark.read.option("mergeSchema", "true"))(s =>
+      spark.read.schema(StructType(s.filterNot(_.name == partitionCol))))
     val staged = Paths.get(path(s"_staged_compact_$name"))
-    spark.read.parquet(dir.toString).coalesce(nOut)
+    reader.parquet(dir.toString).coalesce(nOut)
       .write.mode(SaveMode.Overwrite).parquet(staged.toString)
     deleteRecursively(dir)
     Files.move(staged, dir)
@@ -143,7 +272,6 @@ final class MetaStore(spark: SparkSession, root: String) {
     val doomed = loadDates(name, dateCol, None,
       Some(cutoff.minusDays(1))).get
     val dropped = doomed.count()
-    import scala.jdk.CollectionConverters._
     val stream = Files.list(Paths.get(path(name)))
     try stream.iterator().asScala
       .filter(p => p.getFileName.toString.startsWith(s"$dateCol="))
@@ -238,7 +366,6 @@ final class MetaStore(spark: SparkSession, root: String) {
   }
 
   private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
     if (Files.exists(p)) {
       val stream = Files.walk(p)
       try stream.iterator().asScala.toSeq.reverseIterator

@@ -36,6 +36,15 @@ class FormatDetectorSpec extends SparkSpec {
     assert(got("siret14") == "siret", got.toString)
   }
 
+  test("detect runs on a session where graft's functions were never registered") {
+    val fresh = spark.newSession()
+    val df = fresh.createDataFrame(Seq(("12 janvier 2023", "75001"), ("3 mars 2024", "01000")))
+      .toDF("seen", "cp")
+    val got = FormatDetector.detect(df)
+    assert(got("seen") == "date_fr", got.toString)
+    assert(got("cp") == "code_postal", got.toString)
+  }
+
   test("postal / insee / departement: specificity resolves containment") {
     val df = Seq(
       ("75001", "2A004", "01"),

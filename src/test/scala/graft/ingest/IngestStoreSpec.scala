@@ -140,15 +140,17 @@ class MetaStoreSpec extends SparkSpec {
     assert(st.load("checks").get.count() == 1L)
   }
 
-  /** Three days of date-partitioned checks — the layout CrawlPipeline's
-    * append writes (partitionBy created_date). */
-  private def threeDayChecks(st: MetaStore): Unit = {
+  /** `days` days of date-partitioned checks from 2024-05-01, ten a day —
+    * the layout CrawlPipeline's append writes (partitionBy created_date). */
+  private def dailyChecks(st: MetaStore, days: Int = 3): Unit = {
     val rows = for {
-      d <- 1 to 3
+      d <- 1 to days
       i <- 1 to 10
-    } yield (d * 100L + i, s"r$i",
-      java.sql.Timestamp.valueOf(f"2024-05-0$d 08:00:00"),
-      java.sql.Date.valueOf(f"2024-05-0$d"))
+    } yield {
+      val day = java.time.LocalDate.parse("2024-05-01").plusDays(d - 1L)
+      (d * 100L + i, s"r$i", java.sql.Timestamp.valueOf(day.atTime(8, 0)),
+        java.sql.Date.valueOf(day))
+    }
     st.append("checks",
       rows.toDF("id", "resource_id", "created_at", "created_date"),
       partitionBy = Seq("created_date"))
@@ -162,7 +164,7 @@ class MetaStoreSpec extends SparkSpec {
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     val st = store
-    threeDayChecks(st)
+    dailyChecks(st)
     val day = java.time.LocalDate.parse("2024-05-02")
     val df = st.loadDates("checks", "created_date", Some(day), Some(day)).get
     assert(df.count() == 10)
@@ -185,7 +187,7 @@ class MetaStoreSpec extends SparkSpec {
 
   test("partition-drop retention removes whole date directories without a rewrite") {
     val st = store
-    threeDayChecks(st)
+    dailyChecks(st)
     val dropped = st.dropDatePartitionsBefore("checks", "created_date",
       java.time.LocalDate.parse("2024-05-03"))
     assert(dropped == 20L, s"dropped $dropped")
@@ -197,13 +199,18 @@ class MetaStoreSpec extends SparkSpec {
 
   test("partition compaction: many tiny append files collapse to one, rows intact") {
     val st = store
-    // 8 separate appends to the same date → ≥ 8 tiny files in one partition
+    // 8 separate appends to the same date → ≥ 8 tiny files in one partition;
+    // the first and the last each bring a column of their own, so no one
+    // file's footer has every column
     (1 to 8).foreach { b =>
       val rows = (1 to 5).map(i => (b * 100L + i, s"r$i",
         java.sql.Timestamp.valueOf("2024-05-01 08:00:00"),
         java.sql.Date.valueOf("2024-05-01")))
+        .toDF("id", "resource_id", "created_at", "created_date")
       st.append("checks",
-        rows.toDF("id", "resource_id", "created_at", "created_date"),
+        if (b == 1) rows.withColumn("w1", lit("one"))
+        else if (b == 8) rows.withColumn("w8", lit("eight"))
+        else rows,
         partitionBy = Seq("created_date"))
     }
     val partition = st.partitionDirs("checks").head
@@ -216,6 +223,77 @@ class MetaStoreSpec extends SparkSpec {
     assert(afterRows.toSeq === beforeRows.toSeq)
     // idempotent: a second pass is a no-op
     assert(st.compactPartition("checks", partition) === ((1, 1)))
+  }
+
+  test("a flat and a 40-partition table load without a Spark job, as a mergeSchema read") {
+    val st = store
+    st.save("flat", Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
+    val days = (0 until 40).map(d =>
+      java.sql.Date.valueOf(java.time.LocalDate.parse("2024-01-01").plusDays(d)))
+    st.append("log", days.zipWithIndex.map { case (d, i) => (i.toLong, s"r$i", d) }
+      .toDF("id", "resource_id", "created_date"), partitionBy = Seq("created_date"))
+    st.append("log", Seq((100L, "r100", "late", days(3)))
+      .toDF("id", "resource_id", "note", "created_date"), partitionBy = Seq("created_date"))
+    // above spark.sql.sources.parallelPartitionDiscovery.threshold (32),
+    // where Spark's own listing runs a job
+    assert(st.partitionDirs("log").size == 40)
+    for (t <- Seq("flat", "log")) {
+      val (df, jobs) = graft.SparkProbe.jobsDuring(spark)(st.load(t).get)
+      assert(jobs == 0, s"$t: $jobs Spark jobs before the first action")
+      val merged = spark.read.option("mergeSchema", "true").parquet(st.tablePath(t))
+      assert(df.schema == merged.schema, t)
+      def rows(d: org.apache.spark.sql.DataFrame) = d.collect().map(_.toString).sorted.toSeq
+      assert(rows(df) == rows(merged), t)
+    }
+    // partition pruning still applies to the listed table
+    val day = st.load("log").get.filter(col("created_date") === lit(days(3)))
+    assert(day.count() == 2)
+    val scan = graft.SparkProbe.fileScans(day.queryExecution.executedPlan).head
+    assert(scan.selectedPartitions.partitionCount == 1)
+  }
+
+  test("a table directory without a schema record loads with the union of its columns") {
+    val st = store
+    val dir = st.tablePath("legacy")
+    Seq((1L, "a")).toDF("id", "v").write.parquet(dir)
+    Seq((2L, "b", "extra")).toDF("id", "v", "w").write.mode("append").parquet(dir)
+    val record = java.nio.file.Paths.get(dir, "_schema.json")
+    assert(!Files.exists(record))
+    assert(st.load("legacy").get.columns.toSet == Set("id", "v", "w"))
+    // the next append records the union, the new column included
+    st.append("legacy", Seq((3L, "c", 1.5)).toDF("id", "v", "x"))
+    assert(Files.exists(record))
+    val df = st.load("legacy").get
+    assert(df.columns.toSeq == Seq("id", "v", "w", "x"))
+    assert(df.count() == 3)
+  }
+
+  test("an append whose column type conflicts with the table fails and leaves the record") {
+    val st = store
+    st.append("log", Seq((1L, "a")).toDF("id", "v"))
+    val record = java.nio.file.Paths.get(st.tablePath("log"), "_schema.json")
+    val before = Files.readString(record)
+    val e = intercept[IllegalArgumentException](
+      st.append("log", Seq(("one", "b", 2)).toDF("id", "v", "n")))
+    assert(e.getMessage.contains("log.id"), e.getMessage)
+    assert(Files.readString(record) == before)
+    assert(st.load("log").get.collect().map(_.getLong(0)).toSeq == Seq(1L))
+  }
+
+  test("GET /api/checks/aggregate over the store scans only the day's created_date partitions") {
+    val st = store
+    dailyChecks(st, days = 10)
+    val api = new graft.queries.GraftApi(spark, st)
+    val day = java.sql.Date.valueOf("2024-05-05")
+    val (rows, plans) = graft.SparkProbe.plansDuring(spark)(
+      api.checksAggregate("resource_id", day).collect())
+    assert(rows.map(r => (r.getString(0), r.getLong(1))).toSeq ==
+      (1 to 10).map(i => (s"r$i", 1L)).sortBy(_._1))
+    val scans = plans.flatMap(graft.SparkProbe.fileScans)
+    assert(scans.nonEmpty)
+    assert(scans.forall(_.partitionFilters.exists(_.references.exists(_.name == "created_date"))))
+    // the day and one neighbour on each side, of ten
+    assert(scans.forall(_.selectedPartitions.partitionCount == 3))
   }
 
   test("orphaned tables via anti-join on md5(url)") {

@@ -440,4 +440,25 @@ class CrawlPipelineSpec extends SparkSpec {
     assert(WebhookPayloads.analysisDocument(None, None, None,
       Some("File too large to download")) == Map("analysis:error" -> "File too large to download"))
   }
+
+  test("E2: the backoff window reads only the created_date partitions of the cool-off period") {
+    val store = new MetaStore(spark, Files.createTempDirectory("crawl-prune").toString)
+    val now = Instant.parse("2024-06-01T12:00:00Z")
+    // one check a day on domain "d" for ten days, the latest a minute ago
+    store.append("checks", (0 until 10).map { i =>
+      (i.toLong, s"r$i", "d", java.sql.Timestamp.from(now.minusSeconds(86400L * i + 60)), 200)
+    }.toDF("id", "resource_id", "domain", "created_at", "status")
+      .withColumn("created_date", to_date(col("created_at"))),
+      partitionBy = Seq("created_date"))
+    val (got, plans) = graft.SparkProbe.plansDuring(spark)(
+      CrawlPipeline.domainBackoffs(store.load("checks"), Seq("d"), now, Set.empty))
+    val scans = plans.flatMap(graft.SparkProbe.fileScans)
+    assert(scans.nonEmpty)
+    assert(scans.forall(_.partitionFilters.exists(_.references.exists(_.name == "created_date"))))
+    // the cool-off day, the day before it (time-zone slack) and today, of ten
+    assert(scans.forall(_.selectedPartitions.partitionCount == 3))
+    // the same decision as a scan of the whole log
+    assert(got == CrawlPipeline.domainBackoffs(
+      store.load("checks").map(_.drop("created_date")), Seq("d"), now, Set.empty))
+  }
 }

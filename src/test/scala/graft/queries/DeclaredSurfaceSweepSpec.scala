@@ -186,13 +186,7 @@ class DeclaredSurfaceSweepSpec extends SparkSpec {
     * suite shares its session with the other suites of its JVM, so each
     * query is held to the state it started from: its Scope must close
     * with no entry added to either store. */
-  private def held(): (Seq[AnyRef], Set[Int]) = {
-    val cm = spark.sharedState.cacheManager
-    val f = cm.getClass.getDeclaredFields.find(_.getName.endsWith("cachedData")).get
-    f.setAccessible(true)
-    val plans = f.get(cm).asInstanceOf[scala.collection.Seq[AnyRef]].toSeq
-    (plans, spark.sparkContext.getPersistentRDDs.keySet.toSet)
-  }
+  private def held(): (Seq[AnyRef], Set[Int]) = graft.SparkProbe.held(spark)
 
   /** Rows, executed plan nodes and what the query left held after its
     * Scope closed (None when nothing). */
